@@ -256,27 +256,23 @@ object ScaleCheck {
     // the O(log diameter) claim, MEASURED: replicas add components, not
     // diameter, so the star-contraction round count must not grow with
     // the 10× corpus — compare one base-scale d6 run against one scaled
-    // run. Both probes FORCE the distributed loop (localthreshold=0):
+    // run. Both probes FORCE the distributed loop (localThreshold = 0):
     // the sub-200k-edge union-find fast path sets ccRounds to 0, which
     // would silently degrade this evidence to 0 vs 0 (r11 ADVICE). The
     // probes run OUTSIDE the timed passes so forcing the slow path
     // never perturbs the performance numbers.
     var d6RoundsBase = -1
     if (only.contains("d6_dedup_clusters") && errs.isEmpty) {
-      val old = sys.props.put("graft.cc.localthreshold", "0")
-      try {
-        def ccRoundsOf(dir: String): Int = {
-          import org.apache.spark.sql.functions.col
-          graft.operators.Dedup.connectedComponents(
-            graft.operators.Dedup.d2NgramJaccard(spark, dir)
-              .select(col("doc_a"), col("doc_b")))
-            .write.format("noop").mode("overwrite").save()
-          graft.operators.Dedup.ccRounds
-        }
-        d6RoundsScaled = ccRoundsOf(outDir)
-        d6RoundsBase = ccRoundsOf(srcDir)
-      } finally old.fold(sys.props.remove("graft.cc.localthreshold"))(
-        v => sys.props.put("graft.cc.localthreshold", v))
+      def ccRoundsOf(dir: String): Int = {
+        import org.apache.spark.sql.functions.col
+        graft.operators.Dedup.connectedComponents(
+          graft.operators.Dedup.d2NgramJaccard(spark, dir)
+            .select(col("doc_a"), col("doc_b")), localThreshold = 0)
+          .write.format("noop").mode("overwrite").save()
+        graft.operators.Dedup.ccRounds
+      }
+      d6RoundsScaled = ccRoundsOf(outDir)
+      d6RoundsBase = ccRoundsOf(srcDir)
     }
     // streaming-plane scale evidence (SPARK_GRAFT_SOAK=0 skips): the
     // join→window file-source soak over the SCALED events table — the

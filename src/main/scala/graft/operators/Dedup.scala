@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -180,18 +181,13 @@ object Dedup {
     * aggregate over the whole corpus. At 100 TB the shingle frame is
     * an ingest-time artifact: every near-dup sweep is a read-path
     * equi-join against committed parquet, never a corpus re-scan. */
-  private[graft] def shingleIndexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.shingleindex.base",
-      s"${graft.GraftSession.defaultStateDir}/shingle_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        // build-recipe salt: a cap/kernel change must NOT silently
-        // serve an index built under the old parameters. v2: the index
-        // grew the scored OVERLAPS table — pair scoring is now a build
-        // artifact, not a per-query join
-        s"shingle-v2;dfcap=$ShingleDfCap;kernel=word3gram-xxh64;" +
-          s"overlaps=cont${OverlapFloorPct}pct"))
-  }
+  private[graft] val shingleIndex = Artifact("shingle_index", "documents")(
+    // build-recipe salt: a cap/kernel change must NOT silently serve
+    // an index built under the old parameters. v2: the index grew the
+    // scored OVERLAPS table — pair scoring is now a build artifact,
+    // not a per-query join
+    s"shingle-v2;dfcap=$ShingleDfCap;kernel=word3gram-xxh64;" +
+      s"overlaps=cont${OverlapFloorPct}pct")
 
   /** The published pair table's admission floor, as an exact integer
     * predicate: containment = inter/min(n_a,n_b) ≥ 0.5 ⇔ 2·inter ≥
@@ -203,7 +199,7 @@ object Dedup {
   val OverlapFloorPct = 50
 
   private[graft] def ensureShingleIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, shingleIndexRoot(dir)) {
+    shingleIndex.ensure(s, dir) {
       // localCheckpoint: all published outputs derive from the capped
       // frame; without it the "sizes" stage would re-run the kernel
       // scan + cap aggregate (blocks are freed when the build returns)
@@ -219,8 +215,7 @@ object Dedup {
       val overlaps = overlapFrom(s, sh, sizes)
         .filter(col("inter") * (100 / OverlapFloorPct) >=
           least(col("n_a"), col("n_b")))
-      graft.sources.AtomicPublish.publish(s, shingleIndexRoot(dir),
-        Seq("shingles" -> sh, "sizes" -> sizes, "overlaps" -> overlaps))
+      Seq("shingles" -> sh, "sizes" -> sizes, "overlaps" -> overlaps)
     }
 
   /** Shared candidate frame for d2/d7: per-pair shingle intersection
@@ -313,17 +308,12 @@ object Dedup {
     * chunks, and d12's calibration all consume committed 33-column /
     * 2-column parquet instead of re-running the signature kernels
     * over the corpus per query. */
-  private[graft] def sigIndexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.sigindex.base",
-      s"${graft.GraftSession.defaultStateDir}/sig_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        // v2: the index grew the BANDS table — banding is an
-        // ingest-time artifact now (d3 reads it, d24 evaluates it,
-        // the oracle replays it), not a per-query recompute
-        s"sig-v2;minhash=k$MinhashK-xxh64;simhash=64-seed42;" +
-          s"bands=b${MinhashK / BandSize}x$BandSize-xxh64"))
-  }
+  private[graft] val sigIndex = Artifact("sig_index", "documents")(
+    // v2: the index grew the BANDS table — banding is an ingest-time
+    // artifact now (d3 reads it, d24 evaluates it, the oracle replays
+    // it), not a per-query recompute
+    s"sig-v2;minhash=k$MinhashK-xxh64;simhash=64-seed42;" +
+      s"bands=b${MinhashK / BandSize}x$BandSize-xxh64")
 
   /** LSH band keys from the wide (doc_id, mh0..mh31) signature frame:
     * MinhashK/BandSize keys per doc, the band index mixed into each
@@ -339,30 +329,21 @@ object Dedup {
   }
 
   private[graft] def ensureSigIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, sigIndexRoot(dir)) {
+    sigIndex.ensure(s, dir) {
       // one kernel scan feeds both the signature table and its bands
       val mh = minhashBuild(s, dir).localCheckpoint()
-      graft.sources.AtomicPublish.publish(s, sigIndexRoot(dir),
-        Seq("minhash" -> mh,
-          "bands" -> bandsOf(mh),
-          "simhash" -> simhashBuild(s, dir)))
+      Seq("minhash" -> mh,
+        "bands" -> bandsOf(mh),
+        "simhash" -> simhashBuild(s, dir))
     }
 
-  /** dir → version-resolved sig-index path, recorded when a consumer
-    * resolves the committed signatures — the hook that lets d12's
-    * DuckDB oracle read the SAME committed minhash parquet (the
-    * annVersionDirs/qc2 discipline; emitted only when exactly one
-    * corpus ran in this JVM). */
-  private[graft] val sigVersionDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Read one sig-index output, recording the version-resolved path
-    * for the oracle hooks. */
+  /** Read one sig-index output, recording its committed version for
+    * the d3/d4/d12/d24 oracles (d12's DuckDB oracle reads the SAME
+    * committed minhash parquet). */
   private def sigOutput(s: SparkSession, dir: String,
       name: String): DataFrame = {
     val root = ensureSigIndex(s, dir)
-    graft.sources.AtomicPublish.currentVersion(s, root)
-      .foreach(v => sigVersionDirs.put(dir, s"$root/versions/$v"))
+    sigIndex.recordVersion(s, dir)
     graft.sources.AtomicPublish.readOutput(s, root, name)
   }
 
@@ -505,7 +486,7 @@ object Dedup {
         org.apache.spark.sql.graft.SimHash64.simhash64(col("text")).as("simhash"))
 
   /** The (doc_id, simhash) frame, read from the published signature
-    * index (see [[sigIndexRoot]]). */
+    * index (see [[sigIndex]]). */
   private[operators] def simhashSignatures(s: SparkSession, dir: String): DataFrame =
     sigOutput(s, dir, "simhash")
 
@@ -655,20 +636,14 @@ object Dedup {
     * and at 100 TB anything else keyed on duplicate groups) read the
     * committed parquet instead of re-running pair generation + CC:
     * clustering the corpus is a build step, not a per-query cost. */
-  private[graft] def clusterIndexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.clusterindex.base",
-      s"${graft.GraftSession.defaultStateDir}/cluster_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        s"cluster-v1;dfcap=$ShingleDfCap;tau=0.5"))
-  }
+  private[graft] val clusterIndex =
+    Artifact("cluster_index", "documents")(s"cluster-v1;dfcap=$ShingleDfCap;tau=0.5")
 
   private[graft] def ensureClusterIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, clusterIndexRoot(dir)) {
-      graft.sources.AtomicPublish.publish(s, clusterIndexRoot(dir),
-        Seq("clusters" -> connectedComponents(
-          d2NgramJaccard(s, dir).select(col("doc_a"), col("doc_b")))
-          .select(col("id").as("doc_id"), col("label").as("cluster_id"))))
+    clusterIndex.ensure(s, dir) {
+      Seq("clusters" -> connectedComponents(
+        d2NgramJaccard(s, dir).select(col("doc_a"), col("doc_b")))
+        .select(col("id").as("doc_id"), col("label").as("cluster_id")))
     }
 
   /** d10: canonical selection — collapse each near-dup cluster (d6's
@@ -838,20 +813,6 @@ object Dedup {
       .distinct()
   }
 
-  /** Edge-count threshold below which [[connectedComponents]] runs a
-    * driver-side union-find instead of the distributed star loop
-    * (`-Dgraft.cc.localthreshold`, 0 disables). Near-dup pair graphs
-    * are DUPLICATION-MASS-sized, not corpus-sized, so at every tested
-    * scale the star loop's cost is per-round JOB LATENCY, not data
-    * (the m6 inline-CC lesson: 6.0 s of driver-loop latency on a tiny
-    * pair graph). Below the threshold the edge list is bounded
-    * metadata by definition — one collect, an O(E α(E)) union-find,
-    * identical min-label output (r11: the d13 build's two CC runs
-    * dropped from ~9 s to sub-second; equality pinned by DedupSpec).
-    * Above it, the O(log diameter) distributed loop takes over. */
-  def CcLocalThreshold: Long =
-    sys.props.getOrElse("graft.cc.localthreshold", "200000").toLong
-
   /** Driver union-find with path halving; label = min id reachable —
     * the exact contract of the distributed loop. Generic in the node
     * type (d6/m6 cluster on longs, er4 on name strings; the ordering
@@ -878,11 +839,20 @@ object Dedup {
   }
 
   /** Connected components over an undirected pair list (a, b) →
-    * (id, label) with label = min reachable id. Small edge lists take
-    * the [[localComponents]] fast path; otherwise alternating
+    * (id, label) with label = min reachable id. Edge lists of at most
+    * `localThreshold` edges (0 disables) take the driver-side
+    * [[localComponents]] union-find; otherwise alternating
     * large-star/small-star rounds, O(log diameter) of them; lineage
-    * truncated every round (see the loop comment). */
-  private[graft] def connectedComponents(pairs: DataFrame): DataFrame = {
+    * truncated every round (see the loop comment). Near-dup pair
+    * graphs are DUPLICATION-MASS-sized, not corpus-sized, so at every
+    * tested scale the star loop's cost is per-round JOB LATENCY, not
+    * data (the m6 inline-CC lesson: 6.0 s of driver-loop latency on a
+    * tiny pair graph). Below the threshold the edge list is bounded
+    * metadata by definition — one collect, an O(E α(E)) union-find,
+    * identical min-label output (r11: the d13 build's two CC runs
+    * dropped from ~9 s to sub-second; equality pinned by DedupSpec). */
+  private[graft] def connectedComponents(pairs: DataFrame,
+      localThreshold: Long = 200000): DataFrame = {
     val cols = pairs.columns
     val a = col(cols(0))
     val b = col(cols(1))
@@ -904,7 +874,7 @@ object Dedup {
       (r.getLong(0), if (r.isNullAt(1)) BigDecimal(0) else BigDecimal(r.getDecimal(1)))
     }
     var fp = fingerprint(edges)
-    if (fp._1 > 0 && fp._1 <= CcLocalThreshold) {
+    if (fp._1 > 0 && fp._1 <= localThreshold) {
       // bounded by the threshold — the collect is metadata-sized by
       // construction (the t7/indexCells discipline). Typed per node
       // column (long ids for the doc/media graphs, strings for er4's
@@ -1266,14 +1236,12 @@ object Dedup {
     * entries resolve the committed version path after the queries
     * ran, and only when exactly ONE corpus ran in this JVM
     * (ambiguity ⇒ rows-only, never a wrong-corpus oracle). */
-  def oracles: Map[String, String] = staticOracles ++ (
-    if (sigVersionDirs.size == 1) {
-      val ver = sigVersionDirs.values.iterator.next()
-      Map("d12_sketch_calibration" -> d12Oracle(ver),
-        "d24_lsh_pair_eval" -> d24Oracle(ver),
-        "d3_minhash_lsh" -> d3Oracle(ver),
-        "d4_simhash" -> d4Oracle(ver))
-    } else Map.empty)
+  def oracles: Map[String, String] = staticOracles ++
+    sigIndex.oracleVersion.toSeq.flatMap(ver => Seq(
+      "d12_sketch_calibration" -> d12Oracle(ver),
+      "d24_lsh_pair_eval" -> d24Oracle(ver),
+      "d3_minhash_lsh" -> d3Oracle(ver),
+      "d4_simhash" -> d4Oracle(ver)))
 
   private val staticOracles: Map[String, String] = Map(
     "d18_exact_spans" -> d18SpansOracle(),
@@ -1627,15 +1595,10 @@ object Dedup {
       .orderBy("doc_id")
   }
 
-  /** Durable exact-span index root — OWN base dir (sibling-vacuum
-    * rule); K and the gram kernel ride the recipe salt. */
-  private[graft] def spanIndexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.spanindex.base",
-      s"${graft.GraftSession.defaultStateDir}/span_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        s"span-v2;k=$ExactSpanTokens;kernel=stride1-xxh64;seg=ws-or-codepoint"))
-  }
+  /** Durable exact-span index — K and the gram kernel ride the
+    * recipe salt. */
+  private[graft] val spanIndex = Artifact("span_index", "documents")(
+    s"span-v2;k=$ExactSpanTokens;kernel=stride1-xxh64;seg=ws-or-codepoint")
 
   /** Publish the exact-span plane ONCE per corpus fingerprint: the
     * duplicated-gram occurrence table `dup` (doc_id, tidx, is_first)
@@ -1647,7 +1610,7 @@ object Dedup {
     * ingest-time work (the g2/g6/g10 argument on the passage
     * plane). */
   private[graft] def ensureSpanIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, spanIndexRoot(dir)) {
+    spanIndex.ensure(s, dir) {
       val grams = spanGramsOf(Tables.documents(s, dir)).localCheckpoint()
       val dupStats = grams.groupBy(col("gh"))
         .agg(count(lit(1)).as("n_occ"),
@@ -1657,8 +1620,7 @@ object Dedup {
         .select(col("doc_id"), col("tidx"),
           (col("doc_id") === col("first.doc_id") &&
             col("tidx") === col("first.tidx")).as("is_first"))
-      graft.sources.AtomicPublish.publish(s, spanIndexRoot(dir),
-        Seq("dup" -> dup))
+      Seq("dup" -> dup)
     }
 
   /** d18: EXACT duplicated-span dedup at arbitrary alignment — the

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -71,16 +72,11 @@ object EntityResolution {
     * here; at 100 TB any join against canonical entities) reads the
     * committed map instead of re-running block-join + levenshtein +
     * O(log d) CC rounds per query. */
-  private[graft] def erClusterRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.ercluster.base",
-      s"${graft.GraftSession.defaultStateDir}/er_cluster_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/part.parquet",
-        s"ercluster-v1;block=lasttoken;maxdist=$MaxEditDistance"))
-  }
+  private[graft] val erClusterIndex = Artifact("er_cluster_index", "part")(
+    s"ercluster-v1;block=lasttoken;maxdist=$MaxEditDistance")
 
   private[graft] def ensureErClusterIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, erClusterRoot(dir)) {
+    erClusterIndex.ensure(s, dir) {
       val names = nameCatalog(s, dir)
       val a = names.select(col("p_name").as("name_a"), col("block"),
         col("canon_key").as("canon_a"))
@@ -92,9 +88,8 @@ object EntityResolution {
           MaxEditDistance)
         .filter(levenshtein(col("name_a"), col("name_b")) <= MaxEditDistance)
         .select(col("canon_a"), col("canon_b"))
-      graft.sources.AtomicPublish.publish(s, erClusterRoot(dir),
-        Seq("clusters" -> Dedup.connectedComponents(edges)
-          .select(col("id").as("canon_key"), col("label"))))
+      Seq("clusters" -> Dedup.connectedComponents(edges)
+        .select(col("id").as("canon_key"), col("label")))
     }
 
   def er2EntityClusters(s: SparkSession, dir: String): DataFrame = {
@@ -232,15 +227,10 @@ object EntityResolution {
     withComp.join(ck, Seq("comp")).select(col("p_name"), col("cluster_key"))
   }
 
-  private[graft] def incrErRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.erincr.base",
-      s"${graft.GraftSession.defaultStateDir}/er_incr_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/part.parquet",
-        // v2: the family grew the applied-batch ledger (streaming
-        // maintenance) — salt bump forces stale-recipe rebuilds
-        s"er-incr-v2;block=lasttoken;maxdist=$MaxEditDistance;split=mod$IncrBatchMod;ledger"))
-  }
+  // v2: the family grew the applied-batch ledger (streaming
+  // maintenance) — salt bump forces stale-recipe rebuilds
+  private[graft] val incrErIndex = Artifact("er_incr_index", "part")(
+    s"er-incr-v2;block=lasttoken;maxdist=$MaxEditDistance;split=mod$IncrBatchMod;ledger")
 
   /** Version N+1 from version N's committed outputs plus only the
     * batch part rows: catalog merges (add counts, min canon), edges
@@ -321,9 +311,8 @@ object EntityResolution {
       .start()
 
   private[graft] def ensureIncrErIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, incrErRoot(dir)) {
+    incrErIndex.build(s, dir) { root =>
       val parts = Tables.part(s, dir)
-      val root = incrErRoot(dir)
       graft.sources.AtomicPublish.publish(s, root, buildErOutputs(s,
         parts.filter(col("p_partkey") % IncrBatchMod =!= 0)))
       publishErIncrement(s, root,

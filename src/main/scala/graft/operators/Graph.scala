@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -44,21 +45,12 @@ object Graph {
     * orders alone. */
   val GraphBatchMod = 4
 
-  private[graft] def coOrderRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.graphindex.base",
-      s"${graft.GraftSession.defaultStateDir}/graph_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/orders.parquet",
-        // v3 (v2 added the increment path; v3 adds the touched-keys
-        // output): the edge artifact is INCREMENTALLY
-        // MAINTAINED (built over the base order slice, then the batch
-        // slice applied through the ledger'd increment path) — the
-        // salt bump forces stale-recipe rebuilds. Two source tables
-        // feed one artifact: the second table's fingerprint rides the
-        // params salt.
-        s"co-order-v3;incr=mod$GraphBatchMod;touched;" +
-          graft.sources.DurableIndex.fingerprint(s"$dir/lineitem.parquet")))
-  }
+  // v3 (v2 added the increment path; v3 adds the touched-keys output):
+  // the edge artifact is INCREMENTALLY MAINTAINED (built over the base
+  // order slice, then the batch slice applied through the ledger'd
+  // increment path) — the salt bump forces stale-recipe rebuilds
+  private[graft] val coOrderIndex = Artifact("graph_index", "orders", "lineitem")(
+    s"co-order-v3;incr=mod$GraphBatchMod;touched;")
 
   /** Distinct (c, sk) pairs contributed by an order slice. */
   private[graft] def pairsOf(s: SparkSession, dir: String,
@@ -131,13 +123,13 @@ object Graph {
     * slice) and return its root — the post-ingest snapshot every
     * graph operator derives from. */
   private[graft] def ensureCoOrder(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, coOrderRoot(dir)) {
+    coOrderIndex.build(s, dir) { root =>
       import s.implicits._
-      graft.sources.AtomicPublish.publish(s, coOrderRoot(dir), Seq(
+      graft.sources.AtomicPublish.publish(s, root, Seq(
         "co_order" -> pairsOf(s, dir,
           col("o_orderkey") % GraphBatchMod =!= 0),
         "ledger" -> Seq.empty[Long].toDF("batch_id")))
-      publishEdgeIncrement(s, coOrderRoot(dir),
+      publishEdgeIncrement(s, root,
         pairsOf(s, dir, col("o_orderkey") % GraphBatchMod === 0))
     }
 
@@ -154,12 +146,11 @@ object Graph {
     * pass proves anti-join-append maintenance ≡ rebuild, membership
     * and order included. */
   def g8IncrementalEdges(s: SparkSession, dir: String): DataFrame = {
-    coOrderPairs(s, dir) // ensure the post-ingest snapshot
+    val root = ensureCoOrder(s, dir) // the post-ingest snapshot
     // committed-state-only read path: the increment published its own
     // touched customer keys (never re-join the fact tables per query)
-    val bc = graft.sources.AtomicPublish.readOutput(s,
-      coOrderRoot(dir), "touched")
-    graft.sources.AtomicPublish.readOutput(s, coOrderRoot(dir), "co_order")
+    val bc = graft.sources.AtomicPublish.readOutput(s, root, "touched")
+    graft.sources.AtomicPublish.readOutput(s, root, "co_order")
       .join(bc, Seq("c"), "left_semi")
       .groupBy(col("c"))
       .agg(count(lit(1)).as("degree"),
@@ -255,17 +246,10 @@ object Graph {
     ranks.withColumn("r", col("rq").cast("double") / lit(1e12))
   }
 
-  /** Durable rank-vector table (g2) — OWN base dir (the DurableIndex
-    * sibling-vacuum rule). The iteration parameters are part of the
-    * fingerprint: a knob change builds a sibling root. */
-  private[graft] def prRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.graphpr.base",
-      s"${graft.GraftSession.defaultStateDir}/graph_pr_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/orders.parquet",
-        s"pr-v1;iters=$PrIters;damping=$Damping;quant=1e-12;" +
-          graft.sources.DurableIndex.fingerprint(s"$dir/lineitem.parquet")))
-  }
+  /** Durable rank-vector table (g2). The iteration parameters are part
+    * of the fingerprint: a knob change builds a sibling root. */
+  private[graft] val prIndex = Artifact("graph_pr_index", "orders", "lineitem")(
+    s"pr-v1;iters=$PrIters;damping=$Damping;quant=1e-12;")
 
   /** g2: PageRank top-[[PrTopK]] — which suppliers (and customers)
     * sit at the center of the order flow. The rank VECTOR is a
@@ -283,9 +267,8 @@ object Graph {
     * 9dp output grain is integer arithmetic on rq — no round()
     * half-boundary hazard. */
   def g2Pagerank(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.DurableIndex.ensure(s, prRoot(dir)) {
-      graft.sources.AtomicPublish.publish(s, prRoot(dir), Seq(
-        "ranks" -> pagerank(edges(s, dir)).select(col("node"), col("rq"))))
+    val root = prIndex.ensure(s, dir) {
+      Seq("ranks" -> pagerank(edges(s, dir)).select(col("node"), col("rq")))
     }
     graft.sources.AtomicPublish.readOutput(s, root, "ranks")
       .select(col("node"),
@@ -366,16 +349,10 @@ object Graph {
 
   val BfsMaxHops = 6
 
-  /** Durable hop-distance table (g6) — OWN base dir; source rule and
-    * hop bound ride the fingerprint. */
-  private[graft] def bfsRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.graphbfs.base",
-      s"${graft.GraftSession.defaultStateDir}/graph_bfs_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/orders.parquet",
-        s"bfs-v1;maxhops=$BfsMaxHops;source=min-customer;" +
-          graft.sources.DurableIndex.fingerprint(s"$dir/lineitem.parquet")))
-  }
+  /** Durable hop-distance table (g6); source rule and hop bound ride
+    * the fingerprint. */
+  private[graft] val bfsIndex = Artifact("graph_bfs_index", "orders", "lineitem")(
+    s"bfs-v1;maxhops=$BfsMaxHops;source=min-customer;")
 
   /** g6: BFS hop distances — shortest hops from a deterministic source
     * (the minimum customer node) to every reachable node of the
@@ -393,10 +370,7 @@ object Graph {
     * fully oracle-checkable against a recursive-CTE BFS, so a hash
     * pass proves published hops ≡ re-traversal. */
   def g6BfsHops(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.sources.DurableIndex.ensure(s, bfsRoot(dir)) {
-      graft.sources.AtomicPublish.publish(s, bfsRoot(dir), Seq(
-        "hops" -> bfsFrom(s, dir)))
-    }
+    val root = bfsIndex.ensure(s, dir)(Seq("hops" -> bfsFrom(s, dir)))
     graft.sources.AtomicPublish.readOutput(s, root, "hops")
       .select(col("node"),
         when(pmod(col("node"), lit(2)) === 0, "customer")
@@ -470,17 +444,17 @@ object Graph {
       .orderBy("side", "degree")
   }
 
-  /** Hub-customer cap on g4 pair generation — a SEMANTICS knob
-    * (`-Dgraft.g4.maxdeg`, default 50), not a tuning detail: pair mass
-    * is Σ deg(c)² over kept customers, so at corpus scales where the
-    * 30× stretch's linear growth (SCALECHECK_sf3: 3.23×/3× data) is
-    * still too much, tightening the cap is THE lever — and it only
-    * sheds the hub customers whose shared-demand signal is weakest
-    * (the d2 DF-cap argument). The oracle interpolates the same value,
-    * so the gate stays exact at any setting, and GraphSpec pins what
-    * tightening does to the output: pairs only vanish, scores only
-    * shrink, the top of the ranking is stable. */
-  val LpMaxDeg: Int = sys.props.getOrElse("graft.g4.maxdeg", "50").toInt
+  /** Hub-customer cap on g4 pair generation — a SEMANTICS constant,
+    * not a tuning detail: pair mass is Σ deg(c)² over kept customers,
+    * so at corpus scales where the 30× stretch's linear growth
+    * (SCALECHECK_sf3: 3.23×/3× data) is still too much, tightening the
+    * cap is THE lever — and it only sheds the hub customers whose
+    * shared-demand signal is weakest (the d2 DF-cap argument). The
+    * oracle interpolates the same value, so the gate stays exact at
+    * any setting, and GraphSpec pins what tightening does to the
+    * output (through [[linkPredictAt]]): pairs only vanish, scores
+    * only shrink, the top of the ranking is stable. */
+  val LpMaxDeg: Int = 50
   val LpTopK = 100
 
   /** g4: link prediction over the customer–supplier bipartite graph —
@@ -515,20 +489,11 @@ object Graph {
     * and it is paid ONCE per (corpus, cap)). Stores the exact int64
     * Adamic-Adar sum so the read path rounds, like the ANN edge
     * table stores raw cosines. The cap is part of the fingerprint —
-    * changing the [[LpMaxDeg]] knob builds a sibling root, and the
-    * old one ages out through the standard vacuum. */
-  private[graft] def lpPairsRoot(dir: String, maxDeg: Int): String = {
-    // OWN base dir, not graph_index: DurableIndex's lazy sibling
-    // vacuum treats same-prefix roots under one base as stale
-    // fingerprints of the SAME index — two index kinds sharing a base
-    // would vacuum each other
-    val base = sys.props.getOrElse("graft.graphlp.base",
-      s"${graft.GraftSession.defaultStateDir}/graph_lp_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/orders.parquet",
-        s"lp-pairs-v1;maxdeg=$maxDeg;pack=int64;" +
-          graft.sources.DurableIndex.fingerprint(s"$dir/lineitem.parquet")))
-  }
+    * changing [[LpMaxDeg]] builds a sibling root, and the old one
+    * ages out through the standard vacuum. */
+  private[graft] def lpPairsIndex(maxDeg: Int) =
+    Artifact("graph_lp_index", "orders", "lineitem")(
+      s"lp-pairs-v1;maxdeg=$maxDeg;pack=int64;")
 
   /** The build-time pair aggregate (factored out so PlanAuditSpec can
     * pin the in-row explode on the BUILD plan — the query plan is a
@@ -553,9 +518,8 @@ object Graph {
 
   private[graft] def ensureLpPairs(s: SparkSession, dir: String,
       maxDeg: Int): String =
-    graft.sources.DurableIndex.ensure(s, lpPairsRoot(dir, maxDeg)) {
-      graft.sources.AtomicPublish.publish(s, lpPairsRoot(dir, maxDeg), Seq(
-        "supplier_pairs" -> lpPairsBuild(s, dir, maxDeg)))
+    lpPairsIndex(maxDeg).ensure(s, dir) {
+      Seq("supplier_pairs" -> lpPairsBuild(s, dir, maxDeg))
     }
 
   /** g4 core at an explicit hub cap — factored out so the stability
@@ -663,16 +627,9 @@ object Graph {
     * ladder oracle exact. */
   val LpaRounds = 4
 
-  /** Durable community-label table (g7) — OWN base dir (the
-    * DurableIndex sibling-vacuum rule, see [[lpPairsRoot]]). */
-  private[graft] def lpaRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.graphlpa.base",
-      s"${graft.GraftSession.defaultStateDir}/graph_lpa_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/orders.parquet",
-        s"lpa-v1;rounds=$LpaRounds;tie=maxcount-minlabel;" +
-          graft.sources.DurableIndex.fingerprint(s"$dir/lineitem.parquet")))
-  }
+  /** Durable community-label table (g7). */
+  private[graft] val lpaIndex = Artifact("graph_lpa_index", "orders", "lineitem")(
+    s"lpa-v1;rounds=$LpaRounds;tie=maxcount-minlabel;")
 
   /** Synchronous LPA on an arbitrary DIRECTED edge frame (src, dst) —
     * factored out so the spec can plant disjoint components. Labels
@@ -724,10 +681,7 @@ object Graph {
     * itself) and g11 (modularity over it), so the two read one
     * community definition. */
   private[graft] def ensureLpaIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, lpaRoot(dir)) {
-      graft.sources.AtomicPublish.publish(s, lpaRoot(dir),
-        Seq("labels" -> lpaOn(edges(s, dir))))
-    }
+    lpaIndex.ensure(s, dir)(Seq("labels" -> lpaOn(edges(s, dir))))
 
   /** g11: modularity (Newman–Girvan 2004) of g7's committed
     * communities — THE quality score for a community assignment:
@@ -919,36 +873,28 @@ object Graph {
     result
   }
 
-  /** Durable k-core membership root — OWN base dir (DurableIndex
-    * sibling-vacuum rule). The fingerprint chains to the EDGE
-    * ARTIFACT'S COMMITTED VERSION, not the fact tables: an
+  /** Durable k-core membership over the committed edge artifact at
+    * `edgeRoot`. It reads no table: the recipe chains to the EDGE
+    * ARTIFACT'S COMMITTED VERSION, not the fact tables — an
     * `applyBatch` that publishes edge version N+1 changes this root,
     * so the peel re-derives lazily at the next read and stale cores
     * are vacuumed as orphaned siblings — index maintenance driven by
     * the artifact the peel actually consumes. */
-  private[graft] def kcoreRootFor(s: SparkSession, dir: String,
-      edgeRoot: String): String = {
-    val base = sys.props.getOrElse("graft.graphkcore.base",
-      s"${graft.GraftSession.defaultStateDir}/graph_kcore_index")
+  private[graft] def kcoreIndex(s: SparkSession, edgeRoot: String): Artifact = {
     val ver = graft.sources.AtomicPublish.currentVersion(s, edgeRoot)
       .getOrElse("v0")
-    val fp = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"kcore-v1;k=$KCoreK;rounds=$KCoreRounds;edges=$edgeRoot@$ver"
-        .getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-    graft.sources.DurableIndex.root(base, dir, fp)
+    Artifact("graph_kcore_index")(
+      s"kcore-v1;k=$KCoreK;rounds=$KCoreRounds;edges=$edgeRoot@$ver")
   }
 
   /** Published k-core membership over a committed edge artifact:
     * build-once per (edge version, recipe), then a pure read. */
   private[graft] def kcoreAt(s: SparkSession, dir: String,
       edgeRoot: String): DataFrame = {
-    val root = graft.sources.DurableIndex.ensure(s,
-      kcoreRootFor(s, dir, edgeRoot)) {
+    val root = kcoreIndex(s, edgeRoot).ensure(s, dir) {
       val e = graft.sources.AtomicPublish.readOutput(s, edgeRoot, "co_order")
         .select((col("c") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-      graft.sources.AtomicPublish.publish(s, kcoreRootFor(s, dir, edgeRoot),
-        Seq("kcore" -> kcorePeel(e)))
+      Seq("kcore" -> kcorePeel(e))
     }
     graft.sources.AtomicPublish.readOutput(s, root, "kcore")
   }
@@ -958,7 +904,7 @@ object Graph {
     * pruning. Since r13 the core table is a PUBLISHED artifact (the
     * g2/g6 build/read split, the r12 verdict's ask #2): the audited
     * iterative peel in [[kcorePeel]] is the BUILD plan, paid once per
-    * (edge-artifact version, recipe) — [[kcoreRootFor]] keys the root
+    * (edge-artifact version, recipe) — [[kcoreIndex]] keys the root
     * on the committed edge version, so an ingest batch that bumps the
     * edge artifact re-derives the cores lazily — and the query is a
     * read-path projection over committed parquet. The unchanged

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,19 +72,14 @@ object Incremental {
     * convention so the full DuckDB oracle applies. */
   val BatchMod = 5
 
-  private[graft] def incrIndexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.incrindex.base",
-      s"${graft.GraftSession.defaultStateDir}/incr_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        // v4: the family grew the term plane (v2), the passage plane
-        // (v3), and the applied-batch ledger (v4) — each recipe bump
-        // forces stale-family rebuilds
-        s"incr-v6;split=mod$BatchMod;dfcap=${Dedup.ShingleDfCap};tau=0.5;" +
-          s"minhash=k${Dedup.MinhashK}-xxh64;simhash=64-seed42;kernel=word3gram-xxh64;" +
-          s"term=doc-term-tf-space;passage=w${Dedup.PassageWords}-xxh64;" +
-          s"span=k${Dedup.ExactSpanTokens}-stride1-xxh64"))
-  }
+  // v4: the family grew the term plane (v2), the passage plane (v3),
+  // and the applied-batch ledger (v4) — each recipe bump forces
+  // stale-family rebuilds
+  private[graft] val incrIndex = Artifact("incr_index", "documents")(
+    s"incr-v6;split=mod$BatchMod;dfcap=${Dedup.ShingleDfCap};tau=0.5;" +
+      s"minhash=k${Dedup.MinhashK}-xxh64;simhash=64-seed42;kernel=word3gram-xxh64;" +
+      s"term=doc-term-tf-space;passage=w${Dedup.PassageWords}-xxh64;" +
+      s"span=k${Dedup.ExactSpanTokens}-stride1-xxh64")
 
   /** All seven family outputs built FROM SCRATCH over `docs` — v1 of
     * the root, and the spec's ground truth for "incremental ≡
@@ -320,9 +316,8 @@ object Incremental {
     * read path always sees the post-ingest snapshot. */
   private[graft] def ensureIncrementalIndex(s: SparkSession,
       dir: String): String =
-    graft.sources.DurableIndex.ensure(s, incrIndexRoot(dir)) {
+    incrIndex.build(s, dir) { root =>
       val docs = Tables.documents(s, dir)
-      val root = incrIndexRoot(dir)
       graft.sources.AtomicPublish.publish(s, root,
         buildOutputs(s, docs.filter(col("doc_id") % BatchMod =!= 0)))
       publishIncrement(s, root, docs.filter(col("doc_id") % BatchMod === 0))
@@ -611,13 +606,8 @@ object Incremental {
       .select(col("doc_id"), md5(col("sh")).as("h"))
       .groupBy(col("h")).agg(min(col("doc_id")).as("fdoc"))
 
-  private[graft] def noveltyRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.noveltyindex.base",
-      s"${graft.GraftSession.defaultStateDir}/novelty_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        s"novelty-v1;split=mod$BatchMod;kernel=word3gram-md5;uncapped"))
-  }
+  private[graft] val noveltyIndex = Artifact("novelty_index", "documents")(
+    s"novelty-v1;split=mod$BatchMod;kernel=word3gram-md5;uncapped")
 
   /** Publish version N+1 of the novelty index from version N's
     * COMMITTED firsts plus only the batch text: first-occurrence is an
@@ -648,14 +638,14 @@ object Incremental {
     * covering base+batch (the [[ensureIncrementalIndex]] shape on the
     * novelty plane). */
   private[graft] def ensureNoveltyIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, noveltyRoot(dir)) {
+    noveltyIndex.build(s, dir) { root =>
       import s.implicits._
       val docs = Tables.documents(s, dir)
-      graft.sources.AtomicPublish.publish(s, noveltyRoot(dir), Seq(
+      graft.sources.AtomicPublish.publish(s, root, Seq(
         "firsts" -> noveltyFirstsOf(
           docs.filter(col("doc_id") % BatchMod =!= 0)),
         "ledger" -> Seq.empty[Long].toDF("batch_id")))
-      publishNoveltyIncrement(s, noveltyRoot(dir),
+      publishNoveltyIncrement(s, root,
         docs.filter(col("doc_id") % BatchMod === 0), batchId = 0L)
     }
 

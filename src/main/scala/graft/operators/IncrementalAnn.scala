@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,15 +69,10 @@ object IncrementalAnn {
     * hot probe target and the index degenerates toward brute force). */
   val RetrainShare = 0.8
 
-  private[graft] def incrAnnRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.annincr.base",
-      s"${graft.GraftSession.defaultStateDir}/ann_incr_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/embeddings.parquet",
-        s"annincr-v1;split=mod$BatchMod;ivf=${Similarity.IvfCells};" +
-          s"lsh=${Similarity.LshTables}x${Similarity.LshBits};" +
-          s"tight=$RetrainTightness;share=$RetrainShare"))
-  }
+  private[graft] val incrAnnIndex = Artifact("ann_incr_index", "embeddings")(
+    s"annincr-v1;split=mod$BatchMod;ivf=${Similarity.IvfCells};" +
+      s"lsh=${Similarity.LshTables}x${Similarity.LshBits};" +
+      s"tight=$RetrainTightness;share=$RetrainShare")
 
   /** Full build over `vecs` ((vec_id, v, nrm) — [[Similarity.corpusOf]]
     * shape): the spec's ground truth for "incremental ≡ rebuild", and
@@ -211,29 +207,21 @@ object IncrementalAnn {
       }
       .start()
 
-  /** Version-resolved post-ingest snapshot dir PER CORPUS DIR — the
-    * n17 oracle hook (Similarity.annVersionDirs' discipline): the
-    * probe is deterministic SQL once the snapshot is committed, so
-    * the gate replays it from the version-resolved parquet. */
-  private[graft] val incrVersionDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build v1 over the base slice, then incrementally publish v2
     * covering base+batch — both under one durable fence, so the n17
-    * probe always reads the post-ingest snapshot. */
+    * probe always reads the post-ingest snapshot. Records the n17
+    * oracle hook: the probe is deterministic SQL once the snapshot is
+    * committed, so the gate replays it from the version-resolved
+    * parquet. */
   private[graft] def ensureIncrAnnIndex(s: SparkSession, dir: String): String = {
-    val root = graft.sources.DurableIndex.ensure(s, incrAnnRoot(dir)) {
+    val root = incrAnnIndex.build(s, dir) { root =>
       val e = Tables.embeddings(s, dir)
-      graft.sources.AtomicPublish.publish(s, incrAnnRoot(dir), buildAnnOutputs(s,
+      graft.sources.AtomicPublish.publish(s, root, buildAnnOutputs(s,
         Similarity.corpusOf(e.filter(col("vec_id") % BatchMod =!= 0))))
-      publishAnnIncrement(s, incrAnnRoot(dir),
-        e.filter(col("vec_id") % BatchMod === 0))
+      publishAnnIncrement(s, root, e.filter(col("vec_id") % BatchMod === 0))
       ()
     }
-    val ver = graft.sources.AtomicPublish.currentVersion(s, root)
-      .getOrElse(throw new IllegalStateException(
-        s"incremental ann index: no committed version under $root"))
-    incrVersionDirs.put(dir, s"$root/versions/$ver")
+    incrAnnIndex.recordVersion(s, dir)
     root
   }
 
@@ -257,9 +245,6 @@ object IncrementalAnn {
     "n17_incremental_ann" -> (n17IncrementalAnn _))
 
   /** `def` + unambiguous-corpus rule — Similarity.oracles' discipline. */
-  def oracles: Map[String, String] =
-    if (incrVersionDirs.size == 1)
-      Map("n17_incremental_ann" ->
-        Similarity.ivfProbeOracle(incrVersionDirs.values.iterator.next()))
-    else Map.empty
+  def oracles: Map[String, String] = incrAnnIndex.oracleVersion
+    .map(v => "n17_incremental_ann" -> Similarity.ivfProbeOracle(v)).toMap
 }

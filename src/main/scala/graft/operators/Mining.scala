@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,25 +48,19 @@ object Mining {
     * contribution is derivable from the batch rows alone. */
   val BasketBatchMod = 4
 
-  private[graft] def basketIndexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.basketindex.base",
-      s"${graft.GraftSession.defaultStateDir}/basket_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/lineitem.parquet",
-        // v3 (v2 added the increment path; v3 adds the touched-keys
-        // output and support-sorted pair layout): INCREMENTALLY
-        // MAINTAINED, and pair supports are
-        // stored UNFILTERED — supports only GROW under ingest, so a
-        // pair below the read-time floor can cross it later, and the
-        // increment must know its base count (the d13 capped-df
-        // argument, mirrored on a min-floor: keep the row, filter at
-        // read). The salt bump forces stale-recipe rebuilds.
-        s"basket-v3;incr=mod$BasketBatchMod;minsup=read-time;touched;sort=n_xy;pack=int64"))
-  }
+  // v3 (v2 added the increment path; v3 adds the touched-keys output
+  // and support-sorted pair layout): INCREMENTALLY MAINTAINED, and
+  // pair supports are stored UNFILTERED — supports only GROW under
+  // ingest, so a pair below the read-time floor can cross it later,
+  // and the increment must know its base count (the d13 capped-df
+  // argument, mirrored on a min-floor: keep the row, filter at read).
+  // The salt bump forces stale-recipe rebuilds.
+  private[graft] val basketIndex = Artifact("basket_index", "lineitem")(
+    s"basket-v3;incr=mod$BasketBatchMod;minsup=read-time;touched;sort=n_xy;pack=int64")
 
   /** The three basket outputs from an arbitrary (l_orderkey,
     * l_partkey) DISTINCT frame — v1 of the root and the spec's ground
-    * truth. Pair supports UNFILTERED (see [[basketIndexRoot]]). */
+    * truth. Pair supports UNFILTERED (see [[basketIndex]]). */
   private[graft] def basketOutputs(s: SparkSession,
       op: DataFrame): Seq[(String, DataFrame)] = {
     import s.implicits._
@@ -161,14 +156,13 @@ object Mining {
       .start()
 
   private[graft] def ensureBasketIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, basketIndexRoot(dir)) {
+    basketIndex.build(s, dir) { root =>
       val op = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey")).distinct()
         .localCheckpoint() // pairs + item supports + total read it
-      graft.sources.AtomicPublish.publish(s, basketIndexRoot(dir),
-        basketOutputs(s,
-          op.filter(col("l_orderkey") % BasketBatchMod =!= 0)))
-      publishBasketIncrement(s, basketIndexRoot(dir),
+      graft.sources.AtomicPublish.publish(s, root, basketOutputs(s,
+        op.filter(col("l_orderkey") % BasketBatchMod =!= 0)))
+      publishBasketIncrement(s, root,
         op.filter(col("l_orderkey") % BasketBatchMod === 0))
     }
 

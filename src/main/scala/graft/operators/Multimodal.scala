@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -202,18 +203,12 @@ object Multimodal {
     }.toDF("doc_id", "embedding")
   }
 
-  private[graft] def mediaIndexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.mediaindex.base",
-      s"${graft.GraftSession.defaultStateDir}/media_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        "media-v1;codec=stub-md5"))
-  }
+  private[graft] val mediaIndex =
+    Artifact("media_index", "documents")("media-v1;codec=stub-md5")
 
   private[graft] def ensureMediaIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, mediaIndexRoot(dir)) {
-      graft.sources.AtomicPublish.publish(s, mediaIndexRoot(dir),
-        Seq("embeddings" -> mediaEmbeddingsCompute(s, dir, StubCodec)))
+    mediaIndex.ensure(s, dir) {
+      Seq("embeddings" -> mediaEmbeddingsCompute(s, dir, StubCodec))
     }
 
   /** m3 query form: SQL-reproducible digests of the embedding (three
@@ -323,26 +318,20 @@ object Multimodal {
       .readOutput(s, ensureMediaClusterIndex(s, dir, codec), "clusters")
       .orderBy("doc_id")
 
-  private[graft] def mediaClusterRoot(dir: String,
-      codec: MediaCodec): String = {
-    val base = sys.props.getOrElse("graft.mediacluster.base",
-      s"${graft.GraftSession.defaultStateDir}/media_cluster_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        // build-recipe salt: any knob that changes the pair set must
-        // force a rebuild (the r9 ADVICE stale-index rule) — including
-        // the CODEC whose embeddings the pairs derive from (r10 ADVICE:
-        // the old signature took a codec but built with the stub)
-        s"mediacluster-v1;codec=${codec.id};levels=$PhashLevels;bands=$PhashBands;cap=$PhashBucketCap;maxham=$PhashMaxHamming"))
-  }
+  // build-recipe salt: any knob that changes the pair set must force a
+  // rebuild (the r9 ADVICE stale-index rule) — including the CODEC
+  // whose embeddings the pairs derive from (r10 ADVICE: the old
+  // signature took a codec but built with the stub)
+  private[graft] def mediaClusterIndex(codec: MediaCodec) =
+    Artifact("media_cluster_index", "documents")(
+      s"mediacluster-v1;codec=${codec.id};levels=$PhashLevels;bands=$PhashBands;cap=$PhashBucketCap;maxham=$PhashMaxHamming")
 
   private[graft] def ensureMediaClusterIndex(s: SparkSession,
       dir: String, codec: MediaCodec = StubCodec): String =
-    graft.sources.DurableIndex.ensure(s, mediaClusterRoot(dir, codec)) {
-      graft.sources.AtomicPublish.publish(s, mediaClusterRoot(dir, codec),
-        Seq("clusters" -> Dedup.connectedComponents(
-          m5Impl(s, dir, codec).select(col("a"), col("b")))
-          .select(col("id").as("doc_id"), col("label").as("cluster_id"))))
+    mediaClusterIndex(codec).ensure(s, dir) {
+      Seq("clusters" -> Dedup.connectedComponents(
+        m5Impl(s, dir, codec).select(col("a"), col("b")))
+        .select(col("id").as("doc_id"), col("label").as("cluster_id")))
     }
 
   private def m5Impl(s: SparkSession, dir: String,
@@ -491,15 +480,10 @@ object Multimodal {
       "ledger" -> Seq.empty[Long].toDF("batch_id"))
   }
 
-  private[graft] def mediaIncrRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.mediaincr.base",
-      s"${graft.GraftSession.defaultStateDir}/media_incr_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        // v2: the family grew the applied-batch ledger (streaming
-        // maintenance) — salt bump forces stale-recipe rebuilds
-        s"media-incr-v2;codec=${StubCodec.id};levels=$PhashLevels;bands=$PhashBands;cap=$PhashBucketCap;maxham=$PhashMaxHamming;split=mod$MediaIncrBatchMod;ledger"))
-  }
+  // v2: the family grew the applied-batch ledger (streaming
+  // maintenance) — salt bump forces stale-recipe rebuilds
+  private[graft] val mediaIncrIndex = Artifact("media_incr_index", "documents")(
+    s"media-incr-v2;codec=${StubCodec.id};levels=$PhashLevels;bands=$PhashBands;cap=$PhashBucketCap;maxham=$PhashMaxHamming;split=mod$MediaIncrBatchMod;ledger")
 
   /** Version N+1 from version N's committed outputs plus only the
     * batch payloads: phash appends (one codec pass over the batch),
@@ -587,9 +571,8 @@ object Multimodal {
       .start()
 
   private[graft] def ensureMediaIncrIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, mediaIncrRoot(dir)) {
+    mediaIncrIndex.build(s, dir) { root =>
       val docs = Tables.documents(s, dir)
-      val root = mediaIncrRoot(dir)
       graft.sources.AtomicPublish.publish(s, root, buildMediaIncrOutputs(s,
         docs.filter(col("doc_id") % MediaIncrBatchMod =!= 0)))
       publishMediaIncrement(s, root,

@@ -337,15 +337,10 @@ object Pipeline {
     * a12/psi1 have static SQL, qc2's ECE reads the COMMITTED scores
     * artifact, and the two registry rows read the committed model
     * meta tables — so the composed report is the same UNION over the
-    * composed oracles ([[pipe4MetaDirs]] records the version-resolved
-    * meta paths; the spec additionally cross-checks every row against
-    * its source operator and pins the threshold banding). */
-  /** Version-resolved (qc model meta, bpe model meta) dirs per corpus
-    * — the pipe4 oracle hook (Similarity.annVersionDirs' discipline:
-    * keyed per dir, emitted only when unambiguous, resolved loudly). */
-  private[graft] val pipe4MetaDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
+    * composed oracles (pipe4 records both registries' committed
+    * versions through their [[graft.sources.Artifact]] oracle hooks;
+    * the spec additionally cross-checks every row against its source
+    * operator and pins the threshold banding). */
   def pipe4MonitorReport(s: SparkSession, dir: String): DataFrame = {
     val vol = Analytics.a12VolumeDrift(s, dir)
       .agg(sum(when(col("is_anomaly"), 1L).otherwise(0L))
@@ -374,7 +369,7 @@ object Pipeline {
     // committed snapshot, never recomputed here
     val qcReg = {
       Quality.ensureQcModel(s, dir) // build-once; bounded metadata
-      graft.sources.ModelRegistry.reportRow(s, Quality.qcModelRoot(dir),
+      graft.sources.ModelRegistry.reportRow(s, Quality.qcModel.root(dir),
         "qc_model_registry")
     }
     val bpeRoot = TextAnalysis.ensureBpeModel(s, dir)
@@ -382,14 +377,8 @@ object Pipeline {
       "bpe_model_registry")
     // record the version-resolved meta dirs for the oracle (fails
     // loudly if either registry has no committed version)
-    def verDir(root: String): String = {
-      val v = graft.sources.AtomicPublish.currentVersion(s, root)
-        .getOrElse(throw new IllegalStateException(
-          s"pipe4: no committed version under $root"))
-      s"$root/versions/$v"
-    }
-    pipe4MetaDirs.put(dir,
-      (verDir(Quality.qcModelRoot(dir)), verDir(bpeRoot)))
+    Quality.qcModel.recordVersion(s, dir)
+    TextAnalysis.bpeModel.recordVersion(s, dir)
     vol.unionAll(drift).unionAll(calib).unionAll(qcReg).unionAll(bpeReg)
       .orderBy("check")
   }
@@ -653,13 +642,11 @@ object Pipeline {
   /** A `def` (qc2's discipline): pipe4's entry resolves committed
     * paths after the queries ran; emitted only when ONE corpus ran
     * AND qc2's own oracle resolved (they share the scores artifact). */
-  def oracles: Map[String, String] = staticOracles ++ (
-    if (pipe4MetaDirs.size == 1 &&
-        Quality.oracles.contains("qc2_calibration")) {
-      val (qcMeta, bpeMeta) = pipe4MetaDirs.values.iterator.next()
-      Map("pipe4_monitor_report" ->
-        pipe4Oracle(qcMeta, bpeMeta, Quality.oracles("qc2_calibration")))
-    } else Map.empty)
+  def oracles: Map[String, String] = staticOracles ++ (for {
+    qcMeta <- Quality.qcModel.oracleVersion
+    bpeMeta <- TextAnalysis.bpeModel.oracleVersion
+    qc2 <- Quality.oracles.get("qc2_calibration")
+  } yield "pipe4_monitor_report" -> pipe4Oracle(qcMeta, bpeMeta, qc2))
 
   private def pipe6Oracle: String = {
     val w = TextIndex.SnippetWindow

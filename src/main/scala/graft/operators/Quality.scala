@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -379,26 +380,20 @@ object Quality {
     * than only promised. */
   val QcTrainSampleTarget = 1000
 
-  /** Durable model registry root for the trained qc weights — the
-    * index build-once pattern (DurableIndex fence + AtomicPublish
-    * version + corpus fingerprint) applied to MODEL artifacts: the
+  /** Durable model registry for the trained qc weights — the
+    * [[Artifact]] build-once pattern applied to MODEL artifacts: the
     * trainer is deterministic per corpus, so qc1/qc2/pipe4 each
     * re-training it per query was pure waste (3× the T-round
     * training cost per bench pass). Train once, publish the
     * (bias, weights) row, score everywhere — exactly how a 100 TB
     * pipeline consumes its quality classifier (training is a
     * registry write, scoring is the corpus-scale job). */
-  private[graft] def qcModelRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.qcmodel.base",
-      s"${graft.GraftSession.defaultStateDir}/qc_model")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        // v2: the registry grew the drift-refresh plane (train sample,
-        // reference score bands, meta) — salt bump forces stale-recipe
-        // rebuilds
-        s"qcmodel-v2;dim=$QcDim;iters=$QcIters;lr=$QcLr;n=$QcTrainSampleTarget;" +
-          "drift=scorepsi10"))
-  }
+  private[graft] val qcModel = Artifact("qc_model", "documents")(
+    // v2: the registry grew the drift-refresh plane (train sample,
+    // reference score bands, meta) — salt bump forces stale-recipe
+    // rebuilds
+    s"qcmodel-v2;dim=$QcDim;iters=$QcIters;lr=$QcLr;n=$QcTrainSampleTarget;" +
+      "drift=scorepsi10")
 
   /** Trained-model registry outputs from an EXPLICIT training frame:
     * the (bias, weights) row, the training sample itself (bounded —
@@ -490,14 +485,13 @@ object Quality {
     * QcDim doubles). */
   private[graft] def ensureQcModel(s: SparkSession, dir: String)
       : (Array[Double], Double) = {
-    val root = graft.sources.DurableIndex.ensure(s, qcModelRoot(dir)) {
+    val root = qcModel.ensure(s, dir) {
       val docs = Tables.documents(s, dir)
         .select(col("doc_id"), col("text"),
           when(col("lang") === "en", 1.0).otherwise(0.0).as("label"))
-      graft.sources.AtomicPublish.publish(s, qcModelRoot(dir),
-        buildQcOutputs(s, docs) :+
-          graft.sources.ModelRegistry.metaOutput(s, -1L, 0.0,
-            refreshed = false))
+      buildQcOutputs(s, docs) :+
+        graft.sources.ModelRegistry.metaOutput(s, -1L, 0.0,
+          refreshed = false)
     }
     val row = graft.sources.AtomicPublish.readOutput(s, root, "weights")
       .collect().head
@@ -598,7 +592,7 @@ object Quality {
     * 1-row reduction attached by broadcast. Since r13 this is a FULL
     * hash oracle (r12 ask #8): the scores are engine-trained but they
     * are READ from the COMMITTED artifact, and the oracle reads the
-    * SAME parquet ([[lastQcScoresPath]], resolved after the query
+    * SAME parquet ([[qcScores]]' oracle hook, resolved after the query
     * runs — Verify dumps oracle SQL last), so binning, curve, and ECE
     * arithmetic are cross-engine-checked on identical inputs;
     * per-bin mean scores fold as int64-quantized sums (the g2 rq
@@ -611,40 +605,17 @@ object Quality {
     * re-scoring the corpus per report. qc1 itself remains the live
     * apply-path demonstration (one scan against literal weights), and
     * builds this artifact with exactly that plan. */
-  private[graft] def qcScoresRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.qcscores.base",
-      s"${graft.GraftSession.defaultStateDir}/qc_scores")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        s"qcscores-v1;dim=$QcDim;iters=$QcIters;lr=$QcLr;n=$QcTrainSampleTarget"))
-  }
+  private[graft] val qcScores = Artifact("qc_scores", "documents")(
+    s"qcscores-v1;dim=$QcDim;iters=$QcIters;lr=$QcLr;n=$QcTrainSampleTarget")
 
   private[graft] def ensureQcScores(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, qcScoresRoot(dir)) {
-      graft.sources.AtomicPublish.publish(s, qcScoresRoot(dir),
-        Seq("scores" -> qc1ClassifierScore(s, dir)))
-    }
-
-  /** Version-resolved committed-scores paths PER CORPUS DIR read by
-    * [[qc2Calibration]] in this JVM — the [[oracles]] hook that lets
-    * the DuckDB gate read the SAME artifact: Verify dumps the oracle
-    * map AFTER every query ran, so the version-resolved path is known
-    * by then; in subset runs that skip qc2 the entry is simply absent
-    * (rows-only fallback, same as before r13). Keyed by corpus dir
-    * (r13 advice #3): a single last-write-wins var would silently aim
-    * the oracle at the LAST corpus touched in a multi-corpus JVM, so
-    * the builder below emits the oracle only when the target is
-    * UNAMBIGUOUS (exactly one corpus ran), and version resolution
-    * fails loudly instead of naming a never-read "v1". */
-  private[graft] val qcScoresPaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    qcScores.ensure(s, dir)(Seq("scores" -> qc1ClassifierScore(s, dir)))
 
   def qc2Calibration(s: SparkSession, dir: String): DataFrame = {
     val root = ensureQcScores(s, dir)
-    val ver = graft.sources.AtomicPublish.currentVersion(s, root)
-      .getOrElse(throw new IllegalStateException(
-        s"qc2: no committed scores version under $root"))
-    qcScoresPaths.put(dir, s"$root/versions/$ver/scores")
+    // only qc2 records the hook: its oracle (and pipe4's through it)
+    // replays the committed scores this read saw
+    qcScores.recordVersion(s, dir)
     val base = graft.sources.AtomicPublish.readOutput(s, root, "scores")
       .select(col("label").cast("double").as("label"), col("score"))
       .localCheckpoint() // cuts + curve + ECE all read the scored frame
@@ -696,8 +667,8 @@ object Quality {
        |FROM g CROSS JOIN e ORDER BY g.bucket""".stripMargin
   }
 
-  /** Bootstrap replicate budget B — the imp2 cost/accuracy knob
-    * (`-Dgraft.imp2.replicates=…` to override). Cost is linear in B
+  /** Bootstrap replicate budget B — the imp2 cost/accuracy constant.
+    * Cost is linear in B
     * (every row folds a B-wide weight vector, the aggregate carries
     * B partials); the CI's WIDTH is a property of the data (≈
     * 3.92·σ/√n, independent of B) while the Monte-Carlo error of the
@@ -705,11 +676,11 @@ object Quality {
     * doubling B halves nothing visible until endpoint noise dominates:
     * B=100 puts endpoint noise well under the 6dp output rounding for
     * this corpus and halves the suite's largest absolute bench row
-    * (37 s at sf1 under B=200); audits that need tighter tails raise
-    * the knob per-run instead of everyone paying for them. The spec
+    * (37 s at sf1 under B=200); audits that need tighter tails call
+    * [[imp2BootstrapCiB]] with a larger B instead of everyone paying
+    * for them. The spec
     * pins the 1/√B endpoint-noise scaling empirically. */
-  val BootReplicates: Int =
-    sys.props.get("graft.imp2.replicates").map(_.toInt).getOrElse(100)
+  val BootReplicates: Int = 100
   /** Poisson(1) CDF ladder: cumulative probabilities for k = 0..5
     * (k = 6 is the tail). Inverse-CDF on a deterministic hash-uniform
     * gives each (row, replicate) its resample weight. */
@@ -899,15 +870,13 @@ object Quality {
 
   /** A `def` (not val) so the qc2 entry can resolve the committed
     * scores path AFTER the queries ran — Verify's dump order
-    * guarantees it; see [[qcScoresPaths]]. With zero corpora run the
-    * entry is absent (rows-only fallback); with MORE than one the
-    * entry is also absent — no single SQL string could be right for
-    * both, and a wrong-corpus oracle would fail the gate loudly at
-    * best, pass it vacuously at worst. */
-  def oracles: Map[String, String] = staticOracles ++ (
-    if (qcScoresPaths.size == 1) {
-      val p = qcScoresPaths.values.iterator.next()
-      Map(
+    * guarantees it; see [[qcScores]]' oracle hook. With zero corpora
+    * run the entry is absent (rows-only fallback); with MORE than one
+    * the entry is also absent — no single SQL string could be right
+    * for both, and a wrong-corpus oracle would fail the gate loudly
+    * at best, pass it vacuously at worst. */
+  def oracles: Map[String, String] = staticOracles ++
+    qcScores.oracleVersion.map(v => s"$v/scores").toSeq.flatMap(p => Seq(
         "qc2_calibration" -> qc2Oracle(p),
         // qc1's oracle is the committed artifact itself (r14, the n4
         // pattern completed on the scoring plane): the live query
@@ -919,8 +888,7 @@ object Quality {
         "qc1_classifier_score" ->
           s"""SELECT doc_id, label, score, pred
              |FROM read_parquet('$p/*.parquet')
-             |ORDER BY doc_id""".stripMargin)
-    } else Map.empty)
+             |ORDER BY doc_id""".stripMargin))
 
   /** g1's full rule-set SQL as ONE reusable block (ends in a
     * relation with doc_id, stats, n_rules_failed, keep) — shared by

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -267,60 +268,22 @@ object Similarity {
     * below read ONLY index tables — PlanAuditSpec pins that their
     * plans never scan the raw embeddings parquet. */
 
-  /** Durable index root: `<base>/<corpus>-<fingerprint>`, where base
-    * defaults to the same durable state dir the catalog uses
-    * (GraftSession.defaultStateDir — the one location Bench's /tmp
-    * sweep never touches) and the fingerprint is a metadata hash of
-    * the corpus parquet (names, lengths, mtimes — no data scan; the
-    * object-store analog hashes the listing's ETags). A regenerated
-    * corpus changes the fingerprint, which forces a rebuild at a NEW
-    * root while readers mid-flight on the old corpus keep a
-    * consistent old index. `-Dgraft.ann.base=…` overrides the base
-    * (test isolation); '-' cannot appear in the sanitized corpus
-    * name, so it unambiguously separates name from fingerprint. */
-  private[graft] def annRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.ann.base",
-      s"${graft.GraftSession.defaultStateDir}/ann_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/embeddings.parquet",
-        // v3 (r14): the index grew the PQ plane — codebooks + codes
-        // are ingest artifacts now (train-once, probe-many), so n12/
-        // n15 stopped re-training/re-encoding per query AND became
-        // oracle-replayable. v2 grew neardup_edges (d5's pair scoring
-        // as a build artifact).
-        s"ann-v3;ivf=$IvfCells;lsh=${LshTables}x$LshBits;" +
-          s"pq=m${PqM}k$PqK;edges=tau${Dedup.NeardupTau}"))
-  }
+  /** The durable ANN index ([[Artifact]]: root, fingerprint, build
+    * fence and n-family oracle hook). */
+  private[graft] val annIndex = Artifact("ann_index", "embeddings")(
+    // v3 (r14): the index grew the PQ plane — codebooks + codes are
+    // ingest artifacts now (train-once, probe-many), so n12/n15
+    // stopped re-training/re-encoding per query AND became
+    // oracle-replayable. v2 grew neardup_edges (d5's pair scoring as
+    // a build artifact).
+    s"ann-v3;ivf=$IvfCells;lsh=${LshTables}x$LshBits;" +
+      s"pq=m${PqM}k$PqK;edges=tau${Dedup.NeardupTau}")
 
-  /** Version-resolved index directory PER CORPUS DIR, recorded when
-    * [[ensureAnnIndex]] resolves it — the hook that lets the DuckDB
-    * gate read the SAME committed index tables the probe queries
-    * read (qc2's read-the-committed-path discipline, r13 ask #7):
-    * Verify dumps the oracle map AFTER the queries ran, so the
-    * version is known by then. Keyed by dir; [[oracles]] emits the
-    * index-backed entries only when exactly one corpus ran (a
-    * last-write-wins var would aim the oracle at the wrong corpus in
-    * a multi-corpus JVM). */
-  private[graft] val annVersionDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Ensure the ANN index and record its committed version for the
+    * index-backed oracles (the probe queries and the DuckDB gate read
+    * the SAME committed tables, r13 ask #7). */
   private[graft] def ensureAnnIndex(s: SparkSession, dir: String): String = {
-    import graft.sources.{AtomicPublish, DurableIndex}
-    val ensured = ensureAnnIndexBuilt(s, dir)
-    val ver = AtomicPublish.currentVersion(s, ensured)
-      .getOrElse(throw new IllegalStateException(
-        s"ann index: no committed version under $ensured"))
-    annVersionDirs.put(dir, s"$ensured/versions/$ver")
-    ensured
-  }
-
-  private def ensureAnnIndexBuilt(s: SparkSession, dir: String): String = {
-    import graft.sources.{AtomicPublish, DurableIndex}
-    // Build fence + pointer re-check + lazy sibling vacuum live in
-    // DurableIndex (shared with the text inverted index); this build
-    // callback runs at most once per root across threads/processes.
-    DurableIndex.ensure(s, annRoot(dir)) {
-      val root = annRoot(dir)
+    val root = annIndex.ensure(s, dir) {
       val e = corpus(s, dir)
       val refined = ivfCentroids(e)
       import s.implicits._
@@ -345,13 +308,15 @@ object Similarity {
       }.toSeq.toDF("m", "k", "c")
       val pqCodes = assignments.select(col("vec_id"),
         pqCodesCol(books).as("codes"))
-      AtomicPublish.publish(s, root, Seq(
+      Seq(
         "centroids" -> centroids, "assignments" -> assignments, "lsh" -> lsh,
         "pq_books" -> pqBooks, "pq_codes" -> pqCodes,
         // d5's pair scoring runs ONCE here (cell-pruned equi-join,
         // unrounded cosines) — near-dup sweeps are read-path filters
-        "neardup_edges" -> Dedup.neardupEdgesRaw(s, refined, assignments)))
+        "neardup_edges" -> Dedup.neardupEdgesRaw(s, refined, assignments))
     }
+    annIndex.recordVersion(s, dir)
+    root
   }
 
   /** The committed PQ codebooks as bounded driver-side literals
@@ -795,7 +760,7 @@ object Similarity {
     * ask #7): the centroids are "engine-trained" but COMMITTED —
     * both the centroid and assignment tables live in the published
     * index version, so the oracle `read_parquet()`s the exact same
-    * doubles and replays the audit in SQL ([[annVersionDirs]], qc2's
+    * doubles and replays the audit in SQL ([[annIndex]]'s oracle hook, qc2's
     * discipline). Per-vector cosines fold as 1e-9-quantized int64
     * sums (order-free — a raw avg(double) is partial-merge-order
     * dependent); min is order-free as-is. */
@@ -1158,35 +1123,26 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** dir → version-resolved pca_model path (the sig_index/annVersionDirs
-    * hook pattern, for n9's oracle). */
-  private[graft] val pcaVersionDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Durable PCA model: train once per corpus fingerprint (one Gram
     * pass + a driver-side d×d eigensolve), publish the components as
     * parquet — (j, direction p, shift = p·μ, eigenvalue). Downstream
     * projections (and the DuckDB oracle) read the committed doubles,
     * so "engine-trained" stops meaning "engine-specific" the moment
     * the model COMMITS (the r14 conversion-wave rule). */
+  private[graft] val pcaArtifact = Artifact("pca_model", "embeddings")(s"pca-v1;k=$PcaK")
+
+  /** Ensure the PCA model and record its version for n9's oracle. */
   private[graft] def ensurePcaModel(s: SparkSession, dir: String): String = {
-    val base = sys.props.getOrElse("graft.pca.base",
-      s"${graft.GraftSession.defaultStateDir}/pca_model")
-    val root = graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/embeddings.parquet",
-        s"pca-v1;k=$PcaK"))
-    graft.sources.DurableIndex.ensure(s, root) {
+    val root = pcaArtifact.ensure(s, dir) {
       val (_, mu, comps) = pcaModel(corpus(s, dir))
       import s.implicits._
       val rows = comps.zipWithIndex.map { case ((ev, p), j) =>
         (j, p.toSeq, p.zip(mu).map { case (a, b) => a * b }.sum, ev)
       }
-      graft.sources.AtomicPublish.publish(s, root,
-        Seq("components" -> rows.toDF("j", "p", "shift", "eigenvalue")
-          .coalesce(1)))
+      Seq("components" -> rows.toDF("j", "p", "shift", "eigenvalue")
+        .coalesce(1))
     }
-    graft.sources.AtomicPublish.currentVersion(s, root)
-      .foreach(v => pcaVersionDirs.put(dir, s"$root/versions/$v"))
+    pcaArtifact.recordVersion(s, dir)
     root
   }
 
@@ -1351,22 +1307,17 @@ object Similarity {
     * every probe is deterministic SQL over the published tables, so
     * the gate replays candidate generation, probe selection, exact
     * re-ranking, and the recall join cross-engine (r13 ask #7). */
-  def oracles: Map[String, String] = staticOracles ++ (
-    if (annVersionDirs.size == 1) {
-      val ver = annVersionDirs.values.iterator.next()
-      Map(
-        "n2_ann_lsh" -> n2Oracle(ver),
-        "n3_ivf_ann" -> ivfProbeOracle(ver),
-        "n20_filtered_ann" -> n20Oracle(ver),
-        "n4_cell_audit" -> n4Oracle(ver),
-        "n6_semantic_dedup" -> n6Oracle(ver),
-        "n12_pq_topk" -> pqAdcOracle(ver, probed = false),
-        "n15_ivf_pq" -> pqAdcOracle(ver, probed = true),
-        "n13_recall_eval" -> n13Oracle(ver))
-    } else Map.empty) ++ (
-    if (pcaVersionDirs.size == 1)
-      Map("n9_pca_project" -> n9Oracle(pcaVersionDirs.values.iterator.next()))
-    else Map.empty)
+  def oracles: Map[String, String] = staticOracles ++
+    annIndex.oracleVersion.toSeq.flatMap(ver => Seq(
+      "n2_ann_lsh" -> n2Oracle(ver),
+      "n3_ivf_ann" -> ivfProbeOracle(ver),
+      "n20_filtered_ann" -> n20Oracle(ver),
+      "n4_cell_audit" -> n4Oracle(ver),
+      "n6_semantic_dedup" -> n6Oracle(ver),
+      "n12_pq_topk" -> pqAdcOracle(ver, probed = false),
+      "n15_ivf_pq" -> pqAdcOracle(ver, probed = true),
+      "n13_recall_eval" -> n13Oracle(ver))) ++
+    pcaArtifact.oracleVersion.map(v => "n9_pca_project" -> n9Oracle(v))
 
   /** DuckDB replay of n9 from the committed pca_model components:
     * per component, one list_dot_product (the kernel's left-to-right

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -352,16 +353,11 @@ object TextAnalysis {
     * query was pure waste). BpeTrainSpec still drives
     * [[trainBpeMerges]] directly to convergence against the frozen
     * vocab, so the training loop itself stays spec-covered. */
-  private[graft] def bpeModelRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.bpemodel.base",
-      s"${graft.GraftSession.defaultStateDir}/bpe_model")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        // v2: the registry grew the drift-refresh plane (training
-        // sample, reference character distribution, meta) — salt bump
-        // forces stale-recipe rebuilds
-        s"bpe-v2;merges=$BenchTrainMerges;stop=pair-twice;drift=charpsi"))
-  }
+  private[graft] val bpeModel = Artifact("bpe_model", "documents")(
+    // v2: the registry grew the drift-refresh plane (training sample,
+    // reference character distribution, meta) — salt bump forces
+    // stale-recipe rebuilds
+    s"bpe-v2;merges=$BenchTrainMerges;stop=pair-twice;drift=charpsi")
 
   /** Character-frequency profile of a (…, text) frame — the bounded
     * reference distribution tokenizer drift is measured against (a
@@ -420,11 +416,10 @@ object TextAnalysis {
   }
 
   private[graft] def ensureBpeModel(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, bpeModelRoot(dir)) {
-      graft.sources.AtomicPublish.publish(s, bpeModelRoot(dir),
-        buildBpeOutputs(s, Tables.documents(s, dir)) :+
-          graft.sources.ModelRegistry.metaOutput(s, -1L, 0.0,
-            refreshed = false))
+    bpeModel.ensure(s, dir) {
+      buildBpeOutputs(s, Tables.documents(s, dir)) :+
+        graft.sources.ModelRegistry.metaOutput(s, -1L, 0.0,
+          refreshed = false)
     }
 
   /** t12: text normalization — the first step of every dedup/prep
@@ -773,19 +768,11 @@ object TextAnalysis {
     * ingest-time artifact next to the shingle table: every lexical
     * statistic is a read-path aggregate over committed parquet, never
     * a corpus re-tokenization. */
-  private[graft] def termIndexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.termindex.base",
-      s"${graft.GraftSession.defaultStateDir}/term_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        "termindex-v1;grain=doc-term-tf;tok=space"))
-  }
+  private[graft] val termIndex =
+    Artifact("term_index", "documents")("termindex-v1;grain=doc-term-tf;tok=space")
 
   private[graft] def ensureTermIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, termIndexRoot(dir)) {
-      graft.sources.AtomicPublish.publish(s, termIndexRoot(dir),
-        Seq("termfreq" -> termFreqBuild(s, dir)))
-    }
+    termIndex.ensure(s, dir)(Seq("termfreq" -> termFreqBuild(s, dir)))
 
   /** The shared (doc_id, term, tf) frame, read from the PUBLISHED
     * term index — consumers aggregate or join immediately (their own

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.sources.Artifact
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,16 +26,11 @@ object TextIndex {
     * maintained index ≡ a from-scratch build. */
   val IncrBatchMod = 5
 
-  private[graft] def indexRoot(dir: String): String = {
-    val base = sys.props.getOrElse("graft.textindex.base",
-      s"${graft.GraftSession.defaultStateDir}/text_index")
-    graft.sources.DurableIndex.root(base, dir,
-      graft.sources.DurableIndex.fingerprint(s"$dir/documents.parquet",
-        // v4 (was v3): the index additionally carries per-doc token
-        // lengths (doclens) for BM25 ranking — the salt bump forces
-        // stale-recipe rebuilds (the r9 ADVICE stale-index trap)
-        s"textindex-v4;grain=word1-distinct+positions+doclens;incr=mod$IncrBatchMod"))
-  }
+  // v4 (was v3): the index additionally carries per-doc token lengths
+  // (doclens) for BM25 ranking — the salt bump forces stale-recipe
+  // rebuilds (the r9 ADVICE stale-index trap)
+  private[graft] val textIndex = Artifact("text_index", "documents")(
+    s"textindex-v4;grain=word1-distinct+positions+doclens;incr=mod$IncrBatchMod")
 
   /** Posting-list frame from the raw corpus: one row per (term) with
     * document frequency and the SORTED posting list. In-row distinct
@@ -154,9 +150,8 @@ object TextIndex {
     * their full-corpus oracles prove incremental ≡ rebuild on real
     * data every round. */
   private[graft] def ensureTextIndex(s: SparkSession, dir: String): String =
-    graft.sources.DurableIndex.ensure(s, indexRoot(dir)) {
+    textIndex.build(s, dir) { root =>
       val docs = Tables.documents(s, dir)
-      val root = indexRoot(dir)
       graft.sources.AtomicPublish.publish(s, root,
         buildIndexOutputs(s, docs.filter(col("doc_id") % IncrBatchMod =!= 0)))
       publishTextIncrement(s, root,

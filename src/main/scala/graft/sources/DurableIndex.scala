@@ -2,10 +2,10 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** Build-once / read-many durable index roots (shared by the ANN
-  * index and the text inverted index): a corpus-fingerprinted root
-  * under the durable state dir, an [[AtomicPublish]]'d version behind
-  * the pointer, and a two-level build fence — a per-root JVM monitor
+/** Build-once / read-many fence behind every [[Artifact]] (which owns
+  * the corpus-fingerprinted root): a build runs only while no
+  * [[AtomicPublish]]'d version sits behind the pointer, inside a
+  * two-level fence — a per-root JVM monitor
   * (FileChannel.lock throws OverlappingFileLockException for a second
   * same-JVM acquirer, and sbt runs suites in parallel in one forked
   * JVM) around an OS file lock (serializes across processes; on a
@@ -21,48 +21,9 @@ object DurableIndex {
 
   /** Age an orphaned old-fingerprint root must reach before vacuum:
     * deletion is deferred so a concurrent process still probing the
-    * OLD corpus's index (the consistency [[root]] promises) finishes
-    * before its files disappear. */
+    * OLD corpus's index (the consistency [[Artifact.root]] promises)
+    * finishes before its files disappear. */
   val VacuumGraceMs: Long = 30L * 60 * 1000
-
-  /** Metadata fingerprint of one corpus parquet (file names, lengths,
-    * mtimes — no data scan; the object-store analog hashes the
-    * listing's ETags). A regenerated corpus changes the fingerprint,
-    * forcing a rebuild at a NEW root while readers mid-flight on the
-    * old corpus keep a consistent old index.
-    *
-    * `params` salts the digest with the BUILD parameters (cap
-    * constants, kernel/schema version): an index is a function of
-    * (corpus, build recipe), and fingerprinting only the corpus would
-    * silently serve an index built under old parameters after a code
-    * change — every caller passes a params string naming its recipe,
-    * and bumping it forces a rebuild at a new root (the old one is
-    * vacuumed after the grace window like any orphan). */
-  def fingerprint(parquetPath: String, params: String = ""): String = {
-    import java.nio.file.{Files, Paths}
-    val root = Paths.get(parquetPath)
-    val entries: Seq[String] =
-      if (Files.isDirectory(root)) {
-        val st = Files.walk(root)
-        try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
-            s"${root.relativize(p)}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}")
-            .toVector.sorted
-        } finally st.close()
-      } else if (Files.exists(root))
-        Seq(s"${Files.size(root)}:${Files.getLastModifiedTime(root).toMillis}")
-      else Seq("absent")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest((entries :+ s"params:$params").mkString("\n").getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-  }
-
-  /** Durable root `<base>/<sanitized dir>-<fingerprint>`; '-' cannot
-    * appear in the sanitized name, so it unambiguously separates name
-    * from fingerprint (the vacuum's prefix match depends on that). */
-  def root(base: String, dir: String, fp: String): String =
-    s"$base/${dir.replaceAll("[^A-Za-z0-9]", "_")}-$fp"
 
   /** Ensure `root` holds a committed index version, running `build`
     * (which must end in an AtomicPublish.publish at `root`) at most

@@ -54,17 +54,6 @@ class AdviceClosureSpec extends GraftSpec {
       }
   }
 
-  test("durable-index fingerprints are recipe-salted: a params change forces a new root") {
-    import graft.sources.DurableIndex
-    val corpus = s"$sf/documents.parquet"
-    val a = DurableIndex.fingerprint(corpus, "recipe-v1;cap=100")
-    val b = DurableIndex.fingerprint(corpus, "recipe-v1;cap=50")
-    val a2 = DurableIndex.fingerprint(corpus, "recipe-v1;cap=100")
-    assert(a != b, "changing the build recipe must change the fingerprint")
-    assert(a == a2, "same corpus + same recipe must be stable")
-    assert(DurableIndex.root("/x", "d", a) != DurableIndex.root("/x", "d", b))
-  }
-
   test("r12 advice: g2's oracle iterates with the host-computed teleport constant") {
     // DuckDB parsing `1.0 - 0.85` in DECIMAL lands on the OTHER
     // neighboring double of 0.15 — the oracle must interpolate the
@@ -196,71 +185,6 @@ class AdviceClosureSpec extends GraftSpec {
       s"pinned cuts must scan a materialized RDD, got: ${pinned.queryExecution.analyzed}")
     val cuts = pinned.collect()(0).getSeq[Double](0)
     assert(cuts.length == 31 && cuts == cuts.sorted)
-  }
-
-  test("r14 advice: qc2's oracle path is keyed per corpus and goes silent when ambiguous") {
-    graft.operators.Quality.qc2Calibration(spark, sf).collect()
-    val paths = graft.operators.Quality.qcScoresPaths
-    assert(paths.containsKey(sf), "qc2 must record the corpus dir it ran on")
-    assert(paths.get(sf).contains("/versions/"),
-      s"path must be version-resolved, got ${paths.get(sf)}")
-    val snapshot = paths.get(sf)
-    try {
-      // a second corpus in the same JVM: NO single oracle SQL could be
-      // right for both, so the entry must disappear (rows-only), not
-      // silently aim at the last corpus written
-      paths.put("/some/other/corpus", "/elsewhere/scores")
-      assert(!graft.operators.Quality.oracles.contains("qc2_calibration"))
-    } finally paths.remove("/some/other/corpus")
-    // unambiguous again: the oracle reads the exact committed parquet
-    assert(graft.operators.Quality.oracles("qc2_calibration")
-      .contains(snapshot))
-  }
-
-  test("r14: every committed-artifact oracle hook goes silent on multi-corpus ambiguity") {
-    // the qc2 discipline applied to the whole r14 conversion wave:
-    // with two corpora recorded in one JVM, NO single SQL string can
-    // be right, so the index-backed entries must vanish (rows-only),
-    // never aim at the wrong corpus
-    import graft.operators.{Dedup, IncrementalAnn, Pipeline, Similarity}
-    // ensure the real entries exist first (specs elsewhere have run
-    // the queries; guard in case of test-order changes)
-    Similarity.n4CellAudit(spark, sf).collect()
-    IncrementalAnn.n17IncrementalAnn(spark, sf).collect()
-    Pipeline.pipe4MonitorReport(spark, sf).collect()
-    Dedup.d12SketchCalibration(spark, sf).collect()
-    Similarity.n9PcaProject(spark, sf).collect()
-    assert(Similarity.oracles.contains("n4_cell_audit"))
-    assert(IncrementalAnn.oracles.contains("n17_incremental_ann"))
-    assert(Dedup.oracles.contains("d12_sketch_calibration"))
-    assert(Similarity.oracles.contains("n9_pca_project"))
-    try {
-      Similarity.annVersionDirs.put("/fake/corpus", "/fake/ver")
-      IncrementalAnn.incrVersionDirs.put("/fake/corpus", "/fake/ver")
-      Pipeline.pipe4MetaDirs.put("/fake/corpus", ("/fake/a", "/fake/b"))
-      Dedup.sigVersionDirs.put("/fake/corpus", "/fake/ver")
-      Similarity.pcaVersionDirs.put("/fake/corpus", "/fake/ver")
-      for (k <- Seq("n2_ann_lsh", "n3_ivf_ann", "n4_cell_audit",
-          "n6_semantic_dedup", "n12_pq_topk", "n15_ivf_pq",
-          "n13_recall_eval", "n9_pca_project"))
-        assert(!Similarity.oracles.contains(k), s"$k must go rows-only")
-      assert(!IncrementalAnn.oracles.contains("n17_incremental_ann"))
-      assert(!Pipeline.oracles.contains("pipe4_monitor_report"))
-      for (k <- Seq("d12_sketch_calibration", "d24_lsh_pair_eval",
-          "d3_minhash_lsh", "d4_simhash"))
-        assert(!Dedup.oracles.contains(k), s"$k must go rows-only")
-    } finally {
-      Similarity.annVersionDirs.remove("/fake/corpus")
-      IncrementalAnn.incrVersionDirs.remove("/fake/corpus")
-      Pipeline.pipe4MetaDirs.remove("/fake/corpus")
-      Dedup.sigVersionDirs.remove("/fake/corpus")
-      Similarity.pcaVersionDirs.remove("/fake/corpus")
-    }
-    // and they come back once unambiguous again
-    assert(Similarity.oracles.contains("n4_cell_audit"))
-    assert(IncrementalAnn.oracles.contains("n17_incremental_ann"))
-    assert(Dedup.oracles.contains("d12_sketch_calibration"))
-    assert(Similarity.oracles.contains("n9_pca_project"))
   }
 
   test("r14 advice: priv2's noise moves with the release seed (DP claim scoped to sealed seeds)") {

@@ -5,7 +5,8 @@ import graft.sources.AtomicPublish
 
 /** Child-JVM probe for ANN-index durability (the PersistenceProbe
   * pattern): each invocation is a genuinely fresh process against the
-  * durable index base passed via -Dgraft.ann.base. Modes:
+  * durable state dir under the `-Djava.io.tmpdir` it is started with
+  * (the only location setting artifact roots have). Modes:
   *  - `build`: runs ensureAnnIndex and exits — the only invocation
   *    allowed to pay the build;
   *  - `probe`: a brand-new JVM that must find the COMMITTED index at
@@ -30,7 +31,7 @@ object AnnIndexProbe {
           println(s"[probe] built root=$root version=$v")
           if (v.isEmpty) sys.exit(2)
         case "probe" =>
-          val root = Similarity.annRoot(dataDir)
+          val root = Similarity.annIndex.root(dataDir)
           val v0 = AtomicPublish.currentVersion(s, root)
           println(s"[probe] restart sees version=$v0")
           if (v0.isEmpty) sys.exit(3) // index did not survive the restart

@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * at 100 TB the index is built once at ingest and probed by every
   * search after — including searches from PROCESSES that were not the
   * builder. Same child-JVM discipline as PersistenceSpec: probe A
-  * builds the index against a durable base and exits; probe B is a
+  * builds the index under a private `java.io.tmpdir` (which holds the
+  * durable state dir every artifact root lives in) and exits; probe B is a
   * brand-new process that must resolve the same root from the corpus
   * fingerprint, find the committed pointer, answer an ANN query from
   * the index tables, and must not trigger a rebuild (asserted by the
@@ -19,7 +20,7 @@ class AnnPersistenceSpec extends AnyFunSuite {
 
   private val DataDir = "/root/testdata/sf0.001"
 
-  private def runProbe(mode: String, annBase: String, stateDir: String): Int = {
+  private def runProbe(mode: String, tmpDir: String, stateDir: String): Int = {
     val javaBin = s"${sys.props("java.home")}/bin/java"
     val cp = sys.props("java.class.path")
     // inherit this JVM's --add-opens set (Spark-on-JDK17 module flags)
@@ -27,7 +28,7 @@ class AnnPersistenceSpec extends AnyFunSuite {
       .getInputArguments.asScala.toSeq
       .filter(a => a.startsWith("--add-opens") || a.startsWith("--add-exports"))
     val cmd = Seq(javaBin) ++ moduleFlags ++ Seq(
-      "-Xmx2g", "-Dspark.ui.enabled=false", s"-Dgraft.ann.base=$annBase",
+      "-Xmx2g", "-Dspark.ui.enabled=false", s"-Djava.io.tmpdir=$tmpDir",
       "-cp", cp, "graft.AnnIndexProbe", mode, stateDir, DataDir)
     val p = new ProcessBuilder(cmd: _*).inheritIO().start()
     assert(p.waitFor(300, TimeUnit.SECONDS), s"probe $mode timed out")
@@ -37,13 +38,13 @@ class AnnPersistenceSpec extends AnyFunSuite {
   test("ANN index survives a full restart: fresh JVM probes without rebuilding") {
     val scratch = Files.createDirectories(
       java.nio.file.Paths.get(TmpRoots.perProcess("graft_ann_restart")))
-    val annBase = Files.createTempDirectory(scratch, "ann_").toString
+    val tmpDir = Files.createTempDirectory(scratch, "tmp_").toString
     // separate Derby stateDirs per probe: the restart under test is the
     // ANN root's, not the metastore's
     val state1 = Files.createTempDirectory(scratch, "state_").toString
     val state2 = Files.createTempDirectory(scratch, "state_").toString
-    assert(runProbe("build", annBase, state1) == 0, "build probe failed")
-    val rc = runProbe("probe", annBase, state2)
+    assert(runProbe("build", tmpDir, state1) == 0, "build probe failed")
+    val rc = runProbe("probe", tmpDir, state2)
     assert(rc != 3, "committed index pointer did not survive the restart")
     assert(rc != 5, "restarted process rebuilt the index instead of probing it")
     assert(rc == 0, s"probe failed with exit $rc")

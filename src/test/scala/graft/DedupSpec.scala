@@ -219,24 +219,18 @@ class DedupSpec extends GraftSpec {
     // union-find fast path) — this spec is about the loop's round and
     // lineage bounds at cluster scale.
     val pairs = (1L to 29L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val old = sys.props.put("graft.cc.localthreshold", "0")
-    try {
-      val labels = Dedup.connectedComponents(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(labels.size == 30, s"expected 30 nodes, got ${labels.size}")
-      assert(labels.values.forall(_ == 1L),
-        s"chain should collapse to cluster 1: $labels")
-      assert(Dedup.ccRounds <= 8,
-        s"star alternation should need ~log2(30) rounds, took ${Dedup.ccRounds}")
-      // without the cadence checkpoint the per-round plan grows with
-      // round count; with it, depth stays O(cadence) — the property that
-      // keeps recovery lineage bounded on deep graphs at cluster scale
-      assert(Dedup.ccMaxPlanDepth <= 80,
-        s"plan depth grew with rounds, lineage unbounded: ${Dedup.ccMaxPlanDepth}")
-    } finally {
-      old.fold(sys.props.remove("graft.cc.localthreshold"))(
-        v => sys.props.put("graft.cc.localthreshold", v))
-    }
+    val labels = Dedup.connectedComponents(pairs, localThreshold = 0)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels.size == 30, s"expected 30 nodes, got ${labels.size}")
+    assert(labels.values.forall(_ == 1L),
+      s"chain should collapse to cluster 1: $labels")
+    assert(Dedup.ccRounds <= 8,
+      s"star alternation should need ~log2(30) rounds, took ${Dedup.ccRounds}")
+    // without the cadence checkpoint the per-round plan grows with
+    // round count; with it, depth stays O(cadence) — the property that
+    // keeps recovery lineage bounded on deep graphs at cluster scale
+    assert(Dedup.ccMaxPlanDepth <= 80,
+      s"plan depth grew with rounds, lineage unbounded: ${Dedup.ccMaxPlanDepth}")
   }
 
   test("d6 core: the union-find fast path labels exactly like the distributed star loop") {
@@ -246,16 +240,12 @@ class DedupSpec extends GraftSpec {
     val es = ((1L to 29L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (100L, 102L), (100L, 103L), (102L, 103L),
         (200L, 300L), (300L, 250L), (15L, 103L))).toDF("doc_a", "doc_b")
-    def run(threshold: String): Map[Long, Long] = {
-      val old = sys.props.put("graft.cc.localthreshold", threshold)
-      try Dedup.connectedComponents(es).collect()
+    def run(threshold: Long): Map[Long, Long] =
+      Dedup.connectedComponents(es, threshold).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      finally old.fold(sys.props.remove("graft.cc.localthreshold"))(
-        v => sys.props.put("graft.cc.localthreshold", v))
-    }
-    val fast = run("1000000")
+    val fast = run(1000000)
     assert(Dedup.ccRounds == 0, "fixture should have taken the fast path")
-    val loop = run("0")
+    val loop = run(0)
     assert(Dedup.ccRounds > 0, "threshold 0 should force the star loop")
     assert(fast == loop)
   }

@@ -67,7 +67,7 @@ class GraphSpec extends GraftSpec {
   }
 
   test("g4 hub-cap knob: tightening only removes pairs, only shrinks scores, keeps the head stable") {
-    // the LpMaxDeg SEMANTICS knob (-Dgraft.g4.maxdeg): at 100 TB the
+    // the LpMaxDeg SEMANTICS constant, taken as a parameter: at 100 TB the
     // pair mass is the g4 scale lever, and this pins what a tighter
     // cap does to the output — hub-customer contributions vanish, so
     // the pair set and both scores are MONOTONE under tightening and
@@ -378,17 +378,17 @@ class GraphSpec extends GraftSpec {
       2L -> 10L, 2L -> 20L, 2L -> 30L,
       3L -> 10L, 3L -> 20L, 3L -> 30L, 4L -> 10L)
 
-    val root1 = Graph.kcoreRootFor(spark, edgeRoot, edgeRoot)
+    val root1 = Graph.kcoreIndex(spark, edgeRoot).root(edgeRoot)
     val got1 = Graph.kcoreAt(spark, edgeRoot, edgeRoot).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got1 == driverCores(basePairs), "v1 cores == driver peel on base edges")
     assert(!got1.contains(8L), "pendant customer 4 (node 8) peeled at v1")
     // no bump → identical root: the committed build is reused as-is
-    assert(Graph.kcoreRootFor(spark, edgeRoot, edgeRoot) == root1)
+    assert(Graph.kcoreIndex(spark, edgeRoot).root(edgeRoot) == root1)
 
     // ingest batch bumps the edge artifact to version N+1
     assert(Graph.applyBatch(spark, edgeRoot, pairs(4L -> 20L, 4L -> 30L), 1L))
-    val root2 = Graph.kcoreRootFor(spark, edgeRoot, edgeRoot)
+    val root2 = Graph.kcoreIndex(spark, edgeRoot).root(edgeRoot)
     assert(root2 != root1, "edge-version bump must re-key the kcore root")
     val merged = basePairs ++ Set(4L -> 20L, 4L -> 30L)
     val got2 = Graph.kcoreAt(spark, edgeRoot, edgeRoot).collect()

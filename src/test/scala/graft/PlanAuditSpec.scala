@@ -425,7 +425,7 @@ class PlanAuditSpec extends GraftSpec {
       val plan = planOf(df)
       assert(!plan.contains("embeddings.parquet"),
         s"$name probe must touch index tables only, not the corpus:\n$plan")
-      assert(plan.contains(Similarity.annRoot(sf)),
+      assert(plan.contains(Similarity.annIndex.root(sf)),
         s"$name probe should scan the published durable index:\n$plan")
     }
   }

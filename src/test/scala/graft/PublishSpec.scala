@@ -1,13 +1,16 @@
 package graft
 
-import graft.sources.AtomicPublish
+import graft.sources.{Artifact, AtomicPublish}
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Atomic multi-output publish (VERDICT r2, Missing #3): a pipeline's
   * corpus + stats must flip together or not at all, like the
   * reference's BEGIN TRANSACTION/COMMIT around multi-table writes
-  * (db.mjs:467-471).
+  * (db.mjs:467-471) — and the [[Artifact]] declaration every durable
+  * per-corpus result publishes through (root, fingerprint, oracle
+  * version hook).
   */
 class PublishSpec extends GraftSpec {
 
@@ -94,5 +97,86 @@ class PublishSpec extends GraftSpec {
     assert(intercept[Exception] {
       AtomicPublish.readOutputAt(spark, root, "v1", "corpus").count()
     } != null)
+  }
+
+  test("artifact fingerprints are recipe-salted: a params change forces a new root") {
+    def art(recipe: String) = Artifact("recipe_spec", "documents")(recipe)
+    val a = art("recipe-v1;cap=100").fingerprint(sf)
+    val b = art("recipe-v1;cap=50").fingerprint(sf)
+    val a2 = art("recipe-v1;cap=100").fingerprint(sf)
+    assert(a != b, "changing the build recipe must change the fingerprint")
+    assert(a == a2, "same corpus + same recipe must be stable")
+    assert(art("recipe-v1;cap=100").root(sf) != art("recipe-v1;cap=50").root(sf))
+    assert(art("recipe-v1;cap=100").root(sf) ==
+      s"${GraftSession.defaultStateDir}/recipe_spec/${sf.replaceAll("[^A-Za-z0-9]", "_")}-$a")
+    // a second table's fingerprint salts the first's
+    assert(Artifact("recipe_spec", "orders", "lineitem")("r").fingerprint(sf) !=
+      Artifact("recipe_spec", "orders")("r").fingerprint(sf))
+    // with no table the recipe alone is hashed (k-core's version-chained key)
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+      .digest("r".getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
+    assert(Artifact("recipe_spec")("r").fingerprint("/any/dir") == md5)
+  }
+
+  test("qc2's oracle path is keyed per corpus and goes silent when ambiguous") {
+    graft.operators.Quality.qc2Calibration(spark, sf).collect()
+    val paths = Artifact.committedVersions.get("qc_scores")
+    assert(paths.containsKey(sf), "qc2 must record the corpus dir it ran on")
+    assert(paths.get(sf).contains("/versions/"),
+      s"path must be version-resolved, got ${paths.get(sf)}")
+    val snapshot = paths.get(sf)
+    try {
+      // a second corpus in the same JVM: NO single oracle SQL could be
+      // right for both, so the entry must disappear (rows-only), not
+      // silently aim at the last corpus written
+      paths.put("/some/other/corpus", "/elsewhere/scores")
+      assert(!graft.operators.Quality.oracles.contains("qc2_calibration"))
+    } finally paths.remove("/some/other/corpus")
+    // unambiguous again: the oracle reads the exact committed parquet
+    assert(graft.operators.Quality.oracles("qc2_calibration")
+      .contains(snapshot))
+  }
+
+  test("every committed-artifact oracle hook goes silent on multi-corpus ambiguity") {
+    // with two corpora recorded in one JVM, NO single SQL string can
+    // be right, so the artifact-backed entries must vanish (rows-only),
+    // never aim at the wrong corpus
+    import graft.operators.{Dedup, IncrementalAnn, Pipeline, Similarity}
+    // ensure the real entries exist first (specs elsewhere have run
+    // the queries; guard in case of test-order changes)
+    Similarity.n4CellAudit(spark, sf).collect()
+    IncrementalAnn.n17IncrementalAnn(spark, sf).collect()
+    Pipeline.pipe4MonitorReport(spark, sf).collect()
+    Dedup.d12SketchCalibration(spark, sf).collect()
+    Similarity.n9PcaProject(spark, sf).collect()
+    // the gated oracles each hook backs
+    val backs = Map(
+      "ann_index" -> Seq("n2_ann_lsh", "n3_ivf_ann", "n4_cell_audit",
+        "n6_semantic_dedup", "n12_pq_topk", "n15_ivf_pq",
+        "n13_recall_eval", "n20_filtered_ann"),
+      "pca_model" -> Seq("n9_pca_project"),
+      "sig_index" -> Seq("d12_sketch_calibration", "d24_lsh_pair_eval",
+        "d3_minhash_lsh", "d4_simhash"),
+      "ann_incr_index" -> Seq("n17_incremental_ann"),
+      "qc_scores" -> Seq("qc2_calibration", "qc1_classifier_score",
+        "pipe4_monitor_report"),
+      "qc_model" -> Seq("pipe4_monitor_report"),
+      "bpe_model" -> Seq("pipe4_monitor_report"))
+    val hooks = Artifact.committedVersions.asScala
+    assert(hooks.keySet == backs.keySet,
+      s"every recorded hook must be covered: ${hooks.keySet}")
+    for ((kind, dirs) <- hooks) {
+      for (k <- backs(kind))
+        assert(SparkEntry.oracleSql.contains(k), s"$k must be live before the probe")
+      try {
+        dirs.put("/fake/corpus", "/fake/ver")
+        val live = SparkEntry.oracleSql
+        for (k <- backs(kind))
+          assert(!live.contains(k), s"$k must go rows-only when $kind is ambiguous")
+      } finally dirs.remove("/fake/corpus")
+      // and they come back once unambiguous again
+      for (k <- backs(kind))
+        assert(SparkEntry.oracleSql.contains(k), s"$k must return after the probe")
+    }
   }
 }

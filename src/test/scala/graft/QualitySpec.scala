@@ -89,7 +89,7 @@ class QualitySpec extends GraftSpec {
   test("qc model registry is build-once: a second scorer reuses the committed version") {
     import graft.operators.Quality
     Quality.qc1ClassifierScore(spark, sf).collect()
-    val root = Quality.qcModelRoot(sf)
+    val root = Quality.qcModel.root(sf)
     val v1 = graft.sources.AtomicPublish.currentVersion(spark, root)
     Quality.qc2Calibration(spark, sf).collect()
     val v2 = graft.sources.AtomicPublish.currentVersion(spark, root)

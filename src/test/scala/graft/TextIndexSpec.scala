@@ -11,7 +11,7 @@ class TextIndexSpec extends GraftSpec {
     // output is the scalar digest of exactly that list
     val root = {
       TextIndex.ix2BooleanSearch(spark, sf).collect() // ensure built
-      TextIndex.indexRoot(sf)
+      TextIndex.textIndex.root(sf)
     }
     val raw = graft.sources.AtomicPublish.readOutput(spark, root, "postings")
       .collect()
@@ -75,7 +75,7 @@ class TextIndexSpec extends GraftSpec {
 
   test("the index is build-once: a second call reuses the committed version") {
     TextIndex.ix2BooleanSearch(spark, sf).collect()
-    val root = TextIndex.indexRoot(sf)
+    val root = TextIndex.textIndex.root(sf)
     val v1 = graft.sources.AtomicPublish.currentVersion(spark, root)
     TextIndex.ix1InvertedIndex(spark, sf).collect()
     val v2 = graft.sources.AtomicPublish.currentVersion(spark, root)

@@ -1,0 +1,80 @@
+#!/usr/bin/env python3
+"""Track the size of graft's main code and its JVM-global knobs.
+
+Prints two numbers, one per line:
+
+  main_loc     non-blank, non-comment lines of src/main/scala
+               (`//` comments and `/* ... */` blocks, Scaladoc
+               included, are stripped; string literals, oracle SQL
+               among them, count as code)
+  graft_props  `sys.props` reads of `graft.*` keys in src/main
+
+Usage: python3 tools/loc.py [repo_root]
+"""
+import pathlib
+import re
+import sys
+
+PROP_READ = re.compile(
+    r'sys\.props\s*(?:\.\s*(?:get|getOrElse|contains|apply)\s*)?\(\s*"graft\.')
+CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'")
+
+
+def strip_comments(text):
+    """`text` with every comment removed; string and char literals are
+    kept verbatim, so a `/*` inside SQL text opens no comment."""
+    out = []
+    i, n, depth = 0, len(text), 0
+    while i < n:
+        if depth:  # inside a (nestable) block comment
+            if text.startswith("/*", i):
+                depth, i = depth + 1, i + 2
+            elif text.startswith("*/", i):
+                depth, i = depth - 1, i + 2
+            else:
+                if text[i] == "\n":
+                    out.append("\n")
+                i += 1
+        elif text.startswith("/*", i):
+            depth, i = 1, i + 2
+        elif text.startswith("//", i):
+            end = text.find("\n", i)
+            i = n if end < 0 else end
+        elif text.startswith('"""', i):
+            end = text.find('"""', i + 3)
+            end = n if end < 0 else end + 3
+            while end < n and text[end] == '"':  # """..."""" closes last
+                end += 1
+            out.append(text[i:end])
+            i = end
+        elif text[i] == '"':
+            j = i + 1
+            while j < n and text[j] not in '"\n':
+                j += 2 if text[j] == "\\" else 1
+            out.append(text[i:j + 1])
+            i = j + 1
+        elif text[i] == "'" and CHAR_LIT.match(text, i):
+            m = CHAR_LIT.match(text, i)
+            out.append(m.group(0))
+            i = m.end()
+        else:
+            out.append(text[i])
+            i += 1
+    return "".join(out)
+
+
+def main():
+    root = pathlib.Path(sys.argv[1] if len(sys.argv) > 1 else ".")
+    main_dir = root / "src" / "main"
+    loc = sum(
+        sum(1 for line in strip_comments(f.read_text("utf-8")).splitlines()
+            if line.strip())
+        for f in sorted((main_dir / "scala").rglob("*.scala")))
+    props = sum(len(PROP_READ.findall(f.read_text("utf-8")))
+                for f in sorted(main_dir.rglob("*")) if f.is_file())
+    print(f"main_loc {loc}")
+    print(f"graft_props {props}")
+
+
+if __name__ == "__main__":
+    main()
