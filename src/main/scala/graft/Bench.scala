@@ -40,7 +40,7 @@ object Bench {
     Seq("graft_sources", "graft_pipe3_release", "graft_bench_state",
       "graft_stream", "graft_publish_spec", "graft_persist",
       "graft_ann_index", "graft_ann_restart",
-      "graft_scale_state").foreach(TmpRoots.cleanStale)
+      "graft_scale_state", "graft_spec").foreach(TmpRoots.cleanStale)
     TmpRoots.cleanLegacy("graft_persist_state\\d+", "graft_publish\\d+",
       "graft_publish2\\d+", "graft_publish_tt\\d+", "graft_test",
       "graft_stream_(ckpt|restart|upsert)_\\d+(_ckpt)?", "graft_stream_src")
@@ -49,26 +49,16 @@ object Bench {
     // running verify/test JVM would fail one of them. Bucketed-table
     // pay-once setup (k2) lands in pass 1 and is amortized by min-of-N.
     val stateDir = TmpRoots.perProcess("graft_bench_state")
-    // The bench session runs on the IN-MEMORY catalog by default
-    // (SPARK_GRAFT_CATALOG=hive restores Derby): embedded-Derby
+    // The bench session runs on the IN-MEMORY catalog: embedded-Derby
     // metastore creation costs ~8-12 s of the driver's fixed bench
     // budget and buys nothing measured — catalog DURABILITY is proven
     // by PersistenceSpec/AnnPersistenceSpec on the hive path, while
     // every benched query plans and executes identically on either
     // catalog (bucketed saveAsTable included).
-    val catalog = sys.env.getOrElse("SPARK_GRAFT_CATALOG", "in-memory")
-    val builder0 = GraftSession.builder(cpus.toInt, stateDir)
-    val spark = (if (catalog == "hive") builder0
-      else builder0.config("spark.sql.catalogImplementation", "in-memory"))
+    val spark = GraftSession.builder(cpus.toInt, stateDir)
+      .config("spark.sql.catalogImplementation", "in-memory")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Runtime conf overrides for bench experiments, e.g.
-    // SPARK_GRAFT_CONF="spark.sql.adaptive.enabled=false;spark.x=y"
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
     // warm up the JVM/scheduler/file-system paths once so the first
     // measured query doesn't absorb session start-up cost
     spark.range(1000000L).selectExpr("sum(id)").collect()
@@ -259,14 +249,12 @@ object Bench {
   }
 
   /** The reference scale factor the sealed bench_last.json holds
-    * (basename of the sf dir; `SPARK_GRAFT_REFERENCE_SF` overrides
-    * for a deliberate re-baseline). Pinned as a constant (r13 advice
-    * #5): the old guard trusted the COMMITTED file's self-declared sf
+    * (basename of the sf dir). Pinned as a constant (r13 advice #5):
+    * the old guard trusted the COMMITTED file's self-declared sf
     * field, so it failed OPEN whenever that file was missing or
     * unparseable — one bad overwrite permanently re-aimed the guard
     * at the wrong sf. */
-  private[graft] val ReferenceSfName: String =
-    sys.env.getOrElse("SPARK_GRAFT_REFERENCE_SF", "sf0.1")
+  private[graft] val ReferenceSfName = "sf0.1"
 
   /** Where this run's evidence flushes. The committed bench_last.json
     * is sealed per-round evidence at the reference sf; a capture at
@@ -300,44 +288,31 @@ object Bench {
     }
   }
 
-  /** Re-baseline cohort keys, in the order they appear in
-    * BASELINE_BENCH.json (the round-1 "queries" map precedes all of
-    * them). Appending a new round's cohort = add its key here and its
-    * map at the END of the file. */
-  private[graft] val CohortKeys = Seq("queries_r13", "queries_r14",
-    "queries_r15", "queries_r15b")
+  /** A cohort map in BASELINE_BENCH.json: the round-1 `"queries"`
+    * map or a `"queries_r<round>"` re-baseline, each a flat object. A
+    * key is followed by `{`, so the `"queries_r15_note"` string values
+    * never match. */
+  private val CohortMap = """"(queries(?:_r[A-Za-z0-9]+)?)"\s*:\s*\{[^}]*\}""".r
 
-  /** Slice BASELINE_BENCH text into (cohort, slice) pairs: the
-    * round-1 baseline is everything before the first re-baseline key,
-    * and each re-baseline's slice runs from its key to the NEXT key
-    * (r14 fix: the old suffix-split would have merged every later
-    * cohort into queries_r13's slice, silently corrupting its geomean
-    * the moment a third cohort landed — BenchGuardSpec pins the
-    * slicing). Regex parse only; no JSON library on the unmanaged
-    * classpath. */
+  /** Slice BASELINE_BENCH text into its two reported cohorts: the
+    * round-1 "queries" map (82-query continuity series) and the LAST
+    * `queries_r*` re-baseline in the file (one full-surface re-baseline
+    * per round since r13). Each slice is that cohort's own map, so a
+    * later cohort's pairs never leak into an earlier one, and a new
+    * round's cohort appended to the file needs no code change. Regex
+    * parse only; no JSON library on the unmanaged classpath. */
   private[graft] def cohortSlices(txt: String): Seq[(String, String)] = {
-    val marks = CohortKeys.map(k => k -> txt.indexOf("\"" + k + "\""))
-      .filter(_._2 >= 0).sortBy(_._2)
-    val firstIdx = marks.headOption.map(_._2).getOrElse(txt.length)
-    ("baseline" -> txt.substring(0, firstIdx)) +: marks.zipWithIndex.map {
-      case ((k, i), j) =>
-        val end = marks.lift(j + 1).map(_._2).getOrElse(txt.length)
-        k -> txt.substring(i, end)
-    }
+    val maps = CohortMap.findAllMatchIn(txt).map(m => m.group(1) -> m.matched).toSeq
+    maps.find(_._1 == "queries").toSeq ++ maps.filter(_._1 != "queries").lastOption
   }
 
-  /** BASELINE_BENCH.json carries the original round-1 "queries" map
-    * (82-query continuity series) plus one full-surface re-baseline
-    * per round since r13 (the r12 verdict's ask #6 — the shared
-    * cohort had shrunk to 30% of the suite). Every cohort's geomean
-    * is reported. */
   private def baselineCohorts(best: collection.Map[String, Double])
-      : Map[String, (Double, Int)] = {
+      : Seq[(String, (Double, Int))] = {
     val p = java.nio.file.Paths.get("BASELINE_BENCH.json")
-    if (!java.nio.file.Files.exists(p)) return Map.empty
+    if (!java.nio.file.Files.exists(p)) return Nil
     cohortSlices(java.nio.file.Files.readString(p)).flatMap {
       case (k, slice) => geomeanOver(slice, best).map(k -> _)
-    }.toMap
+    }
   }
 
   private def compactLine(best: collection.Map[String, Double],
@@ -345,16 +320,14 @@ object Bench {
                           total: Double, passes: Int, runsReq: Int,
                           sfDir: String, passSecs: Seq[Double] = Nil,
                           noiseBand: String = ""): String = {
-    val gms = baselineCohorts(best)
-    def gmPart(key: String, label: String, nLabel: String): String =
-      gms.get(key).map { case (g, n) =>
-        s""","$label":${math.rint(g * 1000) / 1000},"$nLabel":$n"""
-      }.getOrElse("")
-    val gmJson = gmPart("baseline", "geomean_vs_baseline", "shared_queries") +
-      gmPart("queries_r13", "geomean_vs_r13", "shared_r13") +
-      gmPart("queries_r14", "geomean_vs_r14", "shared_r14") +
-      gmPart("queries_r15", "geomean_vs_r15", "shared_r15") +
-      gmPart("queries_r15b", "geomean_vs_r15b", "shared_r15b")
+    // labels follow the key: "queries" -> geomean_vs_baseline /
+    // shared_queries, "queries_r15b" -> geomean_vs_r15b / shared_r15b
+    val gmJson = baselineCohorts(best).map { case (key, (g, n)) =>
+      val (label, nLabel) =
+        if (key == "queries") ("geomean_vs_baseline", "shared_queries")
+        else { val r = key.stripPrefix("queries_"); (s"geomean_vs_$r", s"shared_$r") }
+      s""","$label":${math.rint(g * 1000) / 1000},"$nLabel":$n"""
+    }.mkString
     val passJson = if (passSecs.isEmpty) "" else
       passSecs.map(p => math.rint(p * 10) / 10).mkString(""","pass_secs":[""", ",", "]")
     val nbJson = if (noiseBand.isEmpty) "" else s""","noise_band":$noiseBand"""

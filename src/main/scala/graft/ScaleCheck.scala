@@ -15,11 +15,11 @@ import org.apache.spark.sql.functions._
   * a 10-way exact duplicate, which would quadratically inflate
   * within-bucket candidate pairs in a way no real corpus growth does).
   * Region/nation stay fixed, like TPC-H's constant dimensions. It then
-  * runs the queries named in SPARK_GRAFT_ONLY (default: the 10 most
-  * expensive from the round-7 bench) once each, and prints ONE JSON
-  * line in the Bench shape with the build cost reported separately.
-  * Committed output: SCALECHECK_sf1.json; scaling analysis in SURVEY
-  * §5.
+  * runs every SparkEntry query (or those named in SPARK_GRAFT_ONLY)
+  * and prints ONE JSON line in the Bench shape with the build cost
+  * reported separately. Committed output: SCALECHECK_sf1.json, whose
+  * `queries` keys are its SPARK_GRAFT_ONLY list; scaling analysis in
+  * SURVEY §5.
   */
 object ScaleCheck {
 
@@ -48,109 +48,6 @@ object ScaleCheck {
     "events" -> Seq("event_id", "user_id"),
     "documents" -> Seq("doc_id"),
     "embeddings" -> Seq("vec_id"))
-
-  /** The 10 most expensive queries of the round-7 sf0.1 bench plus the
-    * round-7/8 newcomers — the set the committed SCALECHECK_sf1.json
-    * was measured over, so the artifact reproduces with no env vars. */
-  val DefaultQueries = Seq(
-    "d6_dedup_clusters", "prof1_column_profile", "k12_user_erasure",
-    "k13_incremental_rollup", "d2_ngram_jaccard", "pipe3_publish_corpus",
-    "a5_percentiles", "k5_merge_upsert", "k6_compaction",
-    "s4_nested_roundtrip",
-    "d9_substring_dedup", "t18_bpe_train", "q8_market_share",
-    "q11_important_stock", "q12_priority_lines", "q20_excess_shippers",
-    "q15_top_supplier", "prof1b_approx_profile", "m4_binary_ingest",
-    // round-8 session-2 newcomers (quality / LM / mining / index / OBT)
-    "g1_gopher_quality", "t20_bigram_perplexity", "qc1_classifier_score",
-    "b1_basket_pairs", "e6_mad_outliers", "obt1_denormalize",
-    "ix2_boolean_search", "f1_feature_bins",
-    // round-8 session-3 newcomers (graph / PQ / ER / TS / skyline)
-    "g2_pagerank", "g3_triangle_count", "n12_pq_topk",
-    "er2_entity_clusters", "w7_stickiness", "ts2_locf_fill",
-    "sky1_pareto_front",
-    // round-8 session-4 newcomers (autocorr / attribution / chi² /
-    // link prediction / pHash dedup / Zipf)
-    "ts6_autocorr", "e7_attribution", "a16_chi2",
-    "g4_link_predict", "m5_phash_neardup", "t22_zipf_profile",
-    // round-8 session-4 late additions (journeys / LTV / RFM /
-    // bootstrap / IVF+PQ / lifecycle / epoch order / calibration)
-    "e9_common_paths", "a18_cohort_ltv", "rfm1_segments",
-    "imp2_bootstrap_ci", "n15_ivf_pq", "k16_relayout", "k17_cdc_apply",
-    "mix4_epoch_order", "d12_sketch_calibration",
-    // round-8 session-4 closing additions (rules / Holt / BFS /
-    // rolling p95 / codec harness)
-    "b2_association_rules", "ts8_holt", "g6_bfs_hops",
-    "w9_rolling_percentile", "k18_codec_compare",
-    // round-9 additions: the r8 verdict's missing expensive rows —
-    // d10 (now consuming the published cluster table; its sf1 number
-    // includes only the read+pick), j6/d11, and ix1's digest form
-    "d10_canonical_pick", "j6_overlap_join", "d11_dup_histogram",
-    "ix1_inverted_index",
-    // round-9 new operators (containment / monitoring / curriculum /
-    // survival / streaks / degree profile / cell audit / calibration)
-    "d7_containment_dedup", "pipe4_monitor_report", "qc2_calibration",
-    "mix5_curriculum", "e8_survival_curve", "w8_active_streaks",
-    "g5_degree_profile", "n4_cell_audit",
-    // round-10 newcomers (time-weighted avg / readability / anomaly
-    // episodes / corpus diversity / Theil–Sen / split leakage / MI)
-    "ts12_time_weighted", "t24_readability", "e10_anomaly_episodes",
-    "n16_corpus_diversity", "ts13_theil_sen", "mix6_split_leakage",
-    "prof5_mutual_info",
-    // round-10 session-2 late additions (Neyman / dedup weights / FD
-    // audit / phrase search / adoption curve / media clusters)
-    "imp3_neyman_allocation", "mix7_dedup_weights",
-    "prof6_functional_dependency", "ix3_phrase_search",
-    "w10_cumulative_users", "m6_media_dup_clusters",
-    "f1b_approx_bins", "e11_first_touch", "ts14_seasonal_adjust",
-    // round-11 newcomers (incremental index family; n11 joins the
-    // cohort now that its greedy loop is executor-side)
-    "d13_incremental_index", "n11_mmr_rerank", "t25_incremental_tfidf",
-    "d14_incremental_passages", "er4_incremental_entities",
-    "m7_incremental_media",
-    // round-12 newcomers (incremental ANN + text-postings lifecycles;
-    // s2 now deterministic so its scale shape is gate-relevant)
-    "n17_incremental_ann", "ix4_incremental_postings",
-    "s2_stratified_sample",
-    // round-12 session-2 newcomers (Benford / Pearson moments /
-    // changepoint / HT estimate / PMI / LPA / BM25 / batch admission)
-    "prof7_benford", "prof8_numeric_corr", "ts15_changepoint",
-    "imp4_ht_estimate", "t26_collocations", "g7_label_propagation",
-    "ix5_bm25_search", "pipe5_incremental_corpus", "ts16_stl_decompose",
-    "g8_incremental_edges", "b3_incremental_baskets",
-    // round-12 session-3 newcomers (Gini / sweep-line / gap audit /
-    // source overlap / novelty / kappa / temperature mix / feature
-    // hashing / assortativity / basket affinity / capture-recapture)
-    "w11_gini", "e12_peak_concurrency", "prof9_id_gaps",
-    "d15_source_overlap", "t27_novelty", "qc3_rater_agreement",
-    "mix8_temperature_mixture", "f5_feature_hashing",
-    "g9_assortativity", "b5_basket_affinity", "imp5_capture_recapture",
-    // round-12 session-3 wave 3 (bounce / top-decile / df tail / JS)
-    "e13_bounce_rate", "w12_top_decile_share",
-    "d16_shingle_df_histogram", "t28_source_divergence",
-    "priv1_k_anonymity", "g10_kcore", "t29_incremental_novelty",
-    "prof10_entropy", "w13_new_vs_returning", "d17_cluster_histogram",
-    // round-13 newcomers (exact-span dedup plane / production OBT) +
-    // the de-hinted star joins whose strategy is now planner-chosen
-    // at every scale (the r12 verdict's systemic-defect fix)
-    "d18_exact_spans", "d19_span_extents", "obt2_partitioned_obt",
-    "d20_incremental_spans", "t31_span_decontaminate", "ts17_forecast_backtest", "priv2_dp_release", "w14_lorenz", "prof11_depth_histogram",
-    "q3_topk_revenue", "q5_region_revenue", "q7_nation_volume",
-    "q9_product_profit", "q16_supplier_diversity", "q19_disjunctive_join",
-    "q8_cheapest_supplier", "q14_promo_revenue", "q21_waiting_suppliers",
-    // round-14: span removal (the actionable span/contamination planes)
-    "d21_span_scrub", "t32_decontaminate_scrub", "d22_incremental_scrub",
-    "d23_span_hotspots", "ts18_stl_anomalies",
-    // round-15: index-eval + report newcomers (LSH retrieval eval /
-    // truncated-dim recall / eval-side leakage / padding waste)
-    "d24_lsh_pair_eval", "n18_truncation_eval", "t30_eval_leak_report",
-    "mix9_padding_waste", "n19_binary_recall", "t33_code_profile",
-    // round-15 late additions (target-mixture spec, LTTB downsample,
-    // filtered ANN)
-    "mix10_target_mixture", "ts19_lttb", "n20_filtered_ann",
-    "k19_layout_audit", "d25_dedup_savings", "qc4_langid_confusion",
-    "src6_gzip_text", "g11_modularity", "qc5_filter_bias",
-    "n21_rrf_fusion", "ix6_snippets", "pipe6_hybrid_search",
-    "src7_corrupt_json", "a19_mde_power")
 
   private def buildTable(s: SparkSession, srcDir: String, outDir: String,
       name: String): Unit = {
@@ -208,9 +105,9 @@ object ScaleCheck {
     }
     val buildSec = (System.nanoTime() - t0) / 1e9
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").toSeq).getOrElse(DefaultQueries)
     val all = SparkEntry.queries
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").toSeq).getOrElse(all.keys.toSeq.sorted)
     // IN-PROCESS min-of-N passes (SPARK_GRAFT_PASSES, default 4), the
     // Bench discipline: the state dir is per-PROCESS, so every durable
     // index (shingle/cluster/ANN/term/sig/model/…) is rebuilt on the

@@ -29,13 +29,8 @@ object Tables {
   private val relationCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
-  /** Measurement escape hatch: SPARK_GRAFT_NO_REL_CACHE=1 restores the
-    * per-call read so the cache's contribution stays measurable. */
-  private val cacheOff = sys.env.get("SPARK_GRAFT_NO_REL_CACHE").contains("1")
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (cacheOff) spark.read.parquet(s"$dir/$name.parquet")
-    else relationCache.computeIfAbsent((spark, dir, name),
+    relationCache.computeIfAbsent((spark, dir, name),
       key => key._1.read.parquet(s"$dir/$name.parquet"))
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -155,7 +155,7 @@ object Profiling {
     * enabled (the qc2Calibration base-frame discipline). The grouped-
     * rank cuts are engine-only bucketing aids (they cannot move the
     * result), but INCONSISTENT cuts across consumers would silently
-    * corrupt every global rank. Spec-visible hook: AdviceClosureSpec
+    * corrupt every global rank. Spec-visible hook: ProfilingSpec
     * asserts the returned frame reads a materialized RDD, not a live
     * recomputable sketch plan. */
   private[graft] def prof11PinnedCuts(x: DataFrame, fanout: Int): DataFrame = {

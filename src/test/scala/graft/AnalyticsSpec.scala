@@ -1371,4 +1371,45 @@ class AnalyticsSpec extends GraftSpec {
     assert(rows.last.getAs[Long]("n_customers") == w12.getAs[Long]("top_k"))
     assert(rows.last.getAs[Long]("decile_cents") == w12.getAs[Long]("top_cents"))
   }
+
+  test("rank-moment folds lift to decimal BEFORE multiplying (no int64 wrap)") {
+    import spark.implicits._
+    // i·cents chosen so the int64 product wraps: 4e9 × 4e9 = 1.6e19 >
+    // Long.MaxValue. The shipped fold (cast one operand to
+    // decimal(38,0) first) must be exact; the pre-fix form (multiply
+    // in long, cast after) silently wraps under non-ANSI Spark — the
+    // w11/g9 divergence the r12 advice named.
+    val df = Seq((4000000000L, 4000000000L), (3L, 5L)).toDF("i", "cents")
+    val exact = df.agg(
+      sum(col("i").cast("decimal(38,0)") * col("cents")).as("s"))
+      .collect().head.getDecimal(0)
+    val want = BigInt("4000000000") * BigInt("4000000000") + BigInt(15)
+    assert(BigInt(exact.toBigInteger) == want,
+      s"decimal-lifted fold must be exact: $exact vs $want")
+    // the pre-fix form (multiply in long, cast after) cannot produce
+    // `want`: under this session's ANSI default it THROWS on the
+    // wrapped product (and under legacy non-ANSI it would silently
+    // wrap) — either way the decimal lift is what keeps the fold
+    // correct at 100 TB magnitudes
+    val thrown = intercept[Exception] {
+      df.agg(sum((col("i") * col("cents")).cast("decimal(38,0)")).as("s"))
+        .collect()
+    }
+    assert(thrown.getMessage.contains("ARITHMETIC_OVERFLOW") ||
+      thrown.getMessage.toLowerCase.contains("overflow"),
+      s"expected a long-overflow failure, got: ${thrown.getMessage}")
+  }
+
+  test("w12 emits zero rows on an empty orders frame (matches the oracle)") {
+    import spark.implicits._
+    import org.apache.spark.sql.types._
+    val dir = tempDir("w12_empty")
+    val schema = StructType(Seq(
+      StructField("o_custkey", LongType),
+      StructField("o_totalprice", DoubleType)))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .write.parquet(s"$dir/orders.parquet")
+    assert(graft.operators.Analytics.w12TopDecileShare(spark, dir).count() == 0L,
+      "degenerate all-NULL aggregate row must not surface on empty input")
+  }
 }

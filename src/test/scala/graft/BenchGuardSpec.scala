@@ -23,8 +23,8 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.flushTarget("/root/testdata/sf0.1/") == "bench_last.json")
     assert(Bench.flushTarget("/root/testdata/sf1///")
       == "bench_last.sf1.json")
-    // a deliberate re-baseline goes through the refSf parameter (env
-    // override in production), never through a mutable committed file
+    // a different reference goes through the refSf parameter, never
+    // through a mutable committed file
     assert(Bench.flushTarget("/root/testdata/sf1", refSf = "sf1")
       == "bench_last.json")
     assert(Bench.flushTarget("/root/testdata/sf0.1", refSf = "sf1")
@@ -32,23 +32,33 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("cohortSlices: each re-baseline cohort is sliced to ITS map, not the file suffix") {
+    // the real file's shape: a string-valued "queries_r15_note" sits
+    // between cohort maps and carries its own {'k': v} text
     val txt =
       """{"note":"x","queries":{"q1":1.0,"q2":2.0},
         |"queries_r13":{"q1":0.9,"q2":1.8,"q3":3.0},
-        |"queries_r14":{"q1":0.8,"q2":1.6,"q3":2.5,"q4":4.0}}""".stripMargin
-    val slices = Bench.cohortSlices(txt).toMap
+        |"queries_r15":{"q1":0.8,"q2":1.6,"q3":2.5,"q4":4.0},
+        |"queries_r15_note":"noise_band {'q1': 0.1}",
+        |"queries_r15b":{"q1":0.7,"q4":3.5},
+        |"queries_r15b_note":"x"}""".stripMargin
+    val slices = Bench.cohortSlices(txt)
+    // two cohorts: the round-1 map and the LAST re-baseline in the file
+    assert(slices.map(_._1) == Seq("queries", "queries_r15b"))
+    val m = slices.toMap
     // the round-1 slice ends where the first re-baseline begins
-    assert(slices("baseline").contains("\"q1\":1.0")
-      && !slices("baseline").contains("queries_r13"))
-    // r13's slice must NOT absorb r14's pairs (the suffix-split bug
-    // this replaces: q1 would have resolved to 0.8, not 0.9)
-    assert(slices("queries_r13").contains("\"q1\":0.9")
-      && !slices("queries_r13").contains("\"q1\":0.8"))
-    assert(slices("queries_r14").contains("\"q4\":4.0"))
-    // a file without the r14 cohort degrades gracefully
-    val old = Bench.cohortSlices(
-      """{"queries":{"q1":1.0},"queries_r13":{"q1":0.9}}""").toMap
-    assert(old.keySet == Set("baseline", "queries_r13"))
+    assert(m("queries").contains("\"q1\":1.0")
+      && !m("queries").contains("queries_r13"))
+    // the latest cohort resolves its own map, not an earlier round's
+    // values (q1 is 0.7, never r15's 0.8) nor the note's text
+    assert(m("queries_r15b").contains("\"q1\":0.7")
+      && !m("queries_r15b").contains("0.8")
+      && !m("queries_r15b").contains("'q1'"))
+    // a file whose last key is a note still resolves the map before it
+    val noteLast = Bench.cohortSlices(
+      """{"queries":{"q1":1.0},"queries_r15":{"q1":0.9},"queries_r15_note":"{'q1': 5.0}"}""")
+    assert(noteLast.map(_._1) == Seq("queries", "queries_r15"))
+    // a file without any re-baseline degrades to the round-1 cohort
+    assert(Bench.cohortSlices("""{"queries":{"q1":1.0}}""").map(_._1) == Seq("queries"))
   }
 
   test("noise_band: per-query repeatability ratios + steady-pass spread (r14 ask #8)") {

@@ -131,7 +131,7 @@ class EntityResolutionSpec extends GraftSpec {
     // for the existing truck name (cluster re-canonicalizes to 3),
     // and a brand-new singleton
     val batch = Seq(9L -> "bbaaa car", 3L -> "zzz truck", 6L -> "qqq bike")
-    val root = java.nio.file.Files.createTempDirectory("graft_er_incr").toString
+    val root = tempDir("er_incr")
     graft.sources.AtomicPublish.publish(spark, root,
       EntityResolution.buildErOutputs(spark, parts(base)))
     EntityResolution.publishErIncrement(spark, root, parts(batch))
@@ -178,8 +178,8 @@ class EntityResolutionSpec extends GraftSpec {
     val b1 = Seq(9L -> "bbaaa car", 3L -> "zzz truck")
     val b2 = Seq(6L -> "qqq bike")
     val b3 = Seq(12L -> "qqr bike")
-    val root = java.nio.file.Files.createTempDirectory("graft_er_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_er_sckpt").toString
+    val root = tempDir("er_stream")
+    val ckpt = tempDir("er_sckpt")
     graft.sources.AtomicPublish.publish(spark, root,
       EntityResolution.buildErOutputs(spark, parts(base)))
     val input = MemoryStream[(Long, String)]

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,4 +21,11 @@ object GraftTestSpark {
 abstract class GraftSpec extends AnyFunSuite {
   lazy val spark: SparkSession = GraftTestSpark.spark
   val sf: String = GraftTestSpark.sf
+
+  /** A fresh dir under this JVM's `graft_spec` scratch root, which
+    * [[TmpRoots]] removes when the JVM exits (and Bench's stale sweep
+    * removes if the JVM was killed). */
+  def tempDir(prefix: String): String = Files.createTempDirectory(
+    Files.createDirectories(Paths.get(TmpRoots.perProcess("graft_spec"))),
+    prefix).toString
 }

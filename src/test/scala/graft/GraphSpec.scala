@@ -229,8 +229,7 @@ class GraphSpec extends GraftSpec {
     val base = pairs(1L -> 10L, 2L -> 20L)
     val b1 = pairs(1L -> 20L, 1L -> 10L) // one new edge + one duplicate
     val b2 = pairs(3L -> 30L, 2L -> 20L) // new customer + duplicate
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_g8_spec").toString
+    val root = tempDir("g8_spec")
     graft.sources.AtomicPublish.publish(spark, root, Seq(
       "co_order" -> base, "ledger" -> Seq.empty[Long].toDF("batch_id")))
     assert(Graph.applyBatch(spark, root, b1, 1L))
@@ -249,10 +248,8 @@ class GraphSpec extends GraftSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_g8_stream").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_g8_sckpt").toString
+    val root = tempDir("g8_stream")
+    val ckpt = tempDir("g8_sckpt")
     graft.sources.AtomicPublish.publish(spark, root, Seq(
       "co_order" -> Seq((1L, 10L)).toDF("c", "sk"),
       "ledger" -> Seq.empty[Long].toDF("batch_id")))
@@ -356,8 +353,7 @@ class GraphSpec extends GraftSpec {
       2L -> 10L, 2L -> 20L, 2L -> 30L,
       3L -> 10L, 3L -> 20L, 3L -> 30L,
       4L -> 10L)
-    val edgeRoot = java.nio.file.Files
-      .createTempDirectory("graft_kcore_edges").toString
+    val edgeRoot = tempDir("kcore_edges")
     graft.sources.AtomicPublish.publish(spark, edgeRoot, Seq(
       "co_order" -> base, "ledger" -> Seq.empty[Long].toDF("batch_id")))
 
@@ -442,5 +438,19 @@ class GraphSpec extends GraftSpec {
       .map(_.getDouble(4)).sum
     assert(math.abs(qOne) < 1e-9, s"trivial partition Q=$qOne")
     assert(qGood > qOne)
+  }
+
+  test("g2's oracle iterates with the host-computed teleport constant") {
+    // DuckDB parsing `1.0 - 0.85` in DECIMAL lands on the OTHER
+    // neighboring double of 0.15 — the oracle must interpolate the
+    // exact double Spark's constant folding produces, and the Spark
+    // plan must use the same shared constant
+    val printed = graft.operators.Graph.OneMinusDamping.toString
+    assert(printed == "0.15000000000000002",
+      s"host 1.0-0.85 printed unexpectedly: $printed")
+    assert(graft.operators.Graph.oracles("g2_pagerank").contains(printed),
+      "g2 oracle must embed the host-computed teleport constant")
+    assert(!graft.operators.Graph.oracles("g2_pagerank").contains("(1.0 - 0.85)"),
+      "g2 oracle must not re-derive the constant in SQL decimal")
   }
 }

@@ -61,7 +61,7 @@ class IncrementalAnnSpec extends GraftSpec {
     Similarity.indexCells(spark, root)
 
   private lazy val root: String = {
-    val r = java.nio.file.Files.createTempDirectory("graft_annincr_spec").toString
+    val r = tempDir("annincr_spec")
     graft.sources.AtomicPublish.publish(spark, r,
       IncrementalAnn.buildAnnOutputs(spark, Similarity.corpusOf(df(base))))
     r
@@ -92,8 +92,7 @@ class IncrementalAnnSpec extends GraftSpec {
     root // force the chained publishes above
     val cells = cellsOf(root)
     val all = Similarity.corpusOf(df(base ++ batch1 ++ batch2))
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_annincr_scratch").toString
+    val scratch = tempDir("annincr_scratch")
     import spark.implicits._
     graft.sources.AtomicPublish.publish(spark, scratch, Seq(
       "centroids" -> cells.toDF("cell_id", "cv", "cn"),

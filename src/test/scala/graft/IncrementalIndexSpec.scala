@@ -60,7 +60,7 @@ class IncrementalIndexSpec extends GraftSpec {
     }.toMap
 
   private lazy val (root, v1Sets, v2Sets, rebuildSets) = {
-    val r = java.nio.file.Files.createTempDirectory("graft_incr_spec").toString
+    val r = tempDir("incr_spec")
     val v1 = Incremental.buildOutputs(spark, df(baseDocs))
     val v1Collected = outputsAsSets(v1)
     graft.sources.AtomicPublish.publish(spark, r, v1)
@@ -126,8 +126,8 @@ class IncrementalIndexSpec extends GraftSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_incr_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_incr_ckpt").toString
+    val root = tempDir("incr_stream")
+    val ckpt = tempDir("incr_ckpt")
     graft.sources.AtomicPublish.publish(spark, root,
       Incremental.buildOutputs(spark, df(baseDocs)))
     // three arrivals: the cap-crossing batch, a near-dup of a base doc,
@@ -283,7 +283,7 @@ class IncrementalIndexSpec extends GraftSpec {
     val base = Seq((100L, "a b c d e"), (101L, "a b c x y"))
     val b1 = Seq((50L, "a b c d e"), (102L, "p q r s"))
     val b2 = Seq((103L, "p q r z"))
-    val r = java.nio.file.Files.createTempDirectory("graft_novelty").toString
+    val r = tempDir("novelty")
     graft.sources.AtomicPublish.publish(spark, r, Seq(
       "firsts" -> Incremental.noveltyFirstsOf(df(base)),
       "ledger" -> Seq.empty[Long].toDF("batch_id")))
@@ -302,5 +302,23 @@ class IncrementalIndexSpec extends GraftSpec {
     assert(got(abc) == 50L, "out-of-order batch id must take the first")
     assert(graft.sources.AtomicPublish.readOutput(spark, r, "ledger")
       .collect().map(_.getLong(0)).sorted.sameElements(Array(1L, 2L)))
+  }
+
+  test("d14's oracle actually rewrote its d9 anchor (batch filter present)") {
+    val sql = graft.operators.Incremental.oracles("d14_incremental_passages")
+    assert(sql.contains(
+      s"WHERE occ.doc_id % ${graft.operators.Incremental.BatchMod} = 0"),
+      "d14 oracle must carry the batch-slice filter")
+  }
+
+  test("t29's oracle comes from the parameterized t27 builder") {
+    val t29 = graft.operators.Incremental.oracles("t29_incremental_novelty")
+    assert(t29.contains(
+      s"WHERE s.doc_id % ${graft.operators.Incremental.BatchMod} = 0"),
+      "t29 oracle must carry the batch-slice predicate")
+    // unparameterized builder IS t27's shipped oracle — shared
+    // statistics CTEs by construction, not by string match
+    assert(graft.operators.TextAnalysis.oracles("t27_novelty") ==
+      graft.operators.TextAnalysis.t27NoveltyOracle(None))
   }
 }

@@ -11,13 +11,7 @@ import org.apache.spark.sql.functions._
   */
 class MigrationsSpec extends GraftSpec {
 
-  private def freshRoot(name: String): String = {
-    val root = s"${sys.props("java.io.tmpdir")}/graft_test/migrations_$name"
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    root
-  }
+  private def freshRoot(name: String): String = s"${tempDir("migrations")}/$name"
 
   test("migrate applies the full list once; the ledger records per-version audit stats") {
     val root = freshRoot("full")

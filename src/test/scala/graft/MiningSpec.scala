@@ -322,8 +322,7 @@ class MiningSpec extends GraftSpec {
     val batch1 = op(200L -> 1L, 200L -> 2L)
     // b2 adds a fresh pair (3,4) once (stays sub-floor)
     val batch2 = op(300L -> 3L, 300L -> 4L)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_b3_spec").toString
+    val root = tempDir("b3_spec")
     graft.sources.AtomicPublish.publish(spark, root,
       Mining.basketOutputs(spark, base))
     assert(Mining.applyBatch(spark, root, batch1, 1L))
@@ -355,10 +354,8 @@ class MiningSpec extends GraftSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_b3_stream").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_b3_sckpt").toString
+    val root = tempDir("b3_stream")
+    val ckpt = tempDir("b3_sckpt")
     val base = Seq(100L -> 1L, 100L -> 2L).toDF("l_orderkey", "l_partkey")
     graft.sources.AtomicPublish.publish(spark, root,
       Mining.basketOutputs(spark, base))
@@ -455,5 +452,21 @@ class MiningSpec extends GraftSpec {
     val halfMde = (Mining.MdeZalpha + Mining.MdeZbeta) *
       math.sqrt(2.0 * sd0 * sd0 / (m0 / 2).toDouble)
     assert(halfMde > mde0, "halving traffic must raise the MDE")
+  }
+
+  test("f4: a singleton category emits NULL LOO bounds (the 0/0 cross-engine guard)") {
+    import spark.implicits._
+    val dir = tempDir("f4_singleton")
+    Seq(
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L, "lonely", 5.0, ""),
+      (2L, java.sql.Timestamp.valueOf("2024-01-01 01:00:00"), 1L, "popular", 1.0, ""),
+      (3L, java.sql.Timestamp.valueOf("2024-01-01 02:00:00"), 2L, "popular", 3.0, ""))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$dir/events.parquet")
+    val rows = graft.operators.Mining.f4TargetEncode(spark, dir).collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert(rows("lonely").isNullAt(rows("lonely").fieldIndex("loo_min")))
+    assert(rows("lonely").isNullAt(rows("lonely").fieldIndex("loo_max")))
+    assert(!rows("popular").isNullAt(rows("popular").fieldIndex("loo_min")))
   }
 }

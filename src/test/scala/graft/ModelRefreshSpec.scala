@@ -44,7 +44,7 @@ class ModelRefreshSpec extends GraftSpec {
     (i, s"000 111 222 333 444 555 666 777 88$i", (i % 2).toDouble))
 
   private lazy val qcRoot: String = {
-    val r = java.nio.file.Files.createTempDirectory("graft_qc_refresh").toString
+    val r = tempDir("qc_refresh")
     AtomicPublish.publish(spark, r,
       Quality.buildQcOutputs(spark, docs(base)) :+
         ModelRegistry.metaOutput(spark, -1L, 0.0, refreshed = false))
@@ -52,7 +52,7 @@ class ModelRefreshSpec extends GraftSpec {
   }
 
   private lazy val bpeRoot: String = {
-    val r = java.nio.file.Files.createTempDirectory("graft_bpe_refresh").toString
+    val r = tempDir("bpe_refresh")
     AtomicPublish.publish(spark, r,
       TextAnalysis.buildBpeOutputs(spark, docs(base)) :+
         ModelRegistry.metaOutput(spark, -1L, 0.0, refreshed = false))

@@ -316,4 +316,38 @@ class ProfilingSpec extends GraftSpec {
     rows.foreach(r => assert(r.getAs[Long]("ndv") >= 1L &&
       r.getAs[Double]("lo") <= r.getAs[Double]("hi")))
   }
+
+  test("prof10 counts NULL as a value on a nullable profiled column") {
+    import spark.implicits._
+    val dir = tempDir("prof10_null")
+    // minimal corpus: only the profiled columns are read
+    Seq("A", "B", "A").toDF("c_mktsegment").write.parquet(s"$dir/customer.parquet")
+    Seq("P1").toDF("o_orderpriority").write.parquet(s"$dir/orders.parquet")
+    Seq("R").toDF("l_returnflag").write.parquet(s"$dir/lineitem.parquet")
+    Seq(Some("en"), Some("de"), None, None)
+      .toDF("lang").write.parquet(s"$dir/documents.parquet")
+    val rows = graft.operators.Profiling.prof10Entropy(spark, dir).collect()
+      .map(r => r.getString(0) -> r).toMap
+    val langRow = rows("documents.lang")
+    assert(langRow.getLong(langRow.fieldIndex("n_distinct")) == 3L,
+      "NULL must count as a value: {en, de, NULL} -> ndv 3")
+    assert(langRow.getLong(langRow.fieldIndex("n_rows")) == 4L)
+    // and the oracle's ndv expression carries the matching NULL term
+    val sql = graft.operators.Profiling.oracles("prof10_entropy")
+    assert(sql.contains("MAX(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)"),
+      "prof10 oracle must add the NULL indicator to COUNT(DISTINCT)")
+  }
+
+  test("prof11's sketch cuts are an explicit materialization, not exchange reuse") {
+    val x = Tables.lineitem(spark, sf).select(col("l_extendedprice").as("v"))
+    val pinned = graft.operators.Profiling.prof11PinnedCuts(x, 32)
+    // localCheckpoint rewrites the plan to a materialized RDD scan:
+    // every consumer reads ONE committed sketch draw even with
+    // exchange reuse disabled or AQE replanning the consumers apart
+    assert(pinned.queryExecution.analyzed.getClass.getSimpleName
+      .contains("LogicalRDD"),
+      s"pinned cuts must scan a materialized RDD, got: ${pinned.queryExecution.analyzed}")
+    val cuts = pinned.collect()(0).getSeq[Double](0)
+    assert(cuts.length == 31 && cuts == cuts.sorted)
+  }
 }

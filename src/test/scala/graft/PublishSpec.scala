@@ -1,7 +1,6 @@
 package graft
 
 import graft.sources.{Artifact, AtomicPublish}
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -29,7 +28,7 @@ class PublishSpec extends GraftSpec {
     AtomicPublish.readOutput(spark, root, "stats").collect().head.getString(1))
 
   test("both outputs flip together; a crash between writes leaves the old pair visible") {
-    val root = Files.createTempDirectory(Files.createDirectories(java.nio.file.Paths.get(graft.TmpRoots.perProcess("graft_publish_spec"))), "p1_").toString
+    val root = tempDir("p1_")
     assert(AtomicPublish.currentVersion(spark, root).isEmpty)
 
     val v1 = AtomicPublish.publish(spark, root,
@@ -62,7 +61,7 @@ class PublishSpec extends GraftSpec {
   }
 
   test("a crash after staging ALL outputs but before the pointer swap is invisible") {
-    val root = Files.createTempDirectory(Files.createDirectories(java.nio.file.Paths.get(graft.TmpRoots.perProcess("graft_publish_spec"))), "p2_").toString
+    val root = tempDir("p2_")
     AtomicPublish.publish(spark, root,
       Seq("corpus" -> corpusOf("a"), "stats" -> statsOf("a")))
     AtomicPublish.stage(spark, root, "v2", "corpus", corpusOf("b"))
@@ -74,7 +73,7 @@ class PublishSpec extends GraftSpec {
   }
 
   test("time travel: superseded versions read back unchanged; vacuum keepLast is the horizon") {
-    val root = Files.createTempDirectory(Files.createDirectories(java.nio.file.Paths.get(graft.TmpRoots.perProcess("graft_publish_spec"))), "tt_").toString
+    val root = tempDir("tt_")
     AtomicPublish.publish(spark, root, Seq("corpus" -> corpusOf("old")))
     AtomicPublish.publish(spark, root, Seq("corpus" -> corpusOf("new")))
     // the v2 commit must not disturb the retained v1 bytes

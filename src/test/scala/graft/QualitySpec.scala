@@ -479,4 +479,23 @@ class QualitySpec extends GraftSpec {
         "l can never exceed k")
     }
   }
+
+  test("priv2's noise moves with the release seed (DP claim scoped to sealed seeds)") {
+    val gate = graft.operators.Quality.priv2DpRelease(spark, sf)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    // the public gate seed is the default — re-runnable by contract
+    val explicit = graft.operators.Quality
+      .priv2DpReleaseSeeded(spark, sf, graft.operators.Quality.DpGateSeed)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(gate == explicit)
+    // a sealed seed draws DIFFERENT noise on every bucket: without
+    // the seed the analyst cannot recompute-and-subtract it, which is
+    // what makes the epsilon-DP claim real in production
+    val sealedRun = graft.operators.Quality
+      .priv2DpReleaseSeeded(spark, sf, "sealed-release-2026-08-16")
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(gate.keySet == sealedRun.keySet)
+    assert(gate.keys.forall(k => gate(k) != sealedRun(k)),
+      "every bucket's noise must move with the seed")
+  }
 }

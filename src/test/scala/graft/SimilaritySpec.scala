@@ -423,4 +423,34 @@ class SimilaritySpec extends GraftSpec {
       assert(got(q).getAs[Double]("recall") == hits.toDouble / TopK)
     }
   }
+
+  test("n11's oracle interpolates the host-computed (1-λ) double, never SQL decimal") {
+    // DuckDB types `1 - 0.7` as DECIMAL(12,1) whose double cast is
+    // 0.29999999999999998890 — 1 ulp BELOW the kernel's IEEE
+    // 1 - 0.7 = 0.30000000000000004441; on near-tie data that flips
+    // the greedy argmax (the g2 teleport-constant lesson, applied
+    // to the MMR plane)
+    val printed = (1 - graft.operators.Similarity.MmrLambda).toString
+    assert(printed == "0.30000000000000004",
+      s"host 1-0.7 printed unexpectedly: $printed")
+    val sql = graft.operators.Similarity.oracles("n11_mmr_rerank")
+    assert(sql.contains(printed),
+      "n11 oracle must embed the host-computed redundancy weight")
+    assert(!sql.contains("(1 - 0.7)"),
+      "n11 oracle must not re-derive (1-λ) in SQL decimal")
+  }
+
+  test("n4's quantized-cosine folds sum through decimal(38,0) on both engines") {
+    // a plain long sum of 1e9-scale quanta wraps past ~9.2e9
+    // rows/cell in non-ANSI Spark while the DuckDB oracle's SUM
+    // widens to HUGEINT — the silent-vs-loud class obt2 closed
+    val plan = graft.operators.Similarity.n4CellAudit(spark, sf)
+      .queryExecution.analyzed.toString
+    assert(plan.contains("cast(sq_own") && plan.contains("decimal(38,0)"),
+      "n4 must lift the quantized sums to decimal before folding")
+    val sql = graft.operators.Similarity.oracles("n4_cell_audit")
+    assert(sql.contains("SUM(CAST(sq_own AS DECIMAL(38,0)))") &&
+      sql.contains("SUM(CAST(sq_oth AS DECIMAL(38,0)))"),
+      "n4 oracle must mirror the decimal lift")
+  }
 }

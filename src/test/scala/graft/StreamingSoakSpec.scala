@@ -15,7 +15,7 @@ import graft.streaming.StreamingSoak
 class StreamingSoakSpec extends GraftSpec {
 
   test("sf0.1 file-source soak: join→window pipeline streams ≡ batch across micro-batches") {
-    val work = java.nio.file.Files.createTempDirectory("graft_soak").toString
+    val work = tempDir("soak")
     val r = StreamingSoak.run(spark, "/root/testdata/sf0.1", work)
     assert(r.matched, s"stream result != batch result: $r")
     assert(r.batches >= 8, s"expected a many-micro-batch soak, got: $r")
@@ -35,7 +35,7 @@ class StreamingSoakSpec extends GraftSpec {
     // each publishing version N+1 through the exactly-once ledger —
     // and requires every committed output to equal a from-scratch
     // rebuild of the whole family over the full corpus.
-    val work = java.nio.file.Files.createTempDirectory("graft_soak_idx").toString
+    val work = tempDir("soak_idx")
     val r = StreamingSoak.indexSoak(spark, "/root/testdata/sf0.1", work)
     assert(r.matched, s"incremental snapshot != rebuild: $r")
     assert(r.batches >= 8, s"expected a many-micro-batch soak: $r")

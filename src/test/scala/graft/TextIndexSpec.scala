@@ -90,8 +90,7 @@ class TextIndexSpec extends GraftSpec {
     val a = docs(1L -> "red fox runs", 2L -> "blue fox sleeps")
     val b = docs(10L -> "red wolf runs fast", 11L -> "green owl")
     val c = docs(20L -> "blue wolf red fox")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ix_incr_spec").toString
+    val root = tempDir("ix_incr_spec")
     graft.sources.AtomicPublish.publish(spark, root,
       TextIndex.buildIndexOutputs(spark, a))
     assert(TextIndex.applyBatch(spark, root, b, 1L))
@@ -123,8 +122,8 @@ class TextIndexSpec extends GraftSpec {
     val b1 = Seq(10L -> "red wolf runs fast")
     val b2 = Seq(11L -> "green owl", 12L -> "blue wolf")
     val b3 = Seq(20L -> "red owl runs")
-    val root = java.nio.file.Files.createTempDirectory("graft_ix_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ix_sckpt").toString
+    val root = tempDir("ix_stream")
+    val ckpt = tempDir("ix_sckpt")
     graft.sources.AtomicPublish.publish(spark, root,
       TextIndex.buildIndexOutputs(spark, docs(base)))
     val input = MemoryStream[(Long, String)]
@@ -162,8 +161,7 @@ class TextIndexSpec extends GraftSpec {
       3L -> "join join join",
       4L -> "nothing relevant at all",
       5L -> "fast").toDF("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ix5_spec").toString
+    val root = tempDir("ix5_spec")
     graft.sources.AtomicPublish.publish(spark, root,
       TextIndex.buildIndexOutputs(spark, docs))
     val got = TextIndex.bm25From(spark, root).collect()

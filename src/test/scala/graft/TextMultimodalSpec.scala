@@ -602,7 +602,7 @@ class TextMultimodalSpec extends GraftSpec {
       (200L to 219L).map(i => i -> s"filler media $i")
     val batch = (300L to 306L).map(i => i -> "exact media payload X") ++
       Seq(400L -> "fresh media payload Y", 401L -> "fresh media payload Y")
-    val root = java.nio.file.Files.createTempDirectory("graft_m7").toString
+    val root = tempDir("m7")
     graft.sources.AtomicPublish.publish(spark, root,
       Multimodal.buildMediaIncrOutputs(spark, docs(base)))
     val v1Clusters = graft.sources.AtomicPublish
@@ -655,8 +655,8 @@ class TextMultimodalSpec extends GraftSpec {
     val b1 = Seq(100L -> "stream payload A", 101L -> "stream payload A")
     val b2 = Seq(102L -> "stream payload A")
     val b3 = Seq(200L -> "stream payload B", 201L -> "stream payload B")
-    val root = java.nio.file.Files.createTempDirectory("graft_m7_stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_m7_sckpt").toString
+    val root = tempDir("m7_stream")
+    val ckpt = tempDir("m7_sckpt")
     graft.sources.AtomicPublish.publish(spark, root,
       Multimodal.buildMediaIncrOutputs(spark, docs(base)))
     val input = MemoryStream[(Long, String)]
@@ -740,7 +740,7 @@ class TextMultimodalSpec extends GraftSpec {
     // aggregate form got this implicitly, the counts⋈novel left join
     // must get it explicitly
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_t27_zero").toString
+    val dir = tempDir("t27_zero")
     Seq((0L, "a b c d e"), // owns all 3 of its shingles
       (1L, "a b c d e"), // exact dup: zero novel
       (2L, "a b c x y z")) // "a b c" seen, the other 3 novel

@@ -679,4 +679,31 @@ class TimeSeriesSpec extends GraftSpec {
     }.toDF("event_type", "hr", "v")
     assert(TimeSeries.lttbOf(short).collect().length == 5)
   }
+
+  test("ts9/ts11: int64 quantizers round half-boundaries deterministically and outputs sit on the grid") {
+    import spark.implicits._
+    // exact half-boundary doubles where round(double, n) is the known
+    // cross-engine hazard: floor(x·1eN + 0.5)/1eN is a fixed IEEE
+    // expression with one answer
+    val got = Seq(0.00005, 0.00015, -0.00005, 1.23455).toDF("x")
+      .select(graft.operators.TimeSeries.q4(col("x")).as("q4"),
+        graft.operators.TimeSeries.q6(col("x") / 100).as("q6"))
+      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
+    assert(got(0)._1 == 0.0001 && got(0)._2 == 1.0e-6) // halves round UP
+    assert(got(2)._1 == 0.0) // floor(-0.5+0.5)=0, not -0.0001
+    // and the shipped outputs are already ON the quantized grid — no
+    // unquantized double escapes the output boundary
+    def onGrid(v: Double, scale: Double): Boolean =
+      v.isNaN || math.floor(v * scale + 0.5) / scale == v
+    graft.operators.TimeSeries.ts9RollingZscore(spark, sf).collect()
+      .foreach { r =>
+        val i = r.fieldIndex("z")
+        if (!r.isNullAt(i)) assert(onGrid(r.getDouble(i), 1e4), s"off-grid z in $r")
+      }
+    graft.operators.TimeSeries.ts11LinearInterp(spark, sf).collect()
+      .foreach { r =>
+        val i = r.fieldIndex("value")
+        if (!r.isNullAt(i)) assert(onGrid(r.getDouble(i), 1e6), s"off-grid value in $r")
+      }
+  }
 }

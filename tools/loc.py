@@ -1,13 +1,15 @@
 #!/usr/bin/env python3
 """Track the size of graft's main code and its JVM-global knobs.
 
-Prints two numbers, one per line:
+Prints four numbers, one per line:
 
   main_loc     non-blank, non-comment lines of src/main/scala
                (`//` comments and `/* ... */` blocks, Scaladoc
                included, are stripped; string literals, oracle SQL
                among them, count as code)
   graft_props  `sys.props` reads of `graft.*` keys in src/main
+  graft_env    `sys.env` reads of `SPARK_GRAFT_*` keys in src/main
+  mains        src/main files that define `def main`
 
 Usage: python3 tools/loc.py [repo_root]
 """
@@ -17,6 +19,9 @@ import sys
 
 PROP_READ = re.compile(
     r'sys\.props\s*(?:\.\s*(?:get|getOrElse|contains|apply)\s*)?\(\s*"graft\.')
+ENV_READ = re.compile(
+    r'sys\.env\s*(?:\.\s*(?:get|getOrElse|contains|apply)\s*)?\(\s*"SPARK_GRAFT_')
+MAIN_DEF = re.compile(r'\bdef\s+main\b')
 CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'")
 
 
@@ -70,10 +75,12 @@ def main():
         sum(1 for line in strip_comments(f.read_text("utf-8")).splitlines()
             if line.strip())
         for f in sorted((main_dir / "scala").rglob("*.scala")))
-    props = sum(len(PROP_READ.findall(f.read_text("utf-8")))
-                for f in sorted(main_dir.rglob("*")) if f.is_file())
+    texts = [f.read_text("utf-8")
+             for f in sorted(main_dir.rglob("*")) if f.is_file()]
     print(f"main_loc {loc}")
-    print(f"graft_props {props}")
+    print(f"graft_props {sum(len(PROP_READ.findall(t)) for t in texts)}")
+    print(f"graft_env {sum(len(ENV_READ.findall(t)) for t in texts)}")
+    print(f"mains {sum(1 for t in texts if MAIN_DEF.search(t))}")
 
 
 if __name__ == "__main__":

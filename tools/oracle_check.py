@@ -5,9 +5,12 @@ Reads the Verify output dir (per-query parquet + oracle_sql.json),
 runs each oracle SQL in DuckDB against the sf parquet tables, and
 compares: row count, column names, and sorted-row value hash.
 
+DuckDB spills to a private temp directory that is removed on exit,
+never to `.tmp/` under the working directory.
+
 Usage: tools/oracle_check.py <sfDir> <verifyOutDir>
 """
-import sys, os, json, math
+import sys, os, json, math, tempfile
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -47,8 +50,8 @@ def table_key(rows, cols):
     return sorted(out)
 
 
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
+def main(sf_dir, out_dir, spill_dir):
+    con = duckdb.connect(config={"temp_directory": spill_dir})
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
@@ -132,4 +135,5 @@ def main(sf_dir, out_dir):
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    with tempfile.TemporaryDirectory(prefix="oracle_check_") as spill:
+        sys.exit(main(sys.argv[1], sys.argv[2], spill))
