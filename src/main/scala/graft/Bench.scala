@@ -40,7 +40,7 @@ object Bench {
     Seq("graft_sources", "graft_pipe3_release", "graft_bench_state",
       "graft_stream", "graft_publish_spec", "graft_persist",
       "graft_ann_index", "graft_ann_restart",
-      "graft_scale_state", "graft_spec").foreach(TmpRoots.cleanStale)
+      "graft_scale_state", "graft_spec", "graft_hive").foreach(TmpRoots.cleanStale)
     TmpRoots.cleanLegacy("graft_persist_state\\d+", "graft_publish\\d+",
       "graft_publish2\\d+", "graft_publish_tt\\d+", "graft_test",
       "graft_stream_(ckpt|restart|upsert)_\\d+(_ckpt)?", "graft_stream_src")

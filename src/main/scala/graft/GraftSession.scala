@@ -55,6 +55,11 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", s"$stateDir/warehouse")
       .config("spark.hadoop.javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$stateDir/metastore_db;create=true")
+      // each Hive client session makes a `<session id>_resources` dir
+      // (default: straight in java.io.tmpdir, never removed); keep them
+      // under a per-process root that is deleted at JVM exit
+      .config("spark.hadoop.hive.downloaded.resources.dir",
+        s"${TmpRoots.perProcess("graft_hive")}/$${hive.session.id}_resources")
       .config("spark.ui.enabled", "false")
 
   /** Standard local session (the driver mains and tests use this). */

@@ -18,20 +18,31 @@ object Tables {
 
   /** Session-scoped relation cache. Every `spark.read.parquet` call
     * re-lists the directory and re-reads the parquet footer for schema
-    * inference — driver-side work a metastore-backed catalog does ONCE
-    * per table. The sf dirs are immutable corpus snapshots (the
-    * ScaleCheck replicas are build-once behind a `_BUILT` marker), so
-    * caching the resolved relation per (session, dir, table) is
-    * exactly the metadata caching a catalog table gives on a cluster;
-    * mutable scratch dirs (sinks, publishes) never come through
-    * [[load]]. Keyed on the session because plans are session-bound;
-    * sessions per JVM are few and bounded, so strong keys are fine. */
+    * inference — driver-side work (a Spark job, for the footer read)
+    * that a metastore-backed catalog does ONCE per table. Only
+    * immutable parquet paths come through here: the sf dirs are
+    * immutable corpus snapshots (the ScaleCheck replicas are
+    * build-once behind a `_BUILT` marker), and a committed
+    * [[graft.sources.AtomicPublish]] version dir is never rewritten
+    * (its vacuum calls [[evict]]). Caching the resolved relation per
+    * (session, path) is exactly the metadata caching a catalog table
+    * gives on a cluster; mutable scratch dirs (sinks, staging) never
+    * come through [[parquet]]. Keyed on the session because plans are
+    * session-bound; sessions per JVM are few and bounded, so strong
+    * keys are fine. */
   private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** The cached relation of an immutable parquet path. */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    relationCache.computeIfAbsent((spark, path), key => key._1.read.parquet(key._2))
+
+  /** Drop every cached relation at or under `dir` (it is being deleted). */
+  private[graft] def evict(dir: String): Unit =
+    relationCache.keySet.removeIf(k => k._2 == dir || k._2.startsWith(s"$dir/"))
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    relationCache.computeIfAbsent((spark, dir, name),
-      key => key._1.read.parquet(s"$dir/$name.parquet"))
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

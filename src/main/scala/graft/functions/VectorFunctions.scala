@@ -19,10 +19,6 @@ object VectorFunctions {
   def dot(a: String, b: String): Column =
     expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), CAST(0 AS DOUBLE), (acc, v) -> acc + v)")
 
-  /** L2 norm. */
-  def l2norm(a: String): Column =
-    sqrt(expr(s"aggregate($a, CAST(0 AS DOUBLE), (acc, x) -> acc + x * x)"))
-
   /** Native codegen'd dot product (a flat primitive loop — see
     * [[org.apache.spark.sql.graft.DotProduct]]); use wherever a dot
     * product runs per candidate pair. Bit-identical to `dot`. */

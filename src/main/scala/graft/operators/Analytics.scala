@@ -1224,8 +1224,8 @@ object Analytics {
   /** j5: bloom-prefiltered join — the runtime-filter idiom for a
     * selective dim predicate whose key set is too big to broadcast as
     * a hash set but whose BLOOM FILTER is a few KB: build the filter
-    * from the filtered orders side (driver-side, bounded: the sketch
-    * is fixed-size regardless of row count), embed it as a literal,
+    * from the filtered orders side (fixed-size regardless of row
+    * count) as a `bloom_filter_agg` scalar subquery inside the plan,
     * and drop non-matching lineitem rows AT THE SCAN, before they pay
     * the shuffle. False positives don't affect correctness — the real
     * equi-join still runs (so the full SQL oracle applies); they only
@@ -1237,15 +1237,12 @@ object Analytics {
     val urgent = Tables.orders(s, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_custkey"))
-    // fixed-size sketch of the filtered key set: bounded driver-side
-    // metadata (~few hundred KB at 1% fpp), NOT the key set itself
-    val bloom = urgent.stat.bloomFilter("o_orderkey", 200000, 0.01)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
+    // fixed-size sketch of the filtered key set (~240 KB at 1% fpp),
+    // NOT the key set itself; built and probed at execution time
     val prefiltered = Tables.lineitem(s, dir)
       .select(col("l_orderkey"), col("l_extendedprice"))
-      .filter(org.apache.spark.sql.graft.BloomFilters.mightContain(
-        bos.toByteArray, col("l_orderkey")))
+      .filter(org.apache.spark.sql.graft.Sketches.mightContain(
+        urgent.select(col("o_orderkey")), 200000, 0.01, col("l_orderkey")))
     prefiltered.join(urgent, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_items"),
@@ -1363,8 +1360,6 @@ object Analytics {
   // (r15 opt: j6's trailing global orderBy dropped — the gate hash is
   // order-insensitive, so the range exchange over the session frame
   // was pure cost; guide §2.4.)
-
-  val SketchDays = 7 // rollup window for a11
 
   /** a11: sketch rollup table — the incremental-aggregation idiom for
     * COUNT(DISTINCT) over arbitrary windows: materialize ONE tiny HLL

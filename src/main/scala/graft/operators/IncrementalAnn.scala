@@ -190,23 +190,6 @@ object IncrementalAnn {
     } else false
   }
 
-  /** Streaming ingest endpoint for the vector plane — the same
-    * foreachBatch + ledger shape as row 249's text-plane maintenance:
-    * each micro-batch of arriving (vec_id, embedding) rows publishes
-    * version N+1; readers always probe a committed snapshot; a crash
-    * replay is refused by the ledger. */
-  def streamingAnnMaintenance(vecs: DataFrame, root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        applyBatch(batch.sparkSession, root, batch.toDF(), id)
-        ()
-      }
-      .start()
-
   /** Build v1 over the base slice, then incrementally publish v2
     * covering base+batch — both under one durable fence, so the n17
     * probe always reads the post-ingest snapshot. Records the n17

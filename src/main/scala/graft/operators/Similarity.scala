@@ -1091,35 +1091,34 @@ object Similarity {
     * dedup / visualization of a training corpus. Two-phase plan, both
     * phases scale-safe: (1) the one-pass Gram reduction above; (2) the
     * projection yⱼ = pⱼ·(x − μ) as a pure map-side select — each
-    * component is a native codegen'd dot against a PLAN-LITERAL
-    * eigenvector with the constant pⱼ·μ folded in, so the projection
-    * adds zero shuffles and ships a few KB of literals to every
-    * executor. FULL hash oracle since r15 (r14 ask #3b): the
-    * eigensolve stays engine-side but its RESULT — per-component
-    * direction p and the precomputed shift p·μ — is published as a
-    * committed `pca_model` artifact ([[ensurePcaModel]]), so the
-    * DuckDB oracle replays the zero-shuffle projection from the
-    * version-resolved parquet (list_dot_product is the same
-    * left-to-right fold as the native kernel loop — the PQ-LUT
-    * precedent); SimilaritySpec additionally checks orthonormality,
-    * the projected-variance≍eigenvalue identity, and PCA's variance
-    * optimality vs coordinate axes. */
+    * component is a native codegen'd dot against its eigenvector,
+    * read from ONE scalar subquery over the committed model (a sorted
+    * array of (j, p, shift = pⱼ·μ)), so the projection adds zero
+    * shuffles and building the plan runs no job. FULL hash oracle
+    * since r15 (r14 ask #3b): the eigensolve stays engine-side but
+    * its RESULT — per-component direction p and the precomputed
+    * shift p·μ — is published as a committed `pca_model` artifact
+    * ([[ensurePcaModel]]), so the DuckDB oracle replays the
+    * zero-shuffle projection from the version-resolved parquet
+    * (list_dot_product is the same left-to-right fold as the native
+    * kernel loop — the PQ-LUT precedent); SimilaritySpec additionally
+    * checks orthonormality, the projected-variance≍eigenvalue
+    * identity, and PCA's variance optimality vs coordinate axes. */
   def n9PcaProject(s: SparkSession, dir: String): DataFrame = {
     val root = ensurePcaModel(s, dir)
-    // bounded collect: PcaK rows × (dim+2) doubles — the model, not data
+    // the model, not data: PcaK structs sorted by j, so component j is
+    // element j (Spark reuses the one subquery across the references)
     val comps = graft.sources.AtomicPublish.readOutput(s, root, "components")
-      .select(col("j"), col("p"), col("shift")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_._1)
+      .agg(sort_array(collect_list(struct(col("j"), col("p"), col("shift"))))).scalar()
     // 1e-6 grid via the fixed IEEE floor-quantizer, not round():
     // round(double, n) re-derives the decimal boundary differently
     // per engine; floor(x·1e6 + 0.5)/1e6 has ONE answer in both
-    val projCols = comps.map { case (j, p, shift) =>
+    val projCols = (0 until PcaK).map { j =>
       (floor((org.apache.spark.sql.graft.ArrayMathExpr.dotNative(
-        col("v"), typedlit(p)) - lit(shift)) * lit(1e6) + lit(0.5))
+        col("v"), comps(j)("p")) - comps(j)("shift")) * lit(1e6) + lit(0.5))
         .cast("double") / lit(1e6)).as(s"pc$j")
     }
-    corpus(s, dir).select(col("vec_id") +: projCols.toSeq: _*)
+    corpus(s, dir).select(col("vec_id") +: projCols: _*)
       .orderBy("vec_id")
   }
 

@@ -135,24 +135,22 @@ object TextAnalysis {
 
   /** t7: Count-Min-Sketch heavy hitters. The CMS is built
     * distributedly (mergeable sketch, one pass, fixed memory) with a
-    * fixed seed; the candidate set is the exact top-20 tokens, and the
-    * output pairs each candidate with its CMS estimate. CMS guarantees
-    * estimate ≥ true count, within εN with high probability — the
-    * ScalaTest asserts both bounds. rows-only (sketch internals are
-    * engine-specific). */
+    * fixed seed, as a `count_min_sketch` scalar subquery; the
+    * candidate set is the exact top-20 tokens, and each candidate's
+    * CMS estimate is read in-plan from the subquery's bytes. CMS
+    * guarantees estimate ≥ true count, within εN with high
+    * probability — the ScalaTest asserts both bounds. rows-only
+    * (sketch internals are engine-specific). */
   def t7HeavyHitters(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val toks = Tables.documents(s, dir)
       .select(explode(
         org.apache.spark.sql.graft.WordNgramsExpr.wordNgrams(col("text"), 1))
         .as("tok"))
-    val cms = toks.stat.countMinSketch(col("tok"), eps = 0.0005,
-      confidence = 0.99, seed = 42)
-    val top = toks.groupBy(col("tok")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("tok").asc).limit(20)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    top.map { case (t, n) => (t, n, cms.estimateCount(t)) }.toSeq
-      .toDF("tok", "exact_n", "cms_est")
+    val cms = toks.agg(count_min_sketch(col("tok"), lit(0.0005), lit(0.99), lit(42))).scalar()
+    toks.groupBy(col("tok")).agg(count(lit(1)).as("exact_n"))
+      .orderBy(col("exact_n").desc, col("tok").asc).limit(20)
+      .select(col("tok"), col("exact_n"),
+        org.apache.spark.sql.graft.Sketches.cmsEstimate(cms, col("tok")).as("cms_est"))
       .orderBy(col("exact_n").desc, col("tok").asc)
   }
 

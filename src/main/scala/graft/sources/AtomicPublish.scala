@@ -42,23 +42,36 @@ object AtomicPublish {
     if (!ctx.util.exists(p)) None
     else {
       val in = ctx.open(p)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim)
-      } finally in.close()
+      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
     }
   }
 
   /** Committed version as a number; a corrupted/unparseable pointer is
     * treated as no-commit rather than thrown on, so a damaged pointer
-    * file degrades to "republish from v1" instead of wedging every
+    * file degrades to "no committed version" instead of wedging every
     * caller (publish, vacuum, diff) on a NumberFormatException. */
   private def currentVersionNum(s: SparkSession, root: String): Option[Long] =
     currentVersion(s, root).flatMap(_.stripPrefix("v").toLongOption)
 
+  /** The next version lies above the pointer AND above every existing
+    * `versions/vN` dir, so a publish never rewrites a version dir: not
+    * after a corrupt pointer (which would restart at v1 under v1's
+    * readers), nor over an aborted staging. Committed version dirs are
+    * therefore immutable, which is what lets [[readOutput]] cache their
+    * relations. */
   private def nextVersion(s: SparkSession, root: String): String =
-    "v" + (currentVersionNum(s, root).getOrElse(0L) + 1)
+    "v" + ((versionDirs(s, root).flatMap(_._2) ++ currentVersionNum(s, root))
+      .maxOption.getOrElse(0L) + 1)
+
+  /** Every dir under `versions/` (committed, superseded or staged) with its
+    * version number, if the name parses as one. */
+  private def versionDirs(s: SparkSession, root: String): Seq[(Path, Option[Long])] = {
+    val versions = new Path(s"$root/versions")
+    val fs = versions.getFileSystem(s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(versions)) Nil
+    else fs.listStatus(versions).toSeq.map(st =>
+      st.getPath -> st.getPath.getName.stripPrefix("v").toLongOption)
+  }
 
   /** Stage one output of an uncommitted version (invisible until
     * [[commit]]). */
@@ -119,12 +132,13 @@ object AtomicPublish {
     v
   }
 
-  /** Read one output of the COMMITTED version — never a staging dir. */
-  def readOutput(s: SparkSession, root: String, name: String): DataFrame = {
-    val v = currentVersion(s, root).getOrElse(
-      throw new IllegalStateException(s"no committed version under $root"))
-    s.read.parquet(s"$root/versions/$v/$name")
-  }
+  /** Read one output of the COMMITTED version — never a staging dir.
+    * The version dir is immutable, so its relation comes from the
+    * session's relation cache ([[graft.Tables.parquet]]): only the
+    * first read of a version pays the listing and schema-inference job. */
+  def readOutput(s: SparkSession, root: String, name: String): DataFrame =
+    readOutputAt(s, root, currentVersion(s, root).getOrElse(
+      throw new IllegalStateException(s"no committed version under $root")), name)
 
   /** TIME TRAVEL: read one output of a specific RETAINED version (≤
     * the committed one and not yet vacuumed) — immutable version dirs
@@ -134,7 +148,7 @@ object AtomicPublish {
     * never-committed version fails on the missing path. */
   def readOutputAt(s: SparkSession, root: String, version: String,
       name: String): DataFrame =
-    s.read.parquet(s"$root/versions/$version/$name")
+    graft.Tables.parquet(s, s"$root/versions/$version/$name")
 
   /** GC with a retention window: keep the `keepLast` most recent
     * COMMITTED versions (time-travel horizon); drop everything else —
@@ -155,14 +169,11 @@ object AtomicPublish {
     require(keepLast >= 1,
       s"vacuum(keepLast=$keepLast) would delete the committed version")
     val cur = currentVersionNum(s, root)
-    val versions = new Path(s"$root/versions")
-    val fs = versions.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(versions)) fs.listStatus(versions).foreach { st =>
-      val keep = cur.exists { c =>
-        val n = st.getPath.getName.stripPrefix("v").toLongOption
-        n.exists(v => v <= c && v > c - keepLast)
+    versionDirs(s, root).foreach { case (dir, n) =>
+      if (!cur.exists(c => n.exists(v => v <= c && v > c - keepLast))) {
+        graft.Tables.evict(s"$root/versions/${dir.getName}")
+        dir.getFileSystem(s.sparkContext.hadoopConfiguration).delete(dir, true)
       }
-      if (!keep) fs.delete(st.getPath, true)
     }
   }
 }

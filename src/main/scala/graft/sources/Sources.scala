@@ -1113,18 +1113,17 @@ object Sources {
     * the versions differ by partition directories, not rewrites. */
   def k10TimeTravel(s: SparkSession, dir: String): DataFrame = {
     val root = tmp("k10_timetravel")
-    // fresh root each run → version numbers are deterministic
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
     val daily = Tables.events(s, dir)
       .groupBy(date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"))
     val cutoff = lit(TimeTravelCutoff).cast("timestamp")
-    AtomicPublish.publish(s, root,
+    // a re-run publishes two NEW versions (committed version dirs are
+    // never rewritten) and keeps only this run's pair
+    val old = AtomicPublish.publish(s, root,
       Seq("daily" -> daily.filter(col("day") < cutoff)))
     AtomicPublish.publish(s, root, Seq("daily" -> daily))
+    AtomicPublish.vacuum(s, root, keepLast = 2)
     def digest(df: DataFrame, v: String): DataFrame =
       df.agg(count(lit(1)).as("n_days"),
         sum(col("n_events")).as("total_events"),
@@ -1132,7 +1131,7 @@ object Sources {
         Cols.fmtDate(max(col("day"))).as("max_day"))
         .select(lit(v).as("version"), col("n_days"), col("total_events"),
           col("total_users"), col("max_day"))
-    digest(AtomicPublish.readOutputAt(s, root, "v1", "daily"), "v1")
+    digest(AtomicPublish.readOutputAt(s, root, old, "daily"), "v1")
       .union(digest(AtomicPublish.readOutput(s, root, "daily"), "v2"))
       .orderBy("version")
   }
@@ -1153,18 +1152,16 @@ object Sources {
     * added. */
   def k11VersionDiff(s: SparkSession, dir: String): DataFrame = {
     val root = tmp("k11_versiondiff")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath)) fs.delete(rootPath, true)
     def daily(ev: DataFrame): DataFrame = ev
       .groupBy(date_trunc("day", col("ts")).as("day"))
       .agg(count(lit(1)).as("n_events"))
     val events = Tables.events(s, dir)
     val cutoff = lit(TimeTravelCutoff).cast("timestamp")
-    AtomicPublish.publish(s, root, Seq("daily" -> daily(
+    val old = AtomicPublish.publish(s, root, Seq("daily" -> daily(
       events.filter(col("ts") < cutoff && pmod(col("event_id"), lit(10)) =!= 0))))
     AtomicPublish.publish(s, root, Seq("daily" -> daily(events)))
-    val v1 = AtomicPublish.readOutputAt(s, root, "v1", "daily")
+    AtomicPublish.vacuum(s, root, keepLast = 2) // as k10: this run's pair
+    val v1 = AtomicPublish.readOutputAt(s, root, old, "daily")
       .select(col("day"), col("n_events").as("n_v1"))
     val v2 = AtomicPublish.readOutput(s, root, "daily")
       .select(col("day"), col("n_events").as("n_v2"))

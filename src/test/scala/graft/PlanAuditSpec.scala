@@ -2,9 +2,12 @@ package graft
 
 import graft.operators.{Analytics, Dedup, Relational, Similarity, TextAnalysis}
 import graft.sources.Sources
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ScalarSubquery}
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan audit (SURVEY §5): asserts the scale-critical plan
   * properties directly, so a regression that silently de-optimizes a
@@ -279,7 +282,13 @@ class PlanAuditSpec extends GraftSpec {
       .findAllMatchIn(plan).map(_.group(1).toInt).toSeq
 
   test("j5: the bloom might_contain filter prunes BELOW the join's shuffle exchange") {
-    val plan = planOf(Analytics.j5BloomPrefilter(spark, sf))
+    val df = Analytics.j5BloomPrefilter(spark, sf)
+    // the filter is built in-plan by a scalar subquery, not a binary literal
+    val filters = df.queryExecution.optimizedPlan.flatMap(_.expressions).flatMap(
+      _.collect { case m: BloomFilterMightContain => m.bloomFilterExpression })
+    assert(filters.nonEmpty && filters.forall(_.isInstanceOf[ScalarSubquery]),
+      s"might_contain must probe a scalar subquery: $filters")
+    val plan = planOf(df)
     val bloomFilterIds = detailIds(plan, "Filter", "Condition : .?might_contain")
     val shuffleIds = detailIds(plan, "Exchange", "Arguments: (?:hash|range)partitioning")
     assert(bloomFilterIds.nonEmpty, s"no might_contain filter in plan:\n$plan")
@@ -287,6 +296,37 @@ class PlanAuditSpec extends GraftSpec {
     assert(bloomFilterIds.min < shuffleIds.min,
       s"might_contain (node ${bloomFilterIds.min}) must sit below every shuffle " +
         s"(first at node ${shuffleIds.min}):\n$plan")
+  }
+
+  test("n9, d12, t7 and j5 build their DataFrames without running a Spark job") {
+    val queries = Seq[(String, (SparkSession, String) => DataFrame)](
+      "n9" -> Similarity.n9PcaProject, "d12" -> Dedup.d12SketchCalibration,
+      "t7" -> TextAnalysis.t7HeavyHitters, "j5" -> Analytics.j5BloomPrefilter)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(started.add)
+    }
+    val sc = spark.sparkContext
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try queries.foreach { case (name, fn) =>
+      fn(spark, sf) // warm: builds the artifacts, caches their relations
+      inGroup(name)(fn(spark, sf))
+      // the bus delivers in order: once this marker job's start arrives,
+      // so has the start of every job the construction ran
+      inGroup(s"$name/drained")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!started.contains(s"$name/drained") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(started.contains(s"$name/drained"), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    val jobs = queries.map { case (name, _) => name -> started.asScala.count(_ == name) }
+    assert(jobs.forall(_._2 == 0), s"Spark jobs run while building the DataFrame: $jobs")
   }
 
   test("sc1: ONE user_id hash exchange serves both windows and the aggregate; slice filter pushed") {

@@ -98,6 +98,32 @@ class PublishSpec extends GraftSpec {
     } != null)
   }
 
+  test("a corrupt pointer never rewrites a version dir: the next publish goes above them all") {
+    val root = tempDir("cp_")
+    AtomicPublish.publish(spark, root, Seq("corpus" -> corpusOf("one")))
+    AtomicPublish.publish(spark, root, Seq("corpus" -> corpusOf("two")))
+    def bytesOf(v: String): Map[String, Seq[Byte]] = {
+      val base = java.nio.file.Paths.get(s"$root/versions/$v")
+      val files = java.nio.file.Files.walk(base)
+      try files.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => base.relativize(f).toString ->
+          java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally files.close()
+    }
+    val v1Before = bytesOf("v1")
+    assert(v1Before.keys.exists(_.endsWith(".parquet")))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$root/LATEST"),
+      "not-a-version".getBytes("UTF-8"))
+    val v = AtomicPublish.publish(spark, root, Seq("corpus" -> corpusOf("three")))
+    val others = new java.io.File(s"$root/versions").list().toSeq.filter(_ != v)
+      .map(_.stripPrefix("v").toLong)
+    assert(others.nonEmpty && others.forall(_ < v.stripPrefix("v").toLong),
+      s"publish after a corrupt pointer wrote $v next to $others")
+    assert(bytesOf("v1") == v1Before, "v1's committed files were rewritten")
+    assert(AtomicPublish.readOutput(spark, root, "corpus")
+      .collect().forall(_.getString(1).endsWith("three")))
+  }
+
   test("artifact fingerprints are recipe-salted: a params change forces a new root") {
     def art(recipe: String) = Artifact("recipe_spec", "documents")(recipe)
     val a = art("recipe-v1;cap=100").fingerprint(sf)

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Track the size of graft's main code and its JVM-global knobs.
 
-Prints four numbers, one per line:
+Prints five numbers, one per line:
 
   main_loc     non-blank, non-comment lines of src/main/scala
                (`//` comments and `/* ... */` blocks, Scaladoc
@@ -10,6 +10,8 @@ Prints four numbers, one per line:
   graft_props  `sys.props` reads of `graft.*` keys in src/main
   graft_env    `sys.env` reads of `SPARK_GRAFT_*` keys in src/main
   mains        src/main files that define `def main`
+  pins         `.localCheckpoint(` calls in src/main/scala (comments
+               stripped)
 
 Usage: python3 tools/loc.py [repo_root]
 """
@@ -71,16 +73,16 @@ def strip_comments(text):
 def main():
     root = pathlib.Path(sys.argv[1] if len(sys.argv) > 1 else ".")
     main_dir = root / "src" / "main"
-    loc = sum(
-        sum(1 for line in strip_comments(f.read_text("utf-8")).splitlines()
-            if line.strip())
-        for f in sorted((main_dir / "scala").rglob("*.scala")))
+    code = [strip_comments(f.read_text("utf-8"))
+            for f in sorted((main_dir / "scala").rglob("*.scala"))]
+    loc = sum(sum(1 for line in c.splitlines() if line.strip()) for c in code)
     texts = [f.read_text("utf-8")
              for f in sorted(main_dir.rglob("*")) if f.is_file()]
     print(f"main_loc {loc}")
     print(f"graft_props {sum(len(PROP_READ.findall(t)) for t in texts)}")
     print(f"graft_env {sum(len(ENV_READ.findall(t)) for t in texts)}")
     print(f"mains {sum(1 for t in texts if MAIN_DEF.search(t))}")
+    print(f"pins {sum(c.count('.localCheckpoint(') for c in code)}")
 
 
 if __name__ == "__main__":

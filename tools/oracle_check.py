@@ -6,13 +6,19 @@ runs each oracle SQL in DuckDB against the sf parquet tables, and
 compares: row count, column names, and sorted-row value hash.
 
 DuckDB spills to a private temp directory that is removed on exit,
-never to `.tmp/` under the working directory.
+never to `.tmp/` under the working directory. An oracle whose spill
+there passes SPILL_LIMIT is interrupted and fails instead of filling
+the disk (g2_pagerank's does, at sf0.01). The bound is kept here, not
+by DuckDB's `max_temp_directory_size`: DuckDB 1.0.0 accepts that
+setting but does not enforce it (a sort spilled 3 GB under a 200 MB
+limit).
 
 Usage: tools/oracle_check.py <sfDir> <verifyOutDir>
 """
-import sys, os, json, math, tempfile
+import sys, os, json, math, tempfile, threading, time
 import duckdb
 
+SPILL_LIMIT = 2 << 30  # bytes
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
@@ -50,8 +56,29 @@ def table_key(rows, cols):
     return sorted(out)
 
 
+def guard_spill(con, spill_dir, running, tripped):
+    """While `running` is set, interrupt `con`'s query once `spill_dir`
+    holds more than SPILL_LIMIT bytes on disk, and set `tripped`."""
+    while True:
+        running.wait()
+        used = 0
+        with os.scandir(spill_dir) as files:
+            for f in files:
+                try:
+                    used += f.stat().st_blocks * 512
+                except FileNotFoundError:  # DuckDB removed it meanwhile
+                    pass
+        if used > SPILL_LIMIT and running.is_set():
+            tripped.set()
+            con.interrupt()
+        time.sleep(0.1)
+
+
 def main(sf_dir, out_dir, spill_dir):
     con = duckdb.connect(config={"temp_directory": spill_dir})
+    running, tripped = threading.Event(), threading.Event()
+    threading.Thread(target=guard_spill, daemon=True,
+                     args=(con, spill_dir, running, tripped)).start()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
@@ -73,14 +100,20 @@ def main(sf_dir, out_dir, spill_dir):
             results[name] = f"rows-only ({len(spark_rows)} rows)"
             n_rows_only += 1
             continue
+        tripped.clear()
+        running.set()
         try:
             oracle_rel = con.sql(oracles[name])
             o_cols = [c.lower() for c in oracle_rel.columns]
             o_rows = oracle_rel.fetchall()
         except Exception as e:
+            if tripped.is_set():
+                e = f"spilled more than {SPILL_LIMIT >> 30} GiB; interrupted"
             results[name] = f"ORACLE-ERROR: {e}"
             n_fail += 1
             continue
+        finally:
+            running.clear()
         if sorted(spark_cols) != sorted(o_cols):
             results[name] = f"SCHEMA-MISMATCH spark={sorted(spark_cols)} oracle={sorted(o_cols)}"
             n_fail += 1
