@@ -33,17 +33,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Pre-pass sweep: drop scratch roots left by DEAD graft JVMs (a
-    // killed bench never reaches its shutdown hook) and legacy
-    // fixed-name/test leftovers, so repeated rounds don't accrete in
-    // /tmp. The shared durable catalog (/tmp/graft_state) is NOT swept
-    // — persistence across restarts is its point.
-    Seq("graft_sources", "graft_pipe3_release", "graft_bench_state",
-      "graft_stream", "graft_publish_spec", "graft_persist",
-      "graft_ann_index", "graft_ann_restart",
-      "graft_scale_state", "graft_spec", "graft_hive").foreach(TmpRoots.cleanStale)
-    TmpRoots.cleanLegacy("graft_persist_state\\d+", "graft_publish\\d+",
-      "graft_publish2\\d+", "graft_publish_tt\\d+", "graft_test",
-      "graft_stream_(ckpt|restart|upsert)_\\d+(_ckpt)?", "graft_stream_src")
+    // killed bench never reaches its shutdown hook), so repeated rounds
+    // don't accrete in /tmp. The shared durable catalog
+    // (/tmp/graft_state) is NOT swept — persistence across restarts is
+    // its point.
+    TmpRoots.cleanStale()
     // Bench runs in its OWN catalog/warehouse dir: embedded Derby is
     // single-process, so sharing /tmp/graft_state with a concurrently
     // running verify/test JVM would fail one of them. Bucketed-table

@@ -36,31 +36,18 @@ object TmpRoots {
     root.toString
   }
 
-  /** Delete `<prefix>_pid<N>` siblings whose pid N is no longer alive
-    * (crash/kill leftovers), plus any legacy fixed-name root from
-    * before pids were embedded. Never touches a live pid's root. */
-  def cleanStale(prefix: String): Unit = {
-    val re = s"""\\Q$prefix\\E_pid(\\d+)""".r
+  /** Delete every `graft_<name>_pid<N>` root whose pid N is no longer
+    * alive (crash/kill leftovers), whatever `perProcess` prefix made
+    * it. Never touches a live pid's root. */
+  def cleanStale(): Unit = {
+    val re = """graft_.+_pid(\d+)""".r
     listDir(tmpdir).foreach { p =>
       p.getFileName.toString match {
-        case re(otherPid) if otherPid.toLong != pid &&
-          !ProcessHandle.of(otherPid.toLong).map[Boolean](_.isAlive).orElse(false) =>
+        case re(other) if other.toLongOption.forall(n => n != pid &&
+            !ProcessHandle.of(n).map[Boolean](_.isAlive).orElse(false)) =>
           deleteTree(p)
-        case name if name == prefix => deleteTree(p) // pre-pid legacy root
         case _ =>
       }
-    }
-  }
-
-  /** Delete dirs whose NAME (not path) fully matches one of the given
-    * regexes (test leftovers such as `graft_persist_state<random>` or
-    * `graft_stream_ckpt_<nanos>`); only used by Bench's pre-pass sweep
-    * where no live process can own them. */
-  def cleanLegacy(patterns: String*): Unit = {
-    val res = patterns.map(_.r)
-    listDir(tmpdir).foreach { p =>
-      val n = p.getFileName.toString
-      if (res.exists(_.matches(n))) deleteTree(p)
     }
   }
 

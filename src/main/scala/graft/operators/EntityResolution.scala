@@ -204,12 +204,8 @@ object EntityResolution {
       .filter(levenshtein(col("name_a"), col("name_b")) <= MaxEditDistance)
       .select(col("name_a"), col("name_b"))
       .localCheckpoint()
-    import s.implicits._
     Seq("names" -> names, "edges" -> edges,
-      "clusters" -> clustersFrom(names, edges),
-      // the applied-batch LEDGER rides the same atomic pointer swap as
-      // the data (d13's exactly-once argument on the ER plane)
-      "ledger" -> Seq.empty[Long].toDF("batch_id"))
+      "clusters" -> clustersFrom(names, edges))
   }
 
   /** (p_name, cluster_key) from name-grain components: cluster_key =
@@ -229,15 +225,16 @@ object EntityResolution {
 
   // v2: the family grew the applied-batch ledger (streaming
   // maintenance) — salt bump forces stale-recipe rebuilds
-  private[graft] val incrErIndex = Artifact("er_incr_index", "part")(
-    s"er-incr-v2;block=lasttoken;maxdist=$MaxEditDistance;split=mod$IncrBatchMod;ledger")
+  private[graft] val incrErIndex = Artifact.incremental("er_incr_index", "part")(
+    s"er-incr-v2;block=lasttoken;maxdist=$MaxEditDistance;split=mod$IncrBatchMod;ledger")(
+    erIncrement)
 
   /** Version N+1 from version N's committed outputs plus only the
     * batch part rows: catalog merges (add counts, min canon), edges
     * append (new-name pairs only), components re-close over the
     * vocabulary-bounded edge list. */
-  private[graft] def publishErIncrement(s: SparkSession, root: String,
-      batchParts: DataFrame, batchId: Long = -1L): String = {
+  private def erIncrement(s: SparkSession, root: String,
+      batchParts: DataFrame, batchId: Long): Seq[(String, DataFrame)] = {
     import graft.sources.AtomicPublish.readOutput
     val bNames = catalogOf(batchParts).localCheckpoint()
     val baseNames = readOutput(s, root, "names")
@@ -272,50 +269,14 @@ object EntityResolution {
         greatest(col("name_a"), col("name_b")).as("name_b"))
     val edges2 = readOutput(s, root, "edges").unionByName(newEdges)
       .localCheckpoint()
-    import s.implicits._
-    graft.sources.AtomicPublish.publish(s, root, Seq(
-      "names" -> names2, "edges" -> edges2,
-      "clusters" -> clustersFrom(names2, edges2),
-      "ledger" -> readOutput(s, root, "ledger")
-        .unionByName(Seq(batchId).toDF("batch_id"))))
+    Seq("names" -> names2, "edges" -> edges2,
+      "clusters" -> clustersFrom(names2, edges2))
   }
-
-  /** Apply one ingest batch of part rows EXACTLY ONCE (d13's ledger
-    * discipline): a batch id already in the committed ledger, or an
-    * empty trigger, is a no-op. Returns whether a version was
-    * published. */
-  def applyBatch(s: SparkSession, root: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val applied = graft.sources.AtomicPublish.readOutput(s, root, "ledger")
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (!applied && !batch.isEmpty) {
-      publishErIncrement(s, root, batch, batchId)
-      true
-    } else false
-  }
-
-  /** Streaming ingest endpoint for the ER plane — the row-249
-    * foreachBatch + exactly-once-ledger shape on arriving part rows
-    * (and the EASY case by er4's own argument: edges are add-only, so
-    * each micro-batch's fuzzy work is new-name × same-block pairs). */
-  def streamingErMaintenance(parts: DataFrame, root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    parts.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        applyBatch(batch.sparkSession, root, batch.toDF(), id)
-        ()
-      }
-      .start()
 
   private[graft] def ensureIncrErIndex(s: SparkSession, dir: String): String =
-    incrErIndex.build(s, dir) { root =>
+    incrErIndex.ensureIngested(s, dir) {
       val parts = Tables.part(s, dir)
-      graft.sources.AtomicPublish.publish(s, root, buildErOutputs(s,
-        parts.filter(col("p_partkey") % IncrBatchMod =!= 0)))
-      publishErIncrement(s, root,
+      (buildErOutputs(s, parts.filter(col("p_partkey") % IncrBatchMod =!= 0)),
         parts.filter(col("p_partkey") % IncrBatchMod === 0))
     }
 

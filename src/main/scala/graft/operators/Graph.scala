@@ -49,8 +49,8 @@ object Graph {
   // the edge artifact is INCREMENTALLY MAINTAINED (built over the base
   // order slice, then the batch slice applied through the ledger'd
   // increment path) — the salt bump forces stale-recipe rebuilds
-  private[graft] val coOrderIndex = Artifact("graph_index", "orders", "lineitem")(
-    s"co-order-v3;incr=mod$GraphBatchMod;touched;")
+  private[graft] val coOrderIndex = Artifact.incremental("graph_index", "orders", "lineitem")(
+    s"co-order-v3;incr=mod$GraphBatchMod;touched;")(edgeIncrement)
 
   /** Distinct (c, sk) pairs contributed by an order slice. */
   private[graft] def pairsOf(s: SparkSession, dir: String,
@@ -63,73 +63,36 @@ object Graph {
       .select(col("o_custkey").as("c"), col("l_suppkey").as("sk"))
       .distinct()
 
-  /** Publish version N+1 of the co-order edge artifact from version
-    * N's COMMITTED pairs plus only the batch's pairs (the d13
+  /** Version N+1 of the co-order edge artifact from version N's
+    * COMMITTED pairs plus only the batch's (c, sk) pairs (the d13
     * discipline on the graph plane — and the EASY case, like er4:
     * under ingest, orders only ARRIVE, so the distinct pair set is
     * ADD-ONLY; base ∪ batch = set union, realized as one anti-join of
     * the batch's distinct pairs against the committed table + append.
-    * The fact tables are never rescanned; the applied-batch ledger
-    * rides the same atomic pointer swap, so replays are refused
-    * exactly-once). Every graph consumer (g2 ranks, g4 pair supports,
-    * g5/g6/g7) derives from this committed edge SET, so their
+    * The fact tables are never rescanned). Every graph consumer (g2
+    * ranks, g4 pair supports, g5/g6/g7) derives from this committed
+    * edge SET, so their
     * existing full-corpus hash oracles double as the proof that
     * increment ≡ rebuild on real data every round. */
-  private[graft] def publishEdgeIncrement(s: SparkSession, root: String,
-      batchPairs: DataFrame, batchId: Long = -1L): String = {
-    import graft.sources.AtomicPublish.readOutput
-    val committed = readOutput(s, root, "co_order")
+  private def edgeIncrement(s: SparkSession, root: String,
+      batchPairs: DataFrame, batchId: Long): Seq[(String, DataFrame)] = {
+    val committed = graft.sources.AtomicPublish.readOutput(s, root, "co_order")
     val fresh = batchPairs.distinct()
       .join(committed, Seq("c", "sk"), "left_anti")
-    import s.implicits._
-    graft.sources.AtomicPublish.publish(s, root, Seq(
+    Seq(
       "co_order" -> committed.unionByName(fresh),
       // the batch's own customer keys: the ingest report (g8) reads
       // committed state ONLY instead of re-joining the fact tables
-      "touched" -> batchPairs.select(col("c")).distinct(),
-      "ledger" -> readOutput(s, root, "ledger")
-        .unionByName(Seq(batchId).toDF("batch_id"))))
+      "touched" -> batchPairs.select(col("c")).distinct())
   }
-
-  /** Apply one ingest batch of (c, sk) pairs EXACTLY ONCE
-    * (ledger-refused replays); returns whether a version published. */
-  def applyBatch(s: SparkSession, root: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val applied = graft.sources.AtomicPublish.readOutput(s, root, "ledger")
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (!applied && !batch.isEmpty) {
-      publishEdgeIncrement(s, root, batch, batchId)
-      true
-    } else false
-  }
-
-  /** Streaming ingest endpoint for the graph plane — the row-249
-    * foreachBatch + exactly-once-ledger shape on arriving (c, sk)
-    * pair rows. */
-  def streamingGraphMaintenance(pairs: DataFrame, root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    pairs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        applyBatch(batch.sparkSession, root, batch.toDF(), id)
-        ()
-      }
-      .start()
 
   /** Ensure the committed co-order edge artifact exists (built v1
     * over the base order slice, then INCREMENTED with the batch
     * slice) and return its root — the post-ingest snapshot every
     * graph operator derives from. */
   private[graft] def ensureCoOrder(s: SparkSession, dir: String): String =
-    coOrderIndex.build(s, dir) { root =>
-      import s.implicits._
-      graft.sources.AtomicPublish.publish(s, root, Seq(
-        "co_order" -> pairsOf(s, dir,
-          col("o_orderkey") % GraphBatchMod =!= 0),
-        "ledger" -> Seq.empty[Long].toDF("batch_id")))
-      publishEdgeIncrement(s, root,
+    coOrderIndex.ensureIngested(s, dir) {
+      (Seq("co_order" -> pairsOf(s, dir, col("o_orderkey") % GraphBatchMod =!= 0)),
         pairsOf(s, dir, col("o_orderkey") % GraphBatchMod === 0))
     }
 

@@ -75,11 +75,11 @@ object Incremental {
   // v4: the family grew the term plane (v2), the passage plane (v3),
   // and the applied-batch ledger (v4) — each recipe bump forces
   // stale-family rebuilds
-  private[graft] val incrIndex = Artifact("incr_index", "documents")(
+  private[graft] val incrIndex = Artifact.incremental("incr_index", "documents")(
     s"incr-v6;split=mod$BatchMod;dfcap=${Dedup.ShingleDfCap};tau=0.5;" +
       s"minhash=k${Dedup.MinhashK}-xxh64;simhash=64-seed42;kernel=word3gram-xxh64;" +
       s"term=doc-term-tf-space;passage=w${Dedup.PassageWords}-xxh64;" +
-      s"span=k${Dedup.ExactSpanTokens}-stride1-xxh64")
+      s"span=k${Dedup.ExactSpanTokens}-stride1-xxh64")(increment)
 
   /** All seven family outputs built FROM SCRATCH over `docs` — v1 of
     * the root, and the spec's ground truth for "incremental ≡
@@ -131,19 +131,12 @@ object Incremental {
     // (doc_id, tidx) min — the passage plane's exactness argument at
     // the exact grain (r13)
     val sOcc = Dedup.spanGramsOf(docs).localCheckpoint()
-    // the applied-batch LEDGER (k13's pattern) rides the same atomic
-    // publish: an ingest batch is recorded in the SAME pointer swap
-    // that applies it, so a replayed micro-batch (crash between a
-    // sink commit and its bookkeeping — the classic dual-write hole)
-    // is detected by reading the committed snapshot alone
-    import s.implicits._
     Seq("shingles" -> kept, "df" -> df, "sizes" -> sizes,
       "edges" -> edges, "clusters" -> clusters,
       "minhash" -> Dedup.minhashOf(docs), "simhash" -> Dedup.simhashOf(docs),
       "termfreq" -> tf, "termdf" -> termdf, "stats" -> stats,
       "passage_occ" -> occ, "passages" -> Dedup.passageStatsOf(occ),
-      "span_occ" -> sOcc, "span_stats" -> spanStatsOf(sOcc),
-      "ledger" -> Seq.empty[Long].toDF("batch_id"))
+      "span_occ" -> sOcc, "span_stats" -> spanStatsOf(sOcc))
   }
 
   /** Per-gram count + global first occurrence over a span-gram
@@ -154,13 +147,12 @@ object Incremental {
       .agg(count(lit(1)).as("n_occ"),
         min(struct(col("doc_id"), col("tidx"))).as("first"))
 
-  /** Publish version N+1 of the family at `root` from version N's
-    * committed outputs plus `batch` (NEW doc_ids only — the ingest
-    * contract; enforced nowhere because doc_id collisions are a
-    * producer bug the exactness argument above does not survive).
-    * Returns the committed version name. */
-  private[graft] def publishIncrement(s: SparkSession, root: String,
-      batch: DataFrame, batchId: Long = -1L): String = {
+  /** Version N+1 of the family at `root` from version N's committed
+    * outputs plus `batch` (NEW doc_ids only — the ingest contract;
+    * enforced nowhere because doc_id collisions are a producer bug the
+    * exactness argument above does not survive). */
+  private def increment(s: SparkSession, root: String,
+      batch: DataFrame, batchId: Long): Seq[(String, DataFrame)] = {
     import graft.sources.AtomicPublish.readOutput
     val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
     val baseP = readOutput(s, root, "shingles")
@@ -290,7 +282,7 @@ object Incremental {
           .when(col("b.first").isNull, col("a.first"))
           .otherwise(least(col("a.first"), col("b.first"))).as("first"))
 
-    graft.sources.AtomicPublish.publish(s, root, Seq(
+    Seq(
       "shingles" -> newP, "df" -> newDf, "sizes" -> newSizes,
       "edges" -> edges2, "clusters" -> clusters2,
       "minhash" -> readOutput(s, root, "minhash")
@@ -303,12 +295,7 @@ object Incremental {
       "passage_occ" -> readOutput(s, root, "passage_occ").unionByName(bOcc),
       "passages" -> newPassages,
       "span_occ" -> readOutput(s, root, "span_occ").unionByName(bSOcc),
-      "span_stats" -> newSpanStats,
-      "ledger" -> {
-        import s.implicits._
-        readOutput(s, root, "ledger")
-          .unionByName(Seq(batchId).toDF("batch_id"))
-      }))
+      "span_stats" -> newSpanStats)
   }
 
   /** Build v1 over the base slice, then incrementally publish v2
@@ -316,11 +303,10 @@ object Incremental {
     * read path always sees the post-ingest snapshot. */
   private[graft] def ensureIncrementalIndex(s: SparkSession,
       dir: String): String =
-    incrIndex.build(s, dir) { root =>
+    incrIndex.ensureIngested(s, dir) {
       val docs = Tables.documents(s, dir)
-      graft.sources.AtomicPublish.publish(s, root,
-        buildOutputs(s, docs.filter(col("doc_id") % BatchMod =!= 0)))
-      publishIncrement(s, root, docs.filter(col("doc_id") % BatchMod === 0))
+      (buildOutputs(s, docs.filter(col("doc_id") % BatchMod =!= 0)),
+        docs.filter(col("doc_id") % BatchMod === 0))
     }
 
   /** d13: incrementally-maintained index snapshot — per clustered doc,
@@ -362,51 +348,6 @@ object Incremental {
       .select(col("doc_id"), col("rank"), col("term"),
         round(col("tfidf_raw"), 6).as("tfidf"))
       .orderBy("doc_id", "rank")
-  }
-
-  /** Streaming ingest endpoint for the index family — the reference's
-    * poll loop (server.mjs:129-142) closed over index maintenance:
-    * each micro-batch of arriving documents publishes version N+1 via
-    * [[publishIncrement]] inside `foreachBatch` (the OSS idiom for
-    * transactional streaming sinks, same hook as the k5 upsert sink).
-    * Readers always see a committed, mutually-consistent snapshot;
-    * a crash replays the in-flight micro-batch, and EXACTLY-ONCE
-    * application comes from the applied-batch LEDGER riding the same
-    * atomic pointer swap as the data: a replayed batch id is found in
-    * the committed snapshot and skipped (no dual-write hole — the
-    * ledger cannot be ahead of or behind the index it describes).
-    * Empty micro-batches (watermark-only triggers) are skipped — a
-    * version bump with no data would only churn the vacuum horizon. */
-  def streamingIndexMaintenance(docs: DataFrame, root: String,
-      checkpoint: String,
-      trigger: org.apache.spark.sql.streaming.Trigger =
-        org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L))
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        applyBatch(batch.sparkSession, root, batch.toDF(), id)
-        ()
-      }
-      .start()
-
-  /** Apply one ingest batch EXACTLY ONCE: a batch id already present
-    * in the committed ledger (a foreachBatch replay after a crash
-    * that landed between the publish and the sink's offset commit) or
-    * an empty trigger is a no-op. Returns whether a version was
-    * published. */
-  def applyBatch(s: SparkSession, root: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val applied = graft.sources.AtomicPublish
-      .readOutput(s, root, "ledger")
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (!applied && !batch.isEmpty) {
-      publishIncrement(s, root, batch, batchId)
-      true
-    } else false
   }
 
   /** d14: batch mask profile against the incrementally-maintained
@@ -606,47 +547,36 @@ object Incremental {
       .select(col("doc_id"), md5(col("sh")).as("h"))
       .groupBy(col("h")).agg(min(col("doc_id")).as("fdoc"))
 
-  private[graft] val noveltyIndex = Artifact("novelty_index", "documents")(
-    s"novelty-v1;split=mod$BatchMod;kernel=word3gram-md5;uncapped")
+  private[graft] val noveltyIndex = Artifact.incremental("novelty_index", "documents")(
+    s"novelty-v1;split=mod$BatchMod;kernel=word3gram-md5;uncapped")(noveltyIncrement)
 
-  /** Publish version N+1 of the novelty index from version N's
-    * COMMITTED firsts plus only the batch text: first-occurrence is an
+  /** Version N+1 of the novelty index from version N's COMMITTED
+    * firsts plus only the batch text: first-occurrence is an
     * associative min, so the merge is ONE keyed full-join (the
     * passage plane's `first` merge at shingle grain). With an
     * arrival-ordered id the merge degenerates to pure append (history
     * firsts are immutable — new docs can only be non-novel against
-    * them); the min handles the general out-of-order case exactly.
-    * The applied-batch ledger rides the same pointer swap. */
-  private[graft] def publishNoveltyIncrement(s: SparkSession, root: String,
-      batch: DataFrame, batchId: Long = -1L): String = {
-    import graft.sources.AtomicPublish.readOutput
-    import s.implicits._
+    * them); the min handles the general out-of-order case exactly. */
+  private def noveltyIncrement(s: SparkSession, root: String,
+      batch: DataFrame, batchId: Long): Seq[(String, DataFrame)] = {
     val bF = noveltyFirstsOf(batch)
-    val merged = readOutput(s, root, "firsts").as("a")
+    val merged = graft.sources.AtomicPublish.readOutput(s, root, "firsts").as("a")
       .join(bF.as("b"), Seq("h"), "full")
       .select(col("h"),
         when(col("a.fdoc").isNull, col("b.fdoc"))
           .when(col("b.fdoc").isNull, col("a.fdoc"))
           .otherwise(least(col("a.fdoc"), col("b.fdoc"))).as("fdoc"))
-    graft.sources.AtomicPublish.publish(s, root, Seq(
-      "firsts" -> merged,
-      "ledger" -> readOutput(s, root, "ledger")
-        .unionByName(Seq(batchId).toDF("batch_id"))))
+    Seq("firsts" -> merged)
   }
 
   /** Build v1 over the base slice, then incrementally publish v2
     * covering base+batch (the [[ensureIncrementalIndex]] shape on the
     * novelty plane). */
   private[graft] def ensureNoveltyIndex(s: SparkSession, dir: String): String =
-    noveltyIndex.build(s, dir) { root =>
-      import s.implicits._
+    noveltyIndex.ensureIngested(s, dir) {
       val docs = Tables.documents(s, dir)
-      graft.sources.AtomicPublish.publish(s, root, Seq(
-        "firsts" -> noveltyFirstsOf(
-          docs.filter(col("doc_id") % BatchMod =!= 0)),
-        "ledger" -> Seq.empty[Long].toDF("batch_id")))
-      publishNoveltyIncrement(s, root,
-        docs.filter(col("doc_id") % BatchMod === 0), batchId = 0L)
+      (Seq("firsts" -> noveltyFirstsOf(docs.filter(col("doc_id") % BatchMod =!= 0))),
+        docs.filter(col("doc_id") % BatchMod === 0))
     }
 
   /** t29: batch novelty against the incrementally-maintained

@@ -69,10 +69,10 @@ object IncrementalAnn {
     * hot probe target and the index degenerates toward brute force). */
   val RetrainShare = 0.8
 
-  private[graft] val incrAnnIndex = Artifact("ann_incr_index", "embeddings")(
+  private[graft] val incrAnnIndex = Artifact.incremental("ann_incr_index", "embeddings")(
     s"annincr-v1;split=mod$BatchMod;ivf=${Similarity.IvfCells};" +
       s"lsh=${Similarity.LshTables}x${Similarity.LshBits};" +
-      s"tight=$RetrainTightness;share=$RetrainShare")
+      s"tight=$RetrainTightness;share=$RetrainShare")(annIncrement)
 
   /** Full build over `vecs` ((vec_id, v, nrm) — [[Similarity.corpusOf]]
     * shape): the spec's ground truth for "incremental ≡ rebuild", and
@@ -92,8 +92,7 @@ object IncrementalAnn {
         .select(col("vec_id"), col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt")),
       "meta" -> Seq((-1L, v.count(), -1.0, -1.0, false))
         .toDF("batch_id", "n_vectors", "batch_mean_own", "batch_max_share",
-          "retrained"),
-      "ledger" -> Seq.empty[Long].toDF("batch_id"))
+          "retrained"))
   }
 
   /** [[Similarity.ivfCentroids]]'s every-50th-id seeding, with a
@@ -130,13 +129,13 @@ object IncrementalAnn {
     (r.getDouble(0), r.getDouble(1))
   }
 
-  /** Publish version N+1 from version N's committed outputs plus
-    * `batch` (raw embeddings rows, NEW vec_ids — the ingest contract).
-    * Returns (committed version, retrained?). The only corpus-wide
-    * work is the retrain path; the no-drift path scans ONLY the batch
-    * plus bounded audit metadata. */
-  private[graft] def publishAnnIncrement(s: SparkSession, root: String,
-      batch: DataFrame, batchId: Long = -1L): (String, Boolean) = {
+  /** Version N+1 from version N's committed outputs plus `batch` (raw
+    * embeddings rows, NEW vec_ids — the ingest contract); `meta`
+    * records whether it retrained. The only corpus-wide work is the
+    * retrain path; the no-drift path scans ONLY the batch plus bounded
+    * audit metadata. */
+  private def annIncrement(s: SparkSession, root: String,
+      batch: DataFrame, batchId: Long): Seq[(String, DataFrame)] = {
     import graft.sources.AtomicPublish.readOutput
     val cells = Similarity.indexCells(s, root)
     val bVecs = Similarity.corpusOf(batch).localCheckpoint()
@@ -165,29 +164,13 @@ object IncrementalAnn {
       }
     import s.implicits._
     val n2 = baseAssign.count() + bVecs.count()
-    val version = graft.sources.AtomicPublish.publish(s, root, Seq(
+    Seq(
       "centroids" -> cells2,
       "assignments" -> assign2,
       "lsh" -> lsh2,
       "meta" -> Seq((batchId, n2, meanOwn, maxShare, retrain))
         .toDF("batch_id", "n_vectors", "batch_mean_own", "batch_max_share",
-          "retrained"),
-      "ledger" -> readOutput(s, root, "ledger")
-        .unionByName(Seq(batchId).toDF("batch_id"))))
-    (version, retrain)
-  }
-
-  /** Apply one ingest batch EXACTLY ONCE (d13's ledger discipline): a
-    * batch id already in the committed ledger, or an empty trigger, is
-    * a no-op. Returns whether a version was published. */
-  def applyBatch(s: SparkSession, root: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val applied = graft.sources.AtomicPublish.readOutput(s, root, "ledger")
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (!applied && !batch.isEmpty) {
-      publishAnnIncrement(s, root, batch, batchId)
-      true
-    } else false
+          "retrained"))
   }
 
   /** Build v1 over the base slice, then incrementally publish v2
@@ -197,12 +180,10 @@ object IncrementalAnn {
     * committed, so the gate replays it from the version-resolved
     * parquet. */
   private[graft] def ensureIncrAnnIndex(s: SparkSession, dir: String): String = {
-    val root = incrAnnIndex.build(s, dir) { root =>
+    val root = incrAnnIndex.ensureIngested(s, dir) {
       val e = Tables.embeddings(s, dir)
-      graft.sources.AtomicPublish.publish(s, root, buildAnnOutputs(s,
-        Similarity.corpusOf(e.filter(col("vec_id") % BatchMod =!= 0))))
-      publishAnnIncrement(s, root, e.filter(col("vec_id") % BatchMod === 0))
-      ()
+      (buildAnnOutputs(s, Similarity.corpusOf(e.filter(col("vec_id") % BatchMod =!= 0))),
+        e.filter(col("vec_id") % BatchMod === 0))
     }
     incrAnnIndex.recordVersion(s, dir)
     root

@@ -55,8 +55,9 @@ object Mining {
   // and the increment must know its base count (the d13 capped-df
   // argument, mirrored on a min-floor: keep the row, filter at read).
   // The salt bump forces stale-recipe rebuilds.
-  private[graft] val basketIndex = Artifact("basket_index", "lineitem")(
-    s"basket-v3;incr=mod$BasketBatchMod;minsup=read-time;touched;sort=n_xy;pack=int64")
+  private[graft] val basketIndex = Artifact.incremental("basket_index", "lineitem")(
+    s"basket-v3;incr=mod$BasketBatchMod;minsup=read-time;touched;sort=n_xy;pack=int64")(
+    basketIncrement)
 
   /** The three basket outputs from an arbitrary (l_orderkey,
     * l_partkey) DISTINCT frame — v1 of the root and the spec's ground
@@ -77,8 +78,7 @@ object Mining {
       // the batch's own pair keys (empty at v1): the ingest report
       // (b3) reads committed state ONLY instead of re-deriving the
       // batch pair set from the fact table per query
-      "touched" -> Seq.empty[Long].toDF("pk"),
-      "ledger" -> Seq.empty[Long].toDF("batch_id"))
+      "touched" -> Seq.empty[Long].toDF("pk"))
   }
 
   /** In-row packed-pair supports of an order/item frame (b1's
@@ -92,16 +92,16 @@ object Mining {
       .groupBy(col("pk"))
       .agg(count(lit(1)).as("n_xy"))
 
-  /** Publish version N+1 of the basket index from version N's
-    * COMMITTED outputs plus only the batch's rows (the d13 discipline
-    * on the mining plane): batch orders are NEW baskets (ingest
-    * contract), so pair and item supports ADD via one keyed full-join
-    * merge each (t25's df pattern), and the basket total adds the
-    * batch's count. The fact table is never rescanned; the
-    * applied-batch ledger rides the same atomic pointer swap. */
-  private[graft] def publishBasketIncrement(s: SparkSession, root: String,
-      batchOp: DataFrame, batchId: Long = -1L): String = {
+  /** Version N+1 of the basket index from version N's COMMITTED
+    * outputs plus only the batch's (l_orderkey, l_partkey) rows (the
+    * d13 discipline on the mining plane): batch orders are NEW baskets
+    * (ingest contract), so pair and item supports ADD via one keyed
+    * full-join merge each (t25's df pattern), and the basket total
+    * adds the batch's count. The fact table is never rescanned. */
+  private def basketIncrement(s: SparkSession, root: String,
+      batch: DataFrame, batchId: Long): Seq[(String, DataFrame)] = {
     import graft.sources.AtomicPublish.readOutput
+    val batchOp = batch.distinct()
     val bPairs = pairSupports(batchOp)
     val mergedPairs = readOutput(s, root, "pair_support").as("a")
       .join(bPairs.as("b"), Seq("pk"), "full")
@@ -120,49 +120,19 @@ object Mining {
     val mergedTot = readOutput(s, root, "totals")
       .crossJoin(broadcast(bTot).withColumnRenamed("n_baskets", "bn"))
       .select((col("n_baskets") + col("bn")).as("n_baskets"))
-    import s.implicits._
-    graft.sources.AtomicPublish.publish(s, root, Seq(
+    Seq(
       "pair_support" -> mergedPairs.orderBy(col("n_xy").desc),
       "item_support" -> mergedItems,
       "totals" -> mergedTot,
-      "touched" -> bPairs.select(col("pk")),
-      "ledger" -> readOutput(s, root, "ledger")
-        .unionByName(Seq(batchId).toDF("batch_id"))))
+      "touched" -> bPairs.select(col("pk")))
   }
-
-  /** Apply one ingest batch of (l_orderkey, l_partkey) rows EXACTLY
-    * ONCE (ledger-refused replays). */
-  def applyBatch(s: SparkSession, root: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val applied = graft.sources.AtomicPublish.readOutput(s, root, "ledger")
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (!applied && !batch.isEmpty) {
-      publishBasketIncrement(s, root, batch.distinct(), batchId)
-      true
-    } else false
-  }
-
-  /** Streaming ingest endpoint for the basket plane (row-249 shape). */
-  def streamingBasketMaintenance(rows: DataFrame, root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        applyBatch(batch.sparkSession, root, batch.toDF(), id)
-        ()
-      }
-      .start()
 
   private[graft] def ensureBasketIndex(s: SparkSession, dir: String): String =
-    basketIndex.build(s, dir) { root =>
+    basketIndex.ensureIngested(s, dir) {
       val op = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey")).distinct()
         .localCheckpoint() // pairs + item supports + total read it
-      graft.sources.AtomicPublish.publish(s, root, basketOutputs(s,
-        op.filter(col("l_orderkey") % BasketBatchMod =!= 0)))
-      publishBasketIncrement(s, root,
+      (basketOutputs(s, op.filter(col("l_orderkey") % BasketBatchMod =!= 0)),
         op.filter(col("l_orderkey") % BasketBatchMod === 0))
     }
 

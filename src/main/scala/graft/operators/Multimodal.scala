@@ -231,8 +231,9 @@ object Multimodal {
     * multimodal family consumes (each file one row: path, length,
     * content; the scan never decodes, and `pathGlobFilter` prunes
     * non-media files at listing time). Fixture: one .bin file per
-    * sampled doc (bytes = the doc's UTF-8 text), written ONCE per
-    * process by a bounded distributed foreachPartition — executors
+    * sampled doc (bytes = the doc's UTF-8 text), written once per
+    * corpus dir ([[graft.sources.Sources.payOnce]]) by a bounded
+    * distributed foreachPartition — executors
     * write their partition's files, the exact shape of a cluster
     * ingest job landing files on a shared store (here the shared
     * store is the local FS). The query reads the directory back and
@@ -245,8 +246,7 @@ object Multimodal {
   def m4BinaryIngest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val out = s"${graft.TmpRoots.perProcess("graft_sources")}/m4_binary"
-    val marker = java.nio.file.Paths.get(out, "_WRITTEN")
-    if (!java.nio.file.Files.exists(marker)) {
+    graft.sources.Sources.payOnce(s, out, dir) {
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
       Tables.documents(s, dir)
         .filter(col("doc_id") < BinaryIngestDocs)
@@ -259,7 +259,6 @@ object Multimodal {
               text.getBytes("UTF-8"))
           }
         }
-      java.nio.file.Files.createFile(marker)
     }
     s.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin")
@@ -471,19 +470,16 @@ object Multimodal {
       .agg(count(lit(1)).as("n")).localCheckpoint()
     val edges = mediaEdgesFrom(band, band, buckets, ph,
       col("x.doc_id") < col("y.doc_id")).localCheckpoint()
-    import s.implicits._
     Seq("phash" -> ph, "buckets" -> buckets, "edges" -> edges,
       "clusters" -> Dedup.connectedComponents(edges)
-        .select(col("id").as("doc_id"), col("label").as("cluster_id")),
-      // the applied-batch LEDGER rides the same atomic pointer swap as
-      // the data (d13's exactly-once argument on the media plane)
-      "ledger" -> Seq.empty[Long].toDF("batch_id"))
+        .select(col("id").as("doc_id"), col("label").as("cluster_id")))
   }
 
   // v2: the family grew the applied-batch ledger (streaming
   // maintenance) — salt bump forces stale-recipe rebuilds
-  private[graft] val mediaIncrIndex = Artifact("media_incr_index", "documents")(
-    s"media-incr-v2;codec=${StubCodec.id};levels=$PhashLevels;bands=$PhashBands;cap=$PhashBucketCap;maxham=$PhashMaxHamming;split=mod$MediaIncrBatchMod;ledger")
+  private[graft] val mediaIncrIndex = Artifact.incremental("media_incr_index", "documents")(
+    s"media-incr-v2;codec=${StubCodec.id};levels=$PhashLevels;bands=$PhashBands;cap=$PhashBucketCap;maxham=$PhashMaxHamming;split=mod$MediaIncrBatchMod;ledger")(
+    mediaIncrement)
 
   /** Version N+1 from version N's committed outputs plus only the
     * batch payloads: phash appends (one codec pass over the batch),
@@ -491,8 +487,8 @@ object Multimodal {
     * newly-capped buckets — a capped bucket's members are ALL
     * affected, so unaffected pairs' generating buckets are provably
     * unchanged) bounds the pair re-scoring exactly as in d13. */
-  private[graft] def publishMediaIncrement(s: SparkSession, root: String,
-      batch: DataFrame, batchId: Long = -1L): String = {
+  private def mediaIncrement(s: SparkSession, root: String,
+      batch: DataFrame, batchId: Long): Seq[(String, DataFrame)] = {
     import graft.sources.AtomicPublish.readOutput
     val basePh = readOutput(s, root, "phash")
     val baseBuckets = readOutput(s, root, "buckets")
@@ -532,50 +528,15 @@ object Multimodal {
       .join(broadcast(affected.withColumnRenamed("doc_id", "b")), Seq("b"), "left_anti")
       .select(col("a"), col("b"))
     val edges2 = keptEdges.unionByName(newEdges).localCheckpoint()
-    import s.implicits._
-    graft.sources.AtomicPublish.publish(s, root, Seq(
-      "phash" -> ph2, "buckets" -> mergedBuckets, "edges" -> edges2,
+    Seq("phash" -> ph2, "buckets" -> mergedBuckets, "edges" -> edges2,
       "clusters" -> Dedup.connectedComponents(edges2)
-        .select(col("id").as("doc_id"), col("label").as("cluster_id")),
-      "ledger" -> readOutput(s, root, "ledger")
-        .unionByName(Seq(batchId).toDF("batch_id"))))
+        .select(col("id").as("doc_id"), col("label").as("cluster_id")))
   }
-
-  /** Apply one ingest batch of media payloads EXACTLY ONCE (d13's
-    * ledger discipline); returns whether a version was published. */
-  def applyBatch(s: SparkSession, root: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val applied = graft.sources.AtomicPublish.readOutput(s, root, "ledger")
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (!applied && !batch.isEmpty) {
-      publishMediaIncrement(s, root, batch, batchId)
-      true
-    } else false
-  }
-
-  /** Streaming ingest endpoint for the media plane — the row-249
-    * foreachBatch + exactly-once-ledger shape on arriving payload
-    * rows; each micro-batch pays one codec pass over its own payloads
-    * and the cap-crossing affected-set re-score, never a corpus
-    * re-decode. */
-  def streamingMediaMaintenance(docs: DataFrame, root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        applyBatch(batch.sparkSession, root, batch.toDF(), id)
-        ()
-      }
-      .start()
 
   private[graft] def ensureMediaIncrIndex(s: SparkSession, dir: String): String =
-    mediaIncrIndex.build(s, dir) { root =>
+    mediaIncrIndex.ensureIngested(s, dir) {
       val docs = Tables.documents(s, dir)
-      graft.sources.AtomicPublish.publish(s, root, buildMediaIncrOutputs(s,
-        docs.filter(col("doc_id") % MediaIncrBatchMod =!= 0)))
-      publishMediaIncrement(s, root,
+      (buildMediaIncrOutputs(s, docs.filter(col("doc_id") % MediaIncrBatchMod =!= 0)),
         docs.filter(col("doc_id") % MediaIncrBatchMod === 0))
     }
 

@@ -29,8 +29,9 @@ object TextIndex {
   // v4 (was v3): the index additionally carries per-doc token lengths
   // (doclens) for BM25 ranking — the salt bump forces stale-recipe
   // rebuilds (the r9 ADVICE stale-index trap)
-  private[graft] val textIndex = Artifact("text_index", "documents")(
-    s"textindex-v4;grain=word1-distinct+positions+doclens;incr=mod$IncrBatchMod")
+  private[graft] val textIndex = Artifact.incremental("text_index", "documents")(
+    s"textindex-v4;grain=word1-distinct+positions+doclens;incr=mod$IncrBatchMod")(
+    textIncrement)
 
   /** Posting-list frame from the raw corpus: one row per (term) with
     * document frequency and the SORTED posting list. In-row distinct
@@ -71,15 +72,12 @@ object TextIndex {
   /** All index outputs built from scratch over `docs` — v1 of the
     * root, and the chained-increment spec's ground truth. */
   private[graft] def buildIndexOutputs(s: SparkSession,
-      docs: DataFrame): Seq[(String, DataFrame)] = {
-    import s.implicits._
+      docs: DataFrame): Seq[(String, DataFrame)] =
     Seq("postings" -> buildPostings(docs),
       "positions" -> buildPositions(docs),
-      "doclens" -> buildDoclens(docs),
-      "ledger" -> Seq.empty[Long].toDF("batch_id"))
-  }
+      "doclens" -> buildDoclens(docs))
 
-  /** Publish version N+1 of the text index from version N's COMMITTED
+  /** Version N+1 of the text index from version N's COMMITTED
     * outputs plus only the batch text (the d13 discipline on the ix
     * plane — t25 already proved the additive machinery on the term
     * plane; postings are its associative extension): batch doc_ids are
@@ -88,10 +86,9 @@ object TextIndex {
     * positional rows append verbatim. The only text scan is the batch
     * slice; the merge is one term-keyed full join against the
     * committed postings — O(index ∪ batch vocabulary), never a corpus
-    * re-scan. The applied-batch ledger rides the same atomic pointer
-    * swap (exactly-once under foreachBatch replays, d13's argument). */
-  private[graft] def publishTextIncrement(s: SparkSession, root: String,
-      batch: DataFrame, batchId: Long = -1L): String = {
+    * re-scan. */
+  private def textIncrement(s: SparkSession, root: String,
+      batch: DataFrame, batchId: Long): Seq[(String, DataFrame)] = {
     import graft.sources.AtomicPublish.readOutput
     val bPost = buildPostings(batch)
     val empty = array().cast("array<bigint>")
@@ -102,59 +99,24 @@ object TextIndex {
           .as("df"),
         sort_array(concat(coalesce(col("a.postings"), empty),
           coalesce(col("b.postings"), empty))).as("postings"))
-    import s.implicits._
-    graft.sources.AtomicPublish.publish(s, root, Seq(
+    Seq(
       "postings" -> merged,
       "positions" -> readOutput(s, root, "positions")
         .unionByName(buildPositions(batch)),
       // batch doc_ids are NEW (ingest contract) ⇒ doclens rows append
       // verbatim, like the positional rows
       "doclens" -> readOutput(s, root, "doclens")
-        .unionByName(buildDoclens(batch)),
-      "ledger" -> readOutput(s, root, "ledger")
-        .unionByName(Seq(batchId).toDF("batch_id"))))
+        .unionByName(buildDoclens(batch)))
   }
-
-  /** Apply one ingest batch EXACTLY ONCE (ledger-refused replays);
-    * returns whether a version was published. */
-  def applyBatch(s: SparkSession, root: String, batch: DataFrame,
-      batchId: Long): Boolean = {
-    val applied = graft.sources.AtomicPublish.readOutput(s, root, "ledger")
-      .filter(col("batch_id") === batchId).limit(1).count() > 0
-    if (!applied && !batch.isEmpty) {
-      publishTextIncrement(s, root, batch, batchId)
-      true
-    } else false
-  }
-
-  /** Streaming ingest endpoint for the text-index plane — the row-249
-    * foreachBatch + exactly-once-ledger shape on arriving documents
-    * (the last index family to gain one; postings/df/doclens merges
-    * are the associative adds proven by ix4's oracle, so each
-    * micro-batch is one term-keyed merge + verbatim appends, never a
-    * corpus re-tokenize). */
-  def streamingTextMaintenance(docs: DataFrame, root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) =>
-        applyBatch(batch.sparkSession, root, batch.toDF(), id)
-        ()
-      }
-      .start()
 
   /** The index is built v1-over-base then INCREMENTED with the batch
     * slice — ix1/ix2/ix3 read the committed post-ingest snapshot, and
     * their full-corpus oracles prove incremental ≡ rebuild on real
     * data every round. */
   private[graft] def ensureTextIndex(s: SparkSession, dir: String): String =
-    textIndex.build(s, dir) { root =>
+    textIndex.ensureIngested(s, dir) {
       val docs = Tables.documents(s, dir)
-      graft.sources.AtomicPublish.publish(s, root,
-        buildIndexOutputs(s, docs.filter(col("doc_id") % IncrBatchMod =!= 0)))
-      publishTextIncrement(s, root,
+      (buildIndexOutputs(s, docs.filter(col("doc_id") % IncrBatchMod =!= 0)),
         docs.filter(col("doc_id") % IncrBatchMod === 0))
     }
 

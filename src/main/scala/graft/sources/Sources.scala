@@ -993,13 +993,6 @@ object Sources {
     * the aggregate itself is layout-independent, which is what the
     * SQL oracle checks. Small parquet.block.size here mirrors, at
     * test scale, the many-row-groups-per-file shape a real table has. */
-  /** Pay-once layout guard: run `build` only if the `_GRAFT_SRC`
-    * marker under `path` doesn't already record `key` (the source
-    * dir), then stamp the marker. Spark's readers ignore underscore-
-    * prefixed files, so the marker rides inside the layout it guards.
-    * Used by every ingest-time layout (z-order, merge-target
-    * bootstrap): re-paying the build per query would measure ingest,
-    * not the operation the layout exists for. */
   /** Exactly-once batch application: run `work` only if the ledger
     * marker inside `path` does not already record `batchKey`. The
     * additive-merge analog of [[payOnce]] — a retried maintenance job
@@ -1007,44 +1000,39 @@ object Sources {
     * INSIDE the target dir, so a payOnce rebuild (key change wipes the
     * root) atomically clears the ledger with the data it described. */
   private def applyBatchOnce(s: SparkSession, path: String, batchKey: String)(
-      work: => Unit): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_GRAFT_APPLIED")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val current =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try {
-          val buf = new Array[Byte](4096)
-          val n = in.read(buf)
-          Some(new String(buf, 0, math.max(n, 0), "UTF-8"))
-        } finally in.close()
-      }
-    if (!current.contains(batchKey)) {
-      work
-      val out = fs.create(marker, true)
-      try out.write(batchKey.getBytes("UTF-8")) finally out.close()
-    }
-  }
+      work: => Unit): Unit =
+    unlessMarked(s, path, "_GRAFT_APPLIED", batchKey)(work)
 
-  private def payOnce(s: SparkSession, path: String, key: String)(
-      build: => Unit): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(s"$path/_GRAFT_SRC")
-    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val current =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try {
-          val buf = new Array[Byte](4096)
-          val n = in.read(buf)
-          Some(new String(buf, 0, math.max(n, 0), "UTF-8"))
-        } finally in.close()
-      }
-    if (!current.contains(key)) {
+  /** Pay-once layout guard: run `build` only if the `_GRAFT_SRC`
+    * marker under `path` doesn't already record `key` (the source
+    * dir), then stamp the marker. Spark's readers ignore underscore-
+    * prefixed files, so the marker rides inside the layout it guards.
+    * Used by every ingest-time layout (z-order, merge-target
+    * bootstrap, m4's file fixture): re-paying the build per query
+    * would measure ingest, not the operation the layout exists for. */
+  private[graft] def payOnce(s: SparkSession, path: String, key: String)(
+      build: => Unit): Unit =
+    unlessMarked(s, path, "_GRAFT_SRC", key) {
       val root = new org.apache.hadoop.fs.Path(path)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(root)) fs.delete(root, true) // stale layout for another key
       build
+    }
+
+  /** Run `work` unless the marker file `name` under `path` records
+    * `key`, then record `key` there. */
+  private def unlessMarked(s: SparkSession, path: String, name: String,
+      key: String)(work: => Unit): Unit = {
+    val marker = new org.apache.hadoop.fs.Path(s"$path/$name")
+    val fs = marker.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val current =
+      if (!fs.exists(marker)) None
+      else {
+        val in = fs.open(marker)
+        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+      }
+    if (!current.contains(key)) {
+      work
       val out = fs.create(marker, true)
       try out.write(key.getBytes("UTF-8")) finally out.close()
     }

@@ -66,9 +66,9 @@ object StreamingSoak {
       docsStreamed: Long, versions: Long, spanOccRows: Long,
       indexRowsFinal: Long, matched: Boolean, missHead: String = "")
 
-  /** Index-maintenance soak (r14 ask #5): drive [[graft.operators
-    * .Incremental.applyBatch]] — the d13 family's transactional
-    * ingest endpoint — under a REAL file-source stream over
+  /** Index-maintenance soak (r14 ask #5): drive the d13 family's
+    * transactional ingest endpoint ([[graft.sources.Artifact
+    * .Incremental.streamingMaintenance]]) under a REAL file-source stream over
     * `<docsDir>/documents.parquet`, instead of the chained
     * MemoryStream the row-249 spec uses. v1 of a fresh index root is
     * built over the `doc_id % BatchMod == 0` slice; the remaining
@@ -76,8 +76,8 @@ object StreamingSoak {
     * replayed `filesPerTrigger` at a time (Trigger.AvailableNow), so
     * every micro-batch publishes version N+1 through the exactly-once
     * ledger. The verdict re-runs the FROM-SCRATCH family build over
-    * the full corpus and requires every published output (all 14
-    * non-ledger tables — postings, df, sizes, edges, clusters,
+    * the full corpus and requires every published output other than
+    * the ledger (all 14 tables — postings, df, sizes, edges, clusters,
     * signatures, term/passage/span planes) to be set-equal to the
     * rebuild: increment ≡ rebuild, through the real streaming
     * machinery, at sf0.1 volume. The foreachBatch pipeline itself is
@@ -92,8 +92,7 @@ object StreamingSoak {
     val root = s"$workDir/incr_soak_root_$runToken"
     val base = docs.filter(pmod(col("doc_id"), lit(Incremental.BatchMod)) === 0)
     val streamed = docs.filter(pmod(col("doc_id"), lit(Incremental.BatchMod)) =!= 0)
-    graft.sources.AtomicPublish.publish(s, root,
-      Incremental.buildOutputs(s, base))
+    Incremental.incrIndex.publishBase(s, root, Incremental.buildOutputs(s, base))
     val srcDir = s"$workDir/incr_soak_src_$runToken"
     streamed.repartitionByRange(splitFiles, col("doc_id"))
       .write.mode("overwrite").parquet(srcDir)
@@ -101,7 +100,7 @@ object StreamingSoak {
     val stream = s.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", filesPerTrigger.toString)
       .parquet(srcDir)
-    val q = Incremental.streamingIndexMaintenance(stream, root,
+    val q = Incremental.incrIndex.streamingMaintenance(stream, root,
       s"$workDir/incr_soak_ckpt_$runToken", Trigger.AvailableNow())
     q.awaitTermination()
     val progress = q.recentProgress.toSeq
@@ -110,7 +109,7 @@ object StreamingSoak {
     val rebuilt = Incremental.buildOutputs(s, docs)
     var missHead = ""
     var indexRows = 0L
-    val matched = rebuilt.filter(_._1 != "ledger").forall { case (name, want) =>
+    val matched = rebuilt.forall { case (name, want) =>
       val got = graft.sources.AtomicPublish.readOutput(s, root, name)
       indexRows += got.count()
       val extra = got.exceptAll(want).count()

@@ -132,9 +132,9 @@ class EntityResolutionSpec extends GraftSpec {
     // and a brand-new singleton
     val batch = Seq(9L -> "bbaaa car", 3L -> "zzz truck", 6L -> "qqq bike")
     val root = tempDir("er_incr")
-    graft.sources.AtomicPublish.publish(spark, root,
+    EntityResolution.incrErIndex.publishBase(spark, root,
       EntityResolution.buildErOutputs(spark, parts(base)))
-    EntityResolution.publishErIncrement(spark, root, parts(batch))
+    EntityResolution.incrErIndex.publishIncrement(spark, root, parts(batch))
     def sets(outs: Seq[(String, org.apache.spark.sql.DataFrame)]) =
       outs.map { case (n, d) => n -> d.collect().map(_.mkString("|")).toSet }.toMap
     val want = sets(EntityResolution.buildErOutputs(spark, parts(base ++ batch)))
@@ -180,10 +180,10 @@ class EntityResolutionSpec extends GraftSpec {
     val b3 = Seq(12L -> "qqr bike")
     val root = tempDir("er_stream")
     val ckpt = tempDir("er_sckpt")
-    graft.sources.AtomicPublish.publish(spark, root,
+    EntityResolution.incrErIndex.publishBase(spark, root,
       EntityResolution.buildErOutputs(spark, parts(base)))
     val input = MemoryStream[(Long, String)]
-    val q = EntityResolution.streamingErMaintenance(
+    val q = EntityResolution.incrErIndex.streamingMaintenance(
       input.toDF().toDF("p_partkey", "p_name"), root, ckpt)
     try {
       for (b <- Seq(b1, b2, b3)) { input.addData(b); q.processAllAvailable() }
@@ -204,8 +204,8 @@ class EntityResolutionSpec extends GraftSpec {
     assert(clusters("qqq bike") == clusters("qqr bike"))
     // exactly-once: replayed id and empty trigger are no-ops
     val before = graft.sources.AtomicPublish.currentVersion(spark, root)
-    assert(!EntityResolution.applyBatch(spark, root, parts(b2), 1L))
-    assert(!EntityResolution.applyBatch(spark, root, parts(Seq.empty), 99L))
+    assert(!EntityResolution.incrErIndex.applyBatch(spark, root, parts(b2), 1L))
+    assert(!EntityResolution.incrErIndex.applyBatch(spark, root, parts(Seq.empty), 99L))
     assert(graft.sources.AtomicPublish.currentVersion(spark, root) == before)
   }
 }

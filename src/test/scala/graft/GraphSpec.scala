@@ -230,17 +230,16 @@ class GraphSpec extends GraftSpec {
     val b1 = pairs(1L -> 20L, 1L -> 10L) // one new edge + one duplicate
     val b2 = pairs(3L -> 30L, 2L -> 20L) // new customer + duplicate
     val root = tempDir("g8_spec")
-    graft.sources.AtomicPublish.publish(spark, root, Seq(
-      "co_order" -> base, "ledger" -> Seq.empty[Long].toDF("batch_id")))
-    assert(Graph.applyBatch(spark, root, b1, 1L))
-    assert(Graph.applyBatch(spark, root, b2, 2L))
+    Graph.coOrderIndex.publishBase(spark, root, Seq("co_order" -> base))
+    assert(Graph.coOrderIndex.applyBatch(spark, root, b1, 1L))
+    assert(Graph.coOrderIndex.applyBatch(spark, root, b2, 2L))
     val got = graft.sources.AtomicPublish.readOutput(spark, root, "co_order")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set(1L -> 10L, 2L -> 20L, 1L -> 20L, 3L -> 30L))
     // replayed id and empty batch: ledger-refused, no version churn
     val before = graft.sources.AtomicPublish.currentVersion(spark, root)
-    assert(!Graph.applyBatch(spark, root, b1, 1L))
-    assert(!Graph.applyBatch(spark, root, pairs(), 99L))
+    assert(!Graph.coOrderIndex.applyBatch(spark, root, b1, 1L))
+    assert(!Graph.coOrderIndex.applyBatch(spark, root, pairs(), 99L))
     assert(graft.sources.AtomicPublish.currentVersion(spark, root) == before)
   }
 
@@ -250,11 +249,10 @@ class GraphSpec extends GraftSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val root = tempDir("g8_stream")
     val ckpt = tempDir("g8_sckpt")
-    graft.sources.AtomicPublish.publish(spark, root, Seq(
-      "co_order" -> Seq((1L, 10L)).toDF("c", "sk"),
-      "ledger" -> Seq.empty[Long].toDF("batch_id")))
+    Graph.coOrderIndex.publishBase(spark, root,
+      Seq("co_order" -> Seq((1L, 10L)).toDF("c", "sk")))
     val input = MemoryStream[(Long, Long)]
-    val q = Graph.streamingGraphMaintenance(
+    val q = Graph.coOrderIndex.streamingMaintenance(
       input.toDF().toDF("c", "sk"), root, ckpt)
     try {
       for (b <- Seq(Seq(2L -> 20L), Seq(1L -> 20L, 1L -> 10L),
@@ -354,8 +352,7 @@ class GraphSpec extends GraftSpec {
       3L -> 10L, 3L -> 20L, 3L -> 30L,
       4L -> 10L)
     val edgeRoot = tempDir("kcore_edges")
-    graft.sources.AtomicPublish.publish(spark, edgeRoot, Seq(
-      "co_order" -> base, "ledger" -> Seq.empty[Long].toDF("batch_id")))
+    Graph.coOrderIndex.publishBase(spark, edgeRoot, Seq("co_order" -> base))
 
     def driverCores(ps: Set[(Long, Long)]): Map[Long, Long] = {
       var edges = ps.flatMap(p =>
@@ -383,7 +380,7 @@ class GraphSpec extends GraftSpec {
     assert(Graph.kcoreIndex(spark, edgeRoot).root(edgeRoot) == root1)
 
     // ingest batch bumps the edge artifact to version N+1
-    assert(Graph.applyBatch(spark, edgeRoot, pairs(4L -> 20L, 4L -> 30L), 1L))
+    assert(Graph.coOrderIndex.applyBatch(spark, edgeRoot, pairs(4L -> 20L, 4L -> 30L), 1L))
     val root2 = Graph.kcoreIndex(spark, edgeRoot).root(edgeRoot)
     assert(root2 != root1, "edge-version bump must re-key the kcore root")
     val merged = basePairs ++ Set(4L -> 20L, 4L -> 30L)

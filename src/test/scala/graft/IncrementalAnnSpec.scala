@@ -62,14 +62,14 @@ class IncrementalAnnSpec extends GraftSpec {
 
   private lazy val root: String = {
     val r = tempDir("annincr_spec")
-    graft.sources.AtomicPublish.publish(spark, r,
+    IncrementalAnn.incrAnnIndex.publishBase(spark, r,
       IncrementalAnn.buildAnnOutputs(spark, Similarity.corpusOf(df(base))))
     r
   }
 
   test("two chained stable increments equal a from-scratch assignment at equal centroids") {
-    assert(IncrementalAnn.applyBatch(spark, root, df(batch1), 1L))
-    assert(IncrementalAnn.applyBatch(spark, root, df(batch2), 2L))
+    assert(IncrementalAnn.incrAnnIndex.applyBatch(spark, root, df(batch1), 1L))
+    assert(IncrementalAnn.incrAnnIndex.applyBatch(spark, root, df(batch2), 2L))
     val meta = graft.sources.AtomicPublish.readOutput(spark, root, "meta")
       .collect()(0)
     assert(!meta.getAs[Boolean]("retrained"),
@@ -128,7 +128,7 @@ class IncrementalAnnSpec extends GraftSpec {
   test("a replayed batch id is refused by the committed ledger") {
     root
     val before = graft.sources.AtomicPublish.currentVersion(spark, root)
-    assert(!IncrementalAnn.applyBatch(spark, root, df(batch1), 1L))
+    assert(!IncrementalAnn.incrAnnIndex.applyBatch(spark, root, df(batch1), 1L))
     assert(graft.sources.AtomicPublish.currentVersion(spark, root) == before)
   }
 
@@ -141,7 +141,7 @@ class IncrementalAnnSpec extends GraftSpec {
       Similarity.n3Assign(Similarity.corpusOf(df(drift)), preCells), preCells)
     assert(meanOwn < IncrementalAnn.RetrainTightness,
       s"fixture not drifted enough: $meanOwn")
-    assert(IncrementalAnn.applyBatch(spark, root, df(drift), 3L))
+    assert(IncrementalAnn.incrAnnIndex.applyBatch(spark, root, df(drift), 3L))
     val meta = graft.sources.AtomicPublish.readOutput(spark, root, "meta")
       .collect()(0)
     assert(meta.getAs[Boolean]("retrained"), s"drift must retrain: $meta")

@@ -63,8 +63,8 @@ class IncrementalIndexSpec extends GraftSpec {
     val r = tempDir("incr_spec")
     val v1 = Incremental.buildOutputs(spark, df(baseDocs))
     val v1Collected = outputsAsSets(v1)
-    graft.sources.AtomicPublish.publish(spark, r, v1)
-    val v2 = Incremental.publishIncrement(spark, r, df(batchDocs))
+    Incremental.incrIndex.publishBase(spark, r, v1)
+    val v2 = Incremental.incrIndex.publishIncrement(spark, r, df(batchDocs))
     assert(v2 == "v2")
     val names = v1.map(_._1)
     val v2Sets = outputsAsSets(names.map(n =>
@@ -128,7 +128,7 @@ class IncrementalIndexSpec extends GraftSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val root = tempDir("incr_stream")
     val ckpt = tempDir("incr_ckpt")
-    graft.sources.AtomicPublish.publish(spark, root,
+    Incremental.incrIndex.publishBase(spark, root,
       Incremental.buildOutputs(spark, df(baseDocs)))
     // three arrivals: the cap-crossing batch, a near-dup of a base doc,
     // and a doc bridging into batch-2's content — state chains across
@@ -137,7 +137,7 @@ class IncrementalIndexSpec extends GraftSpec {
     val b2 = Seq(500L -> s"$S2 u500")
     val b3 = Seq(600L -> s"$S2 u600 extra tail")
     val input = MemoryStream[(Long, String)]
-    val q = Incremental.streamingIndexMaintenance(
+    val q = Incremental.incrIndex.streamingMaintenance(
       input.toDF().toDF("doc_id", "text"), root, ckpt)
     try {
       for (b <- Seq(b1, b2, b3)) { input.addData(b); q.processAllAvailable() }
@@ -146,8 +146,7 @@ class IncrementalIndexSpec extends GraftSpec {
       .contains("v4")) // v1 base + three applied batches
     val want = outputsAsSets(
       Incremental.buildOutputs(spark, df(baseDocs ++ b1 ++ b2 ++ b3)))
-    val names = want.keySet - "ledger" // provenance, not index content
-    for (name <- names) {
+    for (name <- want.keySet) {
       val got = graft.sources.AtomicPublish.readOutput(spark, root, name)
         .collect().map(_.mkString("|")).toSet
       assert(got == want(name), s"$name diverged after chained increments")
@@ -156,9 +155,9 @@ class IncrementalIndexSpec extends GraftSpec {
     // rides the same atomic publish as the data, so the check reads
     // the committed snapshot alone
     val before = graft.sources.AtomicPublish.currentVersion(spark, root)
-    assert(!Incremental.applyBatch(spark, root, df(b2), 1L),
+    assert(!Incremental.incrIndex.applyBatch(spark, root, df(b2), 1L),
       "replaying an applied batch id must be refused")
-    assert(!Incremental.applyBatch(spark, root, df(Seq.empty), 99L),
+    assert(!Incremental.incrIndex.applyBatch(spark, root, df(Seq.empty), 99L),
       "an empty trigger must not publish")
     assert(graft.sources.AtomicPublish.currentVersion(spark, root) == before)
   }
@@ -284,11 +283,10 @@ class IncrementalIndexSpec extends GraftSpec {
     val b1 = Seq((50L, "a b c d e"), (102L, "p q r s"))
     val b2 = Seq((103L, "p q r z"))
     val r = tempDir("novelty")
-    graft.sources.AtomicPublish.publish(spark, r, Seq(
-      "firsts" -> Incremental.noveltyFirstsOf(df(base)),
-      "ledger" -> Seq.empty[Long].toDF("batch_id")))
-    Incremental.publishNoveltyIncrement(spark, r, df(b1), 1L)
-    Incremental.publishNoveltyIncrement(spark, r, df(b2), 2L)
+    Incremental.noveltyIndex.publishBase(spark, r,
+      Seq("firsts" -> Incremental.noveltyFirstsOf(df(base))))
+    Incremental.noveltyIndex.publishIncrement(spark, r, df(b1), 1L)
+    Incremental.noveltyIndex.publishIncrement(spark, r, df(b2), 2L)
     val got = graft.sources.AtomicPublish.readOutput(spark, r, "firsts")
       .collect().map(x => x.getString(0) -> x.getLong(1)).toMap
     val want = Incremental.noveltyFirstsOf(df(base ++ b1 ++ b2))
@@ -300,7 +298,7 @@ class IncrementalIndexSpec extends GraftSpec {
       org.apache.spark.sql.functions.md5(
         org.apache.spark.sql.functions.lit("a b c"))).head().getString(0)
     assert(got(abc) == 50L, "out-of-order batch id must take the first")
-    assert(graft.sources.AtomicPublish.readOutput(spark, r, "ledger")
+    assert(graft.sources.AtomicPublish.readOutput(spark, r, graft.sources.Artifact.Ledger)
       .collect().map(_.getLong(0)).sorted.sameElements(Array(1L, 2L)))
   }
 

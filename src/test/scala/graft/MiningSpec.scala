@@ -323,10 +323,10 @@ class MiningSpec extends GraftSpec {
     // b2 adds a fresh pair (3,4) once (stays sub-floor)
     val batch2 = op(300L -> 3L, 300L -> 4L)
     val root = tempDir("b3_spec")
-    graft.sources.AtomicPublish.publish(spark, root,
+    Mining.basketIndex.publishBase(spark, root,
       Mining.basketOutputs(spark, base))
-    assert(Mining.applyBatch(spark, root, batch1, 1L))
-    assert(Mining.applyBatch(spark, root, batch2, 2L))
+    assert(Mining.basketIndex.applyBatch(spark, root, batch1, 1L))
+    assert(Mining.basketIndex.applyBatch(spark, root, batch2, 2L))
     val all = op((base.collect() ++ batch1.collect() ++ batch2.collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toIndexedSeq: _*)
     def sets(d: org.apache.spark.sql.DataFrame) =
@@ -345,8 +345,8 @@ class MiningSpec extends GraftSpec {
     assert(pairs((1L << 32) | 2L) == 2L, pairs.toString)
     // replayed id and empty batch: refused, no version churn
     val before = graft.sources.AtomicPublish.currentVersion(spark, root)
-    assert(!Mining.applyBatch(spark, root, batch1, 1L))
-    assert(!Mining.applyBatch(spark, root, op(), 99L))
+    assert(!Mining.basketIndex.applyBatch(spark, root, batch1, 1L))
+    assert(!Mining.basketIndex.applyBatch(spark, root, op(), 99L))
     assert(graft.sources.AtomicPublish.currentVersion(spark, root) == before)
   }
 
@@ -357,10 +357,10 @@ class MiningSpec extends GraftSpec {
     val root = tempDir("b3_stream")
     val ckpt = tempDir("b3_sckpt")
     val base = Seq(100L -> 1L, 100L -> 2L).toDF("l_orderkey", "l_partkey")
-    graft.sources.AtomicPublish.publish(spark, root,
+    Mining.basketIndex.publishBase(spark, root,
       Mining.basketOutputs(spark, base))
     val input = MemoryStream[(Long, Long)]
-    val q = Mining.streamingBasketMaintenance(
+    val q = Mining.basketIndex.streamingMaintenance(
       input.toDF().toDF("l_orderkey", "l_partkey"), root, ckpt)
     try {
       for (b <- Seq(Seq(200L -> 1L, 200L -> 2L),

@@ -124,6 +124,33 @@ class PublishSpec extends GraftSpec {
       .collect().forall(_.getString(1).endsWith("three")))
   }
 
+  test("an increment's ledger row and outputs commit together: a failed stage leaves both unchanged") {
+    import spark.implicits._
+    // "checked" fails while it is staged for any negative x
+    val art = Artifact.incremental("ledger_spec")("ledger-spec-v1") { (s, root, batch, _) =>
+      Seq("rows" -> AtomicPublish.readOutput(s, root, "rows").unionByName(batch),
+        "checked" -> batch.select(when(col("x") < 0, raise_error(lit("bad batch")))
+          .otherwise(col("x")).as("x")))
+    }
+    val root = tempDir("ledger_spec")
+    art.publishBase(spark, root,
+      Seq("rows" -> Seq(1L).toDF("x"), "checked" -> Seq.empty[Long].toDF("x")))
+    def ledger = AtomicPublish.readOutput(spark, root, Artifact.Ledger)
+      .collect().map(_.getLong(0)).toSeq
+    val before = AtomicPublish.currentVersion(spark, root)
+    intercept[Exception](art.applyBatch(spark, root, Seq(-1L).toDF("x"), 7L))
+    assert(AtomicPublish.currentVersion(spark, root) == before,
+      "a failed stage must not move the pointer")
+    assert(ledger.isEmpty, "the failed batch id must not be recorded")
+    // the same id applies once the batch is good, and is recorded once
+    assert(art.applyBatch(spark, root, Seq(2L).toDF("x"), 7L))
+    assert(ledger == Seq(7L))
+    assert(AtomicPublish.readOutput(spark, root, "rows").collect()
+      .map(_.getLong(0)).toSet == Set(1L, 2L))
+    assert(!art.applyBatch(spark, root, Seq(3L).toDF("x"), 7L),
+      "a replayed id must be refused")
+  }
+
   test("artifact fingerprints are recipe-salted: a params change forces a new root") {
     def art(recipe: String) = Artifact("recipe_spec", "documents")(recipe)
     val a = art("recipe-v1;cap=100").fingerprint(sf)

@@ -91,10 +91,10 @@ class TextIndexSpec extends GraftSpec {
     val b = docs(10L -> "red wolf runs fast", 11L -> "green owl")
     val c = docs(20L -> "blue wolf red fox")
     val root = tempDir("ix_incr_spec")
-    graft.sources.AtomicPublish.publish(spark, root,
+    TextIndex.textIndex.publishBase(spark, root,
       TextIndex.buildIndexOutputs(spark, a))
-    assert(TextIndex.applyBatch(spark, root, b, 1L))
-    assert(TextIndex.applyBatch(spark, root, c, 2L))
+    assert(TextIndex.textIndex.applyBatch(spark, root, b, 1L))
+    assert(TextIndex.textIndex.applyBatch(spark, root, c, 2L))
     def sets(d: org.apache.spark.sql.DataFrame): Set[String] =
       d.collect().map(_.mkString("|")).toSet
     val all = docs((a.collect() ++ b.collect() ++ c.collect())
@@ -107,7 +107,7 @@ class TextIndexSpec extends GraftSpec {
       == sets(TextIndex.buildDoclens(all)))
     // replayed micro-batch: ledger-refused, no version churn
     val before = graft.sources.AtomicPublish.currentVersion(spark, root)
-    assert(!TextIndex.applyBatch(spark, root, b, 1L))
+    assert(!TextIndex.textIndex.applyBatch(spark, root, b, 1L))
     assert(graft.sources.AtomicPublish.currentVersion(spark, root) == before)
   }
 
@@ -124,10 +124,10 @@ class TextIndexSpec extends GraftSpec {
     val b3 = Seq(20L -> "red owl runs")
     val root = tempDir("ix_stream")
     val ckpt = tempDir("ix_sckpt")
-    graft.sources.AtomicPublish.publish(spark, root,
+    TextIndex.textIndex.publishBase(spark, root,
       TextIndex.buildIndexOutputs(spark, docs(base)))
     val input = MemoryStream[(Long, String)]
-    val q = TextIndex.streamingTextMaintenance(
+    val q = TextIndex.textIndex.streamingMaintenance(
       input.toDF().toDF("doc_id", "text"), root, ckpt)
     try {
       for (b <- Seq(b1, b2, b3)) { input.addData(b); q.processAllAvailable() }
@@ -145,8 +145,8 @@ class TextIndexSpec extends GraftSpec {
       == sets(TextIndex.buildDoclens(all)), "doclens diverged")
     // exactly-once: replayed id and empty trigger are no-ops
     val before = graft.sources.AtomicPublish.currentVersion(spark, root)
-    assert(!TextIndex.applyBatch(spark, root, docs(b2), 1L))
-    assert(!TextIndex.applyBatch(spark, root, docs(Seq.empty), 99L))
+    assert(!TextIndex.textIndex.applyBatch(spark, root, docs(b2), 1L))
+    assert(!TextIndex.textIndex.applyBatch(spark, root, docs(Seq.empty), 99L))
     assert(graft.sources.AtomicPublish.currentVersion(spark, root) == before)
   }
 
@@ -162,7 +162,7 @@ class TextIndexSpec extends GraftSpec {
       4L -> "nothing relevant at all",
       5L -> "fast").toDF("doc_id", "text")
     val root = tempDir("ix5_spec")
-    graft.sources.AtomicPublish.publish(spark, root,
+    TextIndex.textIndex.publishBase(spark, root,
       TextIndex.buildIndexOutputs(spark, docs))
     val got = TextIndex.bm25From(spark, root).collect()
       .map(r => r.getAs[Long]("doc_id") ->

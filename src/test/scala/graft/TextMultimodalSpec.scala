@@ -298,6 +298,24 @@ class TextMultimodalSpec extends GraftSpec {
     }
   }
 
+  test("m4 serves each corpus its own files when a second corpus runs in the same session") {
+    // (file, length, md5) of every sampled doc, straight from `dir`'s documents
+    def digests(dir: String) = Tables.documents(spark, dir)
+      .filter(col("doc_id") < Multimodal.BinaryIngestDocs)
+      .select(col("doc_id"), col("text")).collect()
+      .map { r =>
+        val bytes = r.getString(1).getBytes("UTF-8")
+        (s"doc_${r.getLong(0)}.bin", bytes.length.toLong,
+          java.security.MessageDigest.getInstance("MD5")
+            .digest(bytes).map("%02x".format(_)).mkString)
+      }.toSet
+    val second = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    Multimodal.m4BinaryIngest(spark, sf).collect()
+    val got = Multimodal.m4BinaryIngest(spark, second).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
+    assert(got == digests(second), "m4 read another corpus's fixture files")
+  }
+
   test("t16 term-freq kernel equals the explode+groupBy aggregate form") {
     // the retired formulation as semantic reference: one row per token,
     // counted under a (doc, term) shuffle
@@ -603,13 +621,13 @@ class TextMultimodalSpec extends GraftSpec {
     val batch = (300L to 306L).map(i => i -> "exact media payload X") ++
       Seq(400L -> "fresh media payload Y", 401L -> "fresh media payload Y")
     val root = tempDir("m7")
-    graft.sources.AtomicPublish.publish(spark, root,
+    Multimodal.mediaIncrIndex.publishBase(spark, root,
       Multimodal.buildMediaIncrOutputs(spark, docs(base)))
     val v1Clusters = graft.sources.AtomicPublish
       .readOutputAt(spark, root, "v1", "clusters").collect()
     assert(v1Clusters.count(_.getLong(1) == 1L) == 95,
       "base X copies should form one 95-member cluster")
-    Multimodal.publishMediaIncrement(spark, root, docs(batch))
+    Multimodal.mediaIncrIndex.publishIncrement(spark, root, docs(batch))
     def sets(outs: Seq[(String, org.apache.spark.sql.DataFrame)]) =
       outs.map { case (n, d) =>
         n -> d.collect().map(_.mkString("|")).toSet }.toMap
@@ -657,10 +675,10 @@ class TextMultimodalSpec extends GraftSpec {
     val b3 = Seq(200L -> "stream payload B", 201L -> "stream payload B")
     val root = tempDir("m7_stream")
     val ckpt = tempDir("m7_sckpt")
-    graft.sources.AtomicPublish.publish(spark, root,
+    Multimodal.mediaIncrIndex.publishBase(spark, root,
       Multimodal.buildMediaIncrOutputs(spark, docs(base)))
     val input = MemoryStream[(Long, String)]
-    val q = Multimodal.streamingMediaMaintenance(
+    val q = Multimodal.mediaIncrIndex.streamingMaintenance(
       input.toDF().toDF("doc_id", "text"), root, ckpt)
     try {
       for (b <- Seq(b1, b2, b3)) { input.addData(b); q.processAllAvailable() }
@@ -682,8 +700,8 @@ class TextMultimodalSpec extends GraftSpec {
     assert(clusters(200L) == clusters(201L))
     // exactly-once: replayed id and empty trigger are no-ops
     val before = graft.sources.AtomicPublish.currentVersion(spark, root)
-    assert(!Multimodal.applyBatch(spark, root, docs(b2), 1L))
-    assert(!Multimodal.applyBatch(spark, root, docs(Seq.empty), 99L))
+    assert(!Multimodal.mediaIncrIndex.applyBatch(spark, root, docs(b2), 1L))
+    assert(!Multimodal.mediaIncrIndex.applyBatch(spark, root, docs(Seq.empty), 99L))
     assert(graft.sources.AtomicPublish.currentVersion(spark, root) == before)
   }
 

@@ -17,33 +17,21 @@ class TmpRootsSpec extends AnyFunSuite {
     assert(a.endsWith(s"graft_tmproots_spec_pid$pid"))
   }
 
-  test("cleanStale removes dead-pid and legacy fixed-name roots, keeps live ones") {
+  test("cleanStale removes every dead-pid graft root, keeps live ones") {
     val prefix = "graft_tmproots_stale"
-    // a "dead" sibling: no live pid is ever negative/absurdly large,
-    // so pick one guaranteed unused (max pid on linux < 2^22 default)
+    // "dead" roots under two prefixes: no live pid is ever absurdly
+    // large, so pick ones guaranteed unused (max pid on linux < 2^22
+    // default)
     val dead = tmpdir.resolve(s"${prefix}_pid99999999")
-    val legacy = tmpdir.resolve(prefix)
+    val deadOther = tmpdir.resolve("graft_tmproots_other_pid99999998")
     val mine = Paths.get(TmpRoots.perProcess(prefix))
-    Seq(dead, legacy, mine).foreach(Files.createDirectories(_))
+    Seq(dead, deadOther, mine).foreach(Files.createDirectories(_))
     try {
-      TmpRoots.cleanStale(prefix)
-      assert(!Files.exists(dead), "dead-pid root must be swept")
-      assert(!Files.exists(legacy), "pre-pid legacy root must be swept")
+      TmpRoots.cleanStale()
+      assert(!Files.exists(dead) && !Files.exists(deadOther),
+        "dead-pid roots must be swept, whatever their prefix")
       assert(Files.exists(mine), "this process's root must survive")
-    } finally Seq(dead, legacy, mine).foreach(TmpRoots.deleteTree)
-  }
-
-  test("cleanLegacy deletes only full-name regex matches") {
-    val hit = tmpdir.resolve("graft_tmproots_legacy12345")
-    val hitCkpt = tmpdir.resolve("graft_tmproots_legacy12345_ckpt")
-    val miss = tmpdir.resolve("graft_tmproots_legacyKEEP")
-    Seq(hit, hitCkpt, miss).foreach(Files.createDirectories(_))
-    try {
-      TmpRoots.cleanLegacy("graft_tmproots_legacy\\d+(_ckpt)?")
-      assert(!Files.exists(hit) && !Files.exists(hitCkpt),
-        "matching leftovers must be swept")
-      assert(Files.exists(miss), "non-matching names must survive")
-    } finally Seq(hit, hitCkpt, miss).foreach(TmpRoots.deleteTree)
+    } finally Seq(dead, deadOther, mine).foreach(TmpRoots.deleteTree)
   }
 
   test("deleteTree removes nested content and tolerates a missing root") {

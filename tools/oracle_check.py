@@ -11,7 +11,9 @@ there passes SPILL_LIMIT is interrupted and fails instead of filling
 the disk (g2_pagerank's does, at sf0.01). The bound is kept here, not
 by DuckDB's `max_temp_directory_size`: DuckDB 1.0.0 accepts that
 setting but does not enforce it (a sort spilled 3 GB under a 200 MB
-limit).
+limit). DuckDB's memory is bounded at MEMORY_LIMIT instead of its
+default of 80% of RAM, so one oracle cannot crowd out the rest of a
+shared host.
 
 Usage: tools/oracle_check.py <sfDir> <verifyOutDir>
 """
@@ -19,6 +21,9 @@ import sys, os, json, math, tempfile, threading, time
 import duckdb
 
 SPILL_LIMIT = 2 << 30  # bytes
+# g2_pagerank's interrupted oracle leaves about 4 GiB of DuckDB's memory
+# accounted as in use, so a 4 GiB limit fails the next heavy oracle (g6)
+MEMORY_LIMIT = "8GiB"
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
@@ -75,7 +80,8 @@ def guard_spill(con, spill_dir, running, tripped):
 
 
 def main(sf_dir, out_dir, spill_dir):
-    con = duckdb.connect(config={"temp_directory": spill_dir})
+    con = duckdb.connect(config={"temp_directory": spill_dir,
+                                 "memory_limit": MEMORY_LIMIT})
     running, tripped = threading.Event(), threading.Event()
     threading.Thread(target=guard_spill, daemon=True,
                      args=(con, spill_dir, running, tripped)).start()
