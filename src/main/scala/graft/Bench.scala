@@ -1,4 +1,6 @@
 package graft
+import java.lang.management.ManagementFactory
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 /** Per-round benchmark: runs every SparkEntry query against
@@ -124,6 +126,13 @@ object Bench {
       java.nio.file.StandardOpenOption.APPEND)
     def elapsed: Double = (System.nanoTime() - t0main) / 1e9
     val passSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
+    // read outside the timed loop: per pass, the generated classes
+    // compiled (codegen cache misses) and the live JVM threads at the
+    // pass's end; once the passes end, the live heap after a full GC
+    val passCompiled = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val passThreads = scala.collection.mutable.ArrayBuffer.empty[Int]
+    def compiledClasses: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    var heapLiveMb = ""
     def jsonLine(passes: Int, partial: Boolean): String = {
       val results = queries.flatMap { case (name, _) =>
         best.get(name).map(v => (name, v, errs0.get(name)))
@@ -140,7 +149,9 @@ object Bench {
       val total = results.map(_._2).sum
       val ps = passSecs.map(p => math.rint(p * 10) / 10).mkString("[", ",", "]")
       val nb = noiseBandJson(samples.view.mapValues(_.toSeq).toMap, passSecs.toSeq)
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$smp,"errors":$errs,"n_errors":${results.count(_._3.isDefined)},"passes":$passes,"runs_requested":$runsReq,"pass_secs":$ps,"noise_band":$nb,"partial":$partial,"sf":"$sfDir"}"""
+      val pc = passCompiled.mkString("[", ",", "]")
+      val pt = passThreads.mkString("[", ",", "]")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"samples":$smp,"errors":$errs,"n_errors":${results.count(_._3.isDefined)},"passes":$passes,"runs_requested":$runsReq,"pass_secs":$ps,"pass_classes_compiled":$pc,"pass_live_threads":$pt$heapLiveMb,"noise_band":$nb,"partial":$partial,"sf":"$sfDir"}"""
     }
     // Atomic rewrite (tmp + move) so a reader never sees a torn file;
     // subset runs don't clobber the durable full-suite evidence.
@@ -166,6 +177,7 @@ object Bench {
       if (pass > 1 && elapsed + 1.08 * minPassSec > budgetSec) {
         stoppedOnBudget = true
       } else {
+        val compiled0 = compiledClasses
         val tPass = System.nanoTime()
         for ((name, fn) <- queries) {
           val t0 = System.nanoTime()
@@ -186,6 +198,8 @@ object Bench {
           flush(passesDone, partial = true)
         }
         val passSec = (System.nanoTime() - tPass) / 1e9
+        passCompiled += compiledClasses - compiled0
+        passThreads += ManagementFactory.getThreadMXBean.getThreadCount
         passSecs += passSec
         minPassSec = math.min(minPassSec, passSec)
         passesDone += 1
@@ -198,6 +212,9 @@ object Bench {
     // complete min-of-N measurement: every query holds N full
     // observations, and `passes` vs `runs_requested` records that the
     // budget, not a failure, bounded N.
+    System.gc()
+    val rt = Runtime.getRuntime
+    heapLiveMb = f""","heap_live_mb":${(rt.totalMemory - rt.freeMemory) / 1048576.0}%.1f"""
     val line = jsonLine(passesDone, partial = false)
     println(line)
     flush(passesDone, partial = false)

@@ -842,12 +842,15 @@ object Graph {
     * `applyBatch` that publishes edge version N+1 changes this root,
     * so the peel re-derives lazily at the next read and stale cores
     * are vacuumed as orphaned siblings — index maintenance driven by
-    * the artifact the peel actually consumes. */
+    * the artifact the peel actually consumes. The recipe names the
+    * edge root by its `<corpus>-<fp>` dir name, not its path, so the
+    * k-core root does not move with the state dir. */
   private[graft] def kcoreIndex(s: SparkSession, edgeRoot: String): Artifact = {
     val ver = graft.sources.AtomicPublish.currentVersion(s, edgeRoot)
       .getOrElse("v0")
+    val edges = new java.io.File(edgeRoot).getName
     Artifact("graph_kcore_index")(
-      s"kcore-v1;k=$KCoreK;rounds=$KCoreRounds;edges=$edgeRoot@$ver")
+      s"kcore-v1;k=$KCoreK;rounds=$KCoreRounds;edges=$edges@$ver")
   }
 
   /** Published k-core membership over a committed edge artifact:

@@ -390,6 +390,20 @@ class GraphSpec extends GraftSpec {
     assert(got2.contains(8L), "customer 4 (node 8) joins the core after the bump")
   }
 
+  test("g10: kcore root keys on the edge root's name and version, not its parent dir") {
+    import spark.implicits._
+    val edges = Seq(1L -> 10L).toDF("c", "sk")
+    val Seq(rootA, rootB, unpublished) = Seq("kcore_state_a", "kcore_state_b", "kcore_state_c")
+      .map(p => s"${tempDir(p)}/graph_co_order/corpus-0123abcd")
+    Seq(rootA, rootB).foreach(r =>
+      Graph.coOrderIndex.publishBase(spark, r, Seq("co_order" -> edges)))
+    def kcoreRoot(edgeRoot: String) = Graph.kcoreIndex(spark, edgeRoot).root(sf)
+    assert(kcoreRoot(rootA) == kcoreRoot(rootB),
+      "edge roots that differ only in their parent dir share the kcore root")
+    assert(kcoreRoot(unpublished) != kcoreRoot(rootA),
+      "the edge version still keys the kcore root")
+  }
+
   test("g11: corpus modularity == driver recompute; planted cliques score high") {
     import spark.implicits._
     // corpus: contributions recompute exactly from g7's labels + edges

@@ -13,7 +13,9 @@ by DuckDB's `max_temp_directory_size`: DuckDB 1.0.0 accepts that
 setting but does not enforce it (a sort spilled 3 GB under a 200 MB
 limit). DuckDB's memory is bounded at MEMORY_LIMIT instead of its
 default of 80% of RAM, so one oracle cannot crowd out the rest of a
-shared host.
+shared host. An interrupted oracle leaves most of that memory accounted
+as in use (about 3.9 GiB after g2_pagerank's), so the next oracle runs
+on a fresh connection.
 
 Usage: tools/oracle_check.py <sfDir> <verifyOutDir>
 """
@@ -21,8 +23,6 @@ import sys, os, json, math, tempfile, threading, time
 import duckdb
 
 SPILL_LIMIT = 2 << 30  # bytes
-# g2_pagerank's interrupted oracle leaves about 4 GiB of DuckDB's memory
-# accounted as in use, so a 4 GiB limit fails the next heavy oracle (g6)
 MEMORY_LIMIT = "8GiB"
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -62,8 +62,9 @@ def table_key(rows, cols):
 
 
 def guard_spill(con, spill_dir, running, tripped):
-    """While `running` is set, interrupt `con`'s query once `spill_dir`
-    holds more than SPILL_LIMIT bytes on disk, and set `tripped`."""
+    """While `running` is set, interrupt the query of the connection
+    `con()` returns once `spill_dir` holds more than SPILL_LIMIT bytes
+    on disk, and set `tripped`."""
     while True:
         running.wait()
         used = 0
@@ -75,20 +76,25 @@ def guard_spill(con, spill_dir, running, tripped):
                     pass
         if used > SPILL_LIMIT and running.is_set():
             tripped.set()
-            con.interrupt()
+            con().interrupt()
         time.sleep(0.1)
 
 
-def main(sf_dir, out_dir, spill_dir):
+def connect(sf_dir, spill_dir):
     con = duckdb.connect(config={"temp_directory": spill_dir,
                                  "memory_limit": MEMORY_LIMIT})
-    running, tripped = threading.Event(), threading.Event()
-    threading.Thread(target=guard_spill, daemon=True,
-                     args=(con, spill_dir, running, tripped)).start()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
+def main(sf_dir, out_dir, spill_dir):
+    con = connect(sf_dir, spill_dir)
+    running, tripped = threading.Event(), threading.Event()
+    threading.Thread(target=guard_spill, daemon=True,
+                     args=(lambda: con, spill_dir, running, tripped)).start()
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracles = json.load(f)
 
@@ -113,8 +119,11 @@ def main(sf_dir, out_dir, spill_dir):
             o_cols = [c.lower() for c in oracle_rel.columns]
             o_rows = oracle_rel.fetchall()
         except Exception as e:
+            running.clear()
             if tripped.is_set():
                 e = f"spilled more than {SPILL_LIMIT >> 30} GiB; interrupted"
+                con.close()
+                con = connect(sf_dir, spill_dir)
             results[name] = f"ORACLE-ERROR: {e}"
             n_fail += 1
             continue
