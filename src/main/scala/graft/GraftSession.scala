@@ -49,13 +49,16 @@ import org.apache.spark.sql.SparkSession
   *    and `SQLAppStatusListener` still keep up to 1000 executions, jobs
   *    and stages with their plan graphs; graft never reads them.
   *  - Exchange thread pools: `spark.sql.{shuffleExchange,
-  *    broadcastExchange,resultQueryStage,subquery}.maxThreadThreshold`
-  *    = [[exchangeThreads]] (4 × cores). These are cached pools whose
-  *    core size equals their maximum, so every submission starts a new
-  *    thread until the cap (defaults 1024, 128, 1024, 16), and each
-  *    idle thread lives 60 s with its thread-locals: after 12 `sql_reads`
-  *    passes the JVM held 647 live threads. A cap of `cores` looked
-  *    slower on cold passes and was not adopted.
+  *    broadcastExchange,resultQueryStage}.maxThreadThreshold` =
+  *    [[ExchangeThreads]] (16). These are cached pools whose core size
+  *    equals their maximum, so every submission starts a new thread
+  *    until the cap (defaults 1024, 128, 1024), and each idle thread
+  *    lives 60 s with its thread-locals: after 12 `sql_reads` passes
+  *    the JVM held 647 live threads, 156 of them shuffle-exchange, 128
+  *    broadcast-exchange and 96 result-stage. The cap is one constant,
+  *    not a multiple of cores, so it never exceeds a default (the
+  *    subquery pool's default is already 16); a cap of 4 looked slower
+  *    on cold passes and was not adopted.
   *
   * Together they take perfbench's live heap from 87.0 to 76.0 MB on
   * `corpus_reads` and from 82.5 to 73.4 MB on `sql_reads` (medians of
@@ -90,8 +93,10 @@ object GraftSession {
     * unbounded). */
   private[graft] val RetainedUiEntries = 10
 
-  /** Thread cap of each exchange and subquery pool. */
-  private[graft] def exchangeThreads(cores: Int): Int = 4 * cores
+  /** Thread cap of the shuffle-exchange, broadcast-exchange and
+    * result-stage pools: at or below each of Spark's defaults (1024,
+    * 128, 1024), so no core count raises a cap. */
+  private[graft] val ExchangeThreads = 16
 
   /** Builder with graft's engine settings; callers may override.
     * `stateDir` holds the Derby metastore + warehouse (see
@@ -123,10 +128,9 @@ object GraftSession {
       .config("spark.ui.retainedStages", RetainedUiEntries.toString)
       .config("spark.ui.retainedTasks", RetainedUiEntries.toString)
       .config("spark.ui.dagGraph.retainedRootRDDs", RetainedUiEntries.toString)
-      .config("spark.sql.shuffleExchange.maxThreadThreshold", exchangeThreads(cores).toString)
-      .config("spark.sql.broadcastExchange.maxThreadThreshold", exchangeThreads(cores).toString)
-      .config("spark.sql.resultQueryStage.maxThreadThreshold", exchangeThreads(cores).toString)
-      .config("spark.sql.subquery.maxThreadThreshold", exchangeThreads(cores).toString)
+      .config("spark.sql.shuffleExchange.maxThreadThreshold", ExchangeThreads.toString)
+      .config("spark.sql.broadcastExchange.maxThreadThreshold", ExchangeThreads.toString)
+      .config("spark.sql.resultQueryStage.maxThreadThreshold", ExchangeThreads.toString)
 
   /** Standard local session (the driver mains and tests use this). */
   def local(cores: Int): SparkSession = {
