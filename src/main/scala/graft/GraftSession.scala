@@ -36,7 +36,10 @@ import org.apache.spark.sql.SparkSession
   *    large cache a steady full pass recompiles about 120 (110.3 →
   *    69.5 s wall). Each cached class costs about 33 KB of heap (144 MB
   *    for 4,326 distinct classes), so 8192 entries bound the cache at
-  *    about 270 MB while leaving headroom over the full suite.
+  *    about 270 MB. The full suite's first pass compiles 3,683 classes
+  *    at sf0.01 on 4 cores and 3,699 at sf0.1 on 32, so 8192 leaves
+  *    about 2× headroom; at sf0.1 on 32 cores the second pass compiled
+  *    23 classes.
   *    `spark.sql.codegen.useIdInClassName` = false: the class name of a
   *    whole-stage class otherwise carries its codegen stage id, which
   *    AQE assigns in the order stages finish, so the same code under a
@@ -55,14 +58,18 @@ import org.apache.spark.sql.SparkSession
   *    until the cap (defaults 1024, 128, 1024), and each idle thread
   *    lives 60 s with its thread-locals: after 12 `sql_reads` passes
   *    the JVM held 647 live threads, 156 of them shuffle-exchange, 128
-  *    broadcast-exchange and 96 result-stage. The cap is one constant,
-  *    not a multiple of cores, so it never exceeds a default (the
-  *    subquery pool's default is already 16); a cap of 4 looked slower
-  *    on cold passes and was not adopted.
+  *    broadcast-exchange and 96 result-stage. Few of them ever work at
+  *    once: over a two-pass full suite at sf0.1 on 32 cores, sampled
+  *    every 5 s, the uncapped pools held up to 327, 128 and 132 threads
+  *    while at most 1, 4 and 1 were busy, and with the cap at most 4
+  *    shuffle-exchange threads were busy. The cap is one constant, not
+  *    a multiple of cores, so it never exceeds a default (the subquery
+  *    pool's default is already 16); a cap of 4 looked slower on cold
+  *    passes and was not adopted.
   *
-  * Together they take perfbench's live heap from 87.0 to 76.0 MB on
-  * `corpus_reads` and from 82.5 to 73.4 MB on `sql_reads` (medians of
-  * 10 and 5 runs on 4 vCPUs); in a prototype each group alone recovered
+  * Together they take perfbench's live heap from 87.0 to 75.9 MB on
+  * `corpus_reads` and from 82.5 to 73.1 MB on `sql_reads` (medians of
+  * 10 and 6 runs on 4 vCPUs); in a prototype each group alone recovered
   * only part of it (`corpus_reads`: cache 88.2, cache + retention 82.6,
   * cache + caps 81.7 MB).
   *

@@ -13,9 +13,10 @@ by DuckDB's `max_temp_directory_size`: DuckDB 1.0.0 accepts that
 setting but does not enforce it (a sort spilled 3 GB under a 200 MB
 limit). DuckDB's memory is bounded at MEMORY_LIMIT instead of its
 default of 80% of RAM, so one oracle cannot crowd out the rest of a
-shared host. An interrupted oracle leaves most of that memory accounted
-as in use (about 3.9 GiB after g2_pagerank's), so the next oracle runs
-on a fresh connection.
+shared host. The next oracle after an interrupted one runs on a fresh
+connection, so nothing the interrupted query held carries over (g6_bfs_hops
+after g2_pagerank peaks at 1.49 GB resident on a fresh connection, 1.64 GB
+on the old one).
 
 Usage: tools/oracle_check.py <sfDir> <verifyOutDir>
 """
@@ -23,6 +24,8 @@ import sys, os, json, math, tempfile, threading, time
 import duckdb
 
 SPILL_LIMIT = 2 << 30  # bytes
+# g6_bfs_hops fails under 4 GiB even alone: DuckDB accounts 3.9 GiB to it
+# while its process peaks at 1.45 GB resident
 MEMORY_LIMIT = "8GiB"
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
